@@ -1,44 +1,55 @@
 """What a result depends on besides the code: the machine record, peak
 RSS sampled from outside the Spark processes, Spark's event log, and
-the process cleanup at the end of a run."""
+the process cleanup at the end of a run (``stop_spark`` in the run
+itself, ``supervise`` around it)."""
 
 from __future__ import annotations
 
+import ctypes
 import glob
 import hashlib
 import json
-import multiprocessing
 import os
 import platform
+import signal
 import subprocess
+import sys
 import threading
 import time
 
 
-def _spin(n: int) -> int:
-    x = 0
-    for i in range(n):
-        x = (x * 31 + i) & 0xFFFFFFFF
-    return x
+# one process of the CPU-ceiling measurement: sleep until a common
+# start, spin, print when it finished
+_SPIN = """
+import sys, time
+n, start = int(sys.argv[1]), float(sys.argv[2])
+time.sleep(max(0.0, start - time.monotonic()))
+x = 0
+for i in range(n):
+    x = (x * 31 + i) & 0xFFFFFFFF
+print(time.monotonic())
+"""
 
 
-def _timed_spin(n: int) -> float:
-    t = time.perf_counter()
-    _spin(n)
-    return time.perf_counter() - t
+def _spin_wall(procs: int, n: int) -> float:
+    """Wall time from a common start until the last of ``procs``
+    processes running the spin loop at once has finished.  Plain child
+    processes, each waited for: a multiprocessing pool would leave its
+    resource tracker running until this process exits."""
+    start = time.monotonic() + 0.3
+    ps = [subprocess.Popen([sys.executable, "-c", _SPIN, str(n),
+                            repr(start)], stdout=subprocess.PIPE, text=True)
+          for _ in range(procs)]
+    ends = [float(p.communicate()[0]) for p in ps]
+    return max(ends) - start
 
 
 def cpu_ceiling(cores: int, n: int = 2_000_000) -> float:
     """Pure-CPU multiprocess speedup from 1 core to ``cores``: the same
     spin loop run once alone, then once in each of ``cores`` processes
     at the same time."""
-    ctx = multiprocessing.get_context("spawn")
-    with ctx.Pool(cores) as pool:
-        pool.map(_timed_spin, [n // 10] * cores)   # start the workers
-        one = pool.apply(_timed_spin, (n,))
-        t = time.perf_counter()
-        pool.map(_timed_spin, [n] * cores)
-        many = time.perf_counter() - t
+    one = _spin_wall(1, n)
+    many = _spin_wall(cores, n)
     return cores * one / many
 
 
@@ -63,12 +74,25 @@ def _git_rev(root: str) -> str | None:
     return out.stdout.strip() if out.returncode == 0 else None
 
 
-def record(root: str, cores: int, spark_conf: dict) -> dict:
+def cpu_jiffies() -> tuple[int, int]:
+    """(steal, total) CPU time of the machine so far, from /proc/stat."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:9]]
+    return fields[7], sum(fields)
+
+
+def record(root: str, cores: int, spark_conf: dict,
+           since: tuple[int, int]) -> dict:
+    """The machine a result was measured on.  ``since`` is
+    ``cpu_jiffies()`` at the start of the run: the share of CPU time the
+    hypervisor gave to other guests since then is ``cpu_steal_share``."""
     import pyspark
+    steal, total = (b - a for a, b in zip(since, cpu_jiffies()))
     return {
         "nproc": os.cpu_count(),
         "cores_usable": len(os.sched_getaffinity(0)),
         "loadavg": os.getloadavg(),
+        "cpu_steal_share": steal / max(total, 1),
         "python": platform.python_version(),
         "pyspark": pyspark.__version__,
         "git_rev": _git_rev(root),
@@ -211,3 +235,83 @@ def _alive(pids: list[int]) -> list[int]:
         if state != "Z":
             out.append(p)
     return out
+
+
+# prctl options (linux/prctl.h)
+_PR_SET_PDEATHSIG = 1
+_PR_SET_CHILD_SUBREAPER = 36
+
+
+def _prctl(option: int, arg: int) -> None:
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(option, arg, 0, 0, 0) != 0:
+        err = ctypes.get_errno()
+        raise OSError(err, os.strerror(err))
+
+
+def set_subreaper() -> None:
+    """Make this process the reaper of its orphaned descendants, so a
+    process whose parent exits stays below this one, where it can be
+    found, killed and waited for."""
+    _prctl(_PR_SET_CHILD_SUBREAPER, 1)
+
+
+def _die_with_parent() -> None:
+    _prctl(_PR_SET_PDEATHSIG, signal.SIGKILL)
+
+
+def kill_and_reap(timeout: float = 30.0) -> None:
+    """Kill every descendant of this process and wait for each, until
+    none is left, alive or zombie.  Needs ``set_subreaper`` first, or an
+    orphan escapes to init."""
+    me = os.getpid()
+    deadline = time.monotonic() + timeout
+    while True:
+        for p in descendants(me):
+            try:
+                os.kill(p, signal.SIGKILL)
+            except OSError:
+                pass
+        try:
+            while os.waitpid(-1, os.WNOHANG)[0]:
+                pass
+        except ChildProcessError:
+            return
+        if time.monotonic() > deadline:
+            return
+        time.sleep(0.05)
+
+
+class _Stopped(Exception):
+    pass
+
+
+def _raise_stopped(signum, frame):
+    raise _Stopped(signal.Signals(signum).name)
+
+
+def supervise(cmd: list[str], timeout: float) -> int:
+    """Run ``cmd`` as a child, wait for it at most ``timeout`` seconds,
+    then kill and wait for every process it left behind (the Spark JVM,
+    the Python worker daemon and its workers, anything they started),
+    also when the run fails, times out or this process is signalled.
+    Returns the child's exit code, 1 if it did not exit by itself.  The
+    child is killed if this process dies first."""
+    set_subreaper()
+    for s in (signal.SIGTERM, signal.SIGINT, signal.SIGHUP):
+        signal.signal(s, _raise_stopped)
+    rc = 1
+    try:
+        child = subprocess.Popen(cmd, preexec_fn=_die_with_parent)
+        try:
+            rc = child.wait(timeout)
+        except subprocess.TimeoutExpired:
+            print(f"perfbench: run still going after {timeout:.0f} s; "
+                  "stopped it", file=sys.stderr)
+    except _Stopped as e:
+        print(f"perfbench: stopped by {e}", file=sys.stderr)
+    finally:
+        for s in (signal.SIGTERM, signal.SIGINT, signal.SIGHUP):
+            signal.signal(s, signal.SIG_IGN)
+        kill_and_reap()
+    return rc if rc >= 0 else 1

@@ -10,6 +10,10 @@ is one JSON object: ``correct``, ``attempted``, ``failed`` and
 ``metrics`` (every end-to-end metric with ``--trace 0``, every per-layer
 metric with ``--trace 1``).  The lines before it record the machine and
 the samples.  See perfbench/README.md for what each metric means.
+
+The command supervises the run: the run itself is a child process, and
+when it ends (or after ``RUN_TIMEOUT_S``, or on a signal) every process
+it left behind is killed and waited for.
 """
 
 from __future__ import annotations
@@ -84,6 +88,8 @@ def parse_args(argv):
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--tiny", action="store_true",
                     help="self-test sizes (perfbench/selftest.py)")
+    # set by the supervising process on the run it starts: the run id
+    ap.add_argument("--worker", help=argparse.SUPPRESS)
     return ap.parse_args(argv)
 
 
@@ -336,17 +342,23 @@ def _result(b: Bench, rss_mb: float) -> dict:
     }
 
 
+# the contract gives a run 180 s; leave the cleanup time to spare
+RUN_TIMEOUT_S = 170
+
+
 def main(argv=None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
     args = parse_args(argv)
     if not os.path.isfile(os.path.join(ROOT, "ferenda_spark",
                                        "pipeline.py")):
         print("perfbench: no ferenda_spark package next to perfbench/",
               file=sys.stderr)
         return 2
-    sys.path.insert(0, ROOT)
-    run_id = uuid.uuid4().hex[:12]
+    if args.worker is None:
+        return _supervise(argv)
+    run_id = args.worker
     work = os.path.join(ROOT, ".perfbench_work", run_id)
-    os.makedirs(work)
+    sys.path.insert(0, ROOT)
     # executor Python workers import ferenda_spark too: they inherit
     # the environment of the JVM this process launches
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -355,8 +367,21 @@ def main(argv=None) -> int:
     os.environ["SPARK_LOCAL_DIRS"] = f"{work}/local"
     os.environ["TMPDIR"] = f"{work}/tmp"
     tempfile.tempdir = f"{work}/tmp"
+    return _run(args, work, run_id)
+
+
+def _supervise(argv: list[str]) -> int:
+    """Run the benchmark in a child process, then make sure nothing it
+    started outlives it and remove its work dir."""
+    import machine
+
+    run_id = uuid.uuid4().hex[:12]
+    work = os.path.join(ROOT, ".perfbench_work", run_id)
+    os.makedirs(work)
     try:
-        return _run(args, work, run_id)
+        return machine.supervise(
+            [sys.executable, os.path.abspath(__file__), *argv,
+             "--worker", run_id], RUN_TIMEOUT_S)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -369,6 +394,7 @@ def _run(args, work: str, run_id: str) -> int:
 
     b = Bench(args, work)
     b.t_setup = time.perf_counter()
+    jiffies = machine.cpu_jiffies()
     tracer = Tracer(run_id, enabled=bool(args.trace))
     with tracer.span("session.start"):
         spark = b.start_spark()
@@ -394,7 +420,7 @@ def _run(args, work: str, run_id: str) -> int:
         spans = f"{out}/spans-{args.workload}-{args.seed}-{run_id}.jsonl"
         tracer.write(spans)
         print(f"spans: {os.path.relpath(spans, ROOT)}")
-    rec = machine.record(ROOT, b.cores, b.conf)
+    rec = machine.record(ROOT, b.cores, b.conf, jiffies)
     rec["cpu_ceiling_speedup"] = machine.cpu_ceiling(b.cores)
     print("machine: " + json.dumps(rec))
     print("samples: " + json.dumps(b.samples))

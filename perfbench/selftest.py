@@ -11,7 +11,10 @@ checks that:
   other; end-to-end values are non-zero numbers;
 - every operation and output check passed;
 - the traced copy of ``pipeline.run``'s steps matched ``pipeline.run``'s
-  row and file counts on the same input.
+  row and file counts on the same input;
+- no process the run started outlives it: this process is made the
+  reaper of orphans, so anything left behind, alive or zombie, would
+  still be found below it.
 
 Then runs ``run.py`` from a directory holding only BENCHMARK.json and
 perfbench/, where it must fail without printing a result.
@@ -26,15 +29,23 @@ import subprocess
 import sys
 import uuid
 
+import machine
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
 
 def _run(cwd: str, *args: str) -> subprocess.CompletedProcess:
-    return subprocess.run(
+    out = subprocess.run(
         [sys.executable, "perfbench/run.py", *args], cwd=cwd,
         stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
         timeout=600)
+    left = machine.descendants(os.getpid())
+    if left:
+        out.stderr += f"\nleft {len(left)} processes running: {left}"
+        out.returncode = out.returncode or 99
+        machine.kill_and_reap()
+    return out
 
 
 def check_run(spec: dict, workload: str, trace: int) -> list[str]:
@@ -86,6 +97,7 @@ def check_bare_dir() -> list[str]:
 
 
 def main() -> int:
+    machine.set_subreaper()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
     failures = 0

@@ -49,8 +49,12 @@ def main() -> int:
         if out.returncode != 0:
             print(f"seed {seed}: exit {out.returncode}")
             continue
-        res = json.loads(out.stdout.strip().splitlines()[-1])
-        print(f"seed {seed}: {walls[-1]:.0f}s correct={res['correct']} "
+        lines = out.stdout.strip().splitlines()
+        res = json.loads(lines[-1])
+        steal = next(json.loads(ln[len("machine: "):])["cpu_steal_share"]
+                     for ln in lines if ln.startswith("machine: "))
+        print(f"seed {seed}: {walls[-1]:.0f}s steal={steal:.3f} "
+              f"correct={res['correct']} "
               + " ".join(f"{k}={v['value']:.4g}"
                          for k, v in res["metrics"].items()), flush=True)
         for k, v in res["metrics"].items():
