@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,11 +70,26 @@ def entries_from_extracted(extracted: DataFrame, stage: str = "parse",
     )
 
 
-def read_entries(spark: SparkSession, path: str) -> DataFrame | None:
+# read errors that mean "no table yet": the path was never written, or
+# it holds no data file (a first append that crashed before its commit
+# leaves only ``_temporary``).  Anything else — an unreadable file, a
+# permission error — raises: treating it as absent would silently mark
+# every page pending again and re-append the whole input.
+_ABSENT = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None if no table exists there."""
     try:
         return spark.read.parquet(path)
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in _ABSENT:
+            return None
+        raise
+
+
+def read_entries(spark: SparkSession, path: str) -> DataFrame | None:
+    return read_table(spark, path)
 
 
 def append_entries(entries: DataFrame, path: str) -> None:

@@ -17,6 +17,10 @@ Spark scheduler:
      full-graph self-join per commit (canonicalize.py)
   5. write: triples partitioned by (batch, pred_bucket, crawl_date) —
      the Iceberg layout from SURVEY §1.3; parquet stand-in locally.
+     The rows are first hash-clustered on (pred_bucket, crawl_date)
+     into ``defaultParallelism`` tasks, so each partition value is
+     written by exactly one task (one file per directory) and the
+     writers run on every core (``with_partition_cols``).
 
 Partitioning rationale (100 TB): predicate frequency is Zipfian, so
 partitioning raw ``pred`` would produce a handful of huge partitions;
@@ -62,12 +66,28 @@ N_PRED_BUCKETS = 16
 
 
 def with_partition_cols(triples: DataFrame, warc_ts_by_url: DataFrame) -> DataFrame:
+    """Add the write's partition columns and cluster the rows by them.
+
+    Without the clustering the partitioned write makes one file per
+    task per partition value, and a small batch (whose plan AQE
+    coalesces to one partition) writes every file from a single task.
+    Hash-partitioning on (pred_bucket, crawl_date) gives each value to
+    exactly one task, and the explicit count spreads those tasks over
+    every core: AQE coalesces a by-column shuffle without a count, or a
+    ``rebalance``, of a small batch back down to one partition.
+
+    Skew limit: one task writes all of a partition value's rows, so at
+    scale the Zipfian ``rdf:type`` bucket of each crawl date lands in a
+    single task (and a single file); salting that bucket is open work.
+    """
     t = triples.join(warc_ts_by_url, "url", "left")
+    n = triples.sparkSession.sparkContext.defaultParallelism
     return (
         t.withColumn("pred_bucket",
                      F.pmod(F.xxhash64("pred"), F.lit(N_PRED_BUCKETS)))
         .withColumn("crawl_date", F.to_date("warc_ts"))
         .drop("warc_ts")
+        .repartition(n, "pred_bucket", "crawl_date")
     )
 
 
@@ -120,12 +140,11 @@ class RunResult:
 
 def _metrics_total(spark: SparkSession, out_dir: str,
                    col: str = "n_triples") -> int:
-    try:
-        row = (spark.read.parquet(f"{out_dir}/metrics")
-               .agg(F.sum(col).alias("s")).collect()[0])
-        return int(row["s"] or 0)
-    except Exception:
+    metrics = checkpoint.read_table(spark, f"{out_dir}/metrics")
+    if metrics is None:
         return 0
+    row = metrics.agg(F.sum(col).alias("s")).collect()[0]
+    return int(row["s"] or 0)
 
 
 def run(

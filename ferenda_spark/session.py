@@ -7,8 +7,18 @@ Scale notes (the settings matter at 100 TB, not on local[32]):
   is load-bearing, cf. SURVEY.md §4.
 - Arrow enabled: every per-document Python stage is an Arrow-batched
   pandas UDF (zero per-row Python, BASELINE.json input_hint).
-- shuffle.partitions default 32 locally; on a real cluster set it to
-  ~2-3x total cores (or rely on AQE coalesce from a higher initial value).
+- shuffle.partitions defaults to max(cores, 8) locally; on a real
+  cluster set it to ~2-3x total cores (or rely on AQE coalesce from a
+  higher initial value).
+- DataFrame debugging off: PySpark 4 wraps every Column/function call
+  in ``_with_origin``, which captures the Python stack and makes several
+  py4j round trips per call to record the call site.  Building the
+  triple lift's plan makes thousands of such calls, so the capture
+  doubled the time a small commit spends building that plan.  The cost
+  of turning it off: analysis and runtime errors lose PySpark's Python
+  call-site "DataFrame query context"; the error class and message are
+  unchanged.  The conf is static, so it can only be set here, before
+  the session starts.
 """
 
 from __future__ import annotations
@@ -40,6 +50,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # ~10k rows/batch: per-batch UDF overhead amortizes 5x better
         # than the 2048 default at ~3 KB/row; bound by bytes at larger
         # payloads (multimodal stages re-chunk by target_batch_bytes)

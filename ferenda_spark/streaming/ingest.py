@@ -8,8 +8,10 @@ Two entry points:
   the SAME extract/all_triples operators as the batch path (they are
   narrow maps, so they lift to streaming unchanged); the final
   set-dedup happens per micro-batch inside ``foreachBatch`` where the
-  full batch DataFrame API is available, and each micro-batch appends
-  to the same partitioned layout the batch pipeline writes.
+  full batch DataFrame API is available.  Each micro-batch appends its
+  triples as flat (unpartitioned) parquet under ``out_dir``, tagged
+  with a ``stream_batch`` column; it does not write the batch
+  pipeline's (batch, pred_bucket, crawl_date) layout.
 
 - ``windowed_event_counts``: event-time tumbling-window aggregation
   with a watermark for late data — the streaming generalization of the

@@ -12,8 +12,7 @@ from ferenda_spark.operators import docformats as D
 WR = "/root/reference/test/files/wordreader"
 PR = "/root/reference/test/files/pdfreader"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(WR), reason="reference fixtures not available")
+pytestmark = pytest.mark.requires_reference(WR, PR)
 
 
 def test_detect_word_format_by_content():

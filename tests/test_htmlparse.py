@@ -115,7 +115,7 @@ def test_fast_parser_matches_stdlib_on_reference_files():
     )[:60]
     if not files:
         import pytest
-        pytest.skip("reference files not available")
+        pytest.skip("requires_reference: reference files not available")
     for f in files:
         if not os.path.isfile(f):
             continue

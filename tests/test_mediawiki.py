@@ -13,6 +13,8 @@ from ferenda_spark.sources import mediawiki as M
 FIX = "/root/reference/test/files/repo/mediawiki"
 XH = "{http://www.w3.org/1999/xhtml}"
 
+pytestmark = pytest.mark.requires_reference(FIX)
+
 
 def _read(path: str) -> bytes:
     """The fixture filenames are NFD-encoded on disk (mac-style

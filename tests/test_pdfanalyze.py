@@ -12,6 +12,8 @@ from ferenda_spark.operators import pdfanalyze as A
 
 LIPSUM = "/root/reference/test/files/pdfanalyze/lipsum.xml"
 
+pytestmark = pytest.mark.requires_reference(LIPSUM)
+
 
 @pytest.fixture(scope="module")
 def lipsum():

@@ -1,6 +1,10 @@
 """Pipeline + checkpoint/resume + cross-document join tests
 (SURVEY.md §2 J2-J4, M6 exact resume; north_rule lineage)."""
 
+import datetime
+import os
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -125,14 +129,65 @@ def test_incremental_deps_scan_only_new_batch(spark, tmp_path_factory):
 
 def test_triples_partition_layout(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("layout"))
-    pages = web_pages_df(spark, 10)
-    pipeline.run(spark, pages, commondata_df(spark), out)
+    # the fixture's crawl dates repeat every 84 pages, so with three
+    # input splits the same (pred_bucket, crawl_date) value occurs in
+    # several splits
+    pages = web_pages_df(spark, 90)
+    pipeline.run(spark, pages, commondata_df(spark), out,
+                 input_partitions=3)
     t = spark.read.parquet(f"{out}/triples")
     assert set(["pred_bucket", "crawl_date"]).issubset(set(t.columns))
     # partition pruning: filter on pred_bucket must hit a subset of files
     one = t.where("pred_bucket = 3")
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "pred_bucket" in plan
+    # the write is clustered: exactly one file per partition value
+    files = {}
+    for root, _, names in os.walk(f"{out}/triples"):
+        if "crawl_date=" in root:
+            files[root] = sum(n.endswith(".parquet") for n in names)
+    assert files and set(files.values()) == {1}, {
+        k: v for k, v in files.items() if v != 1}
+
+
+def test_partition_cols_cluster_on_every_core(spark):
+    """Plan pin on the pre-write exchange: the rows are hash-partitioned
+    by the partition columns into defaultParallelism tasks."""
+    triples = spark.createDataFrame(
+        [("u1", "s", "p", "o")], "url string, subj string, pred string, "
+        "obj string")
+    warc = spark.createDataFrame(
+        [("u1", datetime.datetime(2020, 1, 2))], "url string, "
+        "warc_ts timestamp")
+    df = pipeline.with_partition_cols(triples, warc)
+    n = spark.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.search(
+        rf"hashpartitioning\(pred_bucket#\d+L?, crawl_date#\d+, {n}\)",
+        plan), plan
+
+
+def test_session_turns_off_dataframe_debugging(spark):
+    """get_spark turns off PySpark's per-call origin capture, which made
+    several py4j round trips for every Column call of a plan build."""
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_unreadable_entries_raise_and_write_nothing(spark, tmp_path):
+    """Only a missing (or data-less) entries table means "no
+    checkpoint"; an unreadable one must not make every page pending."""
+    out = str(tmp_path / "out")
+    entries = tmp_path / "entries"
+    entries.mkdir()
+    assert checkpoint.read_entries(spark, str(entries)) is None
+    assert checkpoint.read_entries(spark, str(tmp_path / "nope")) is None
+    (entries / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="part-0.parquet"):
+        pipeline.run(spark, web_pages_df(spark, 4), commondata_df(spark),
+                     out, entries_path=str(entries))
+    assert not os.path.exists(out)
+    assert os.listdir(entries) == ["part-0.parquet"]
 
 
 def test_dependency_join(triples):

@@ -28,11 +28,11 @@ REF = "/root/reference/test/files/repo/rfc"
 CIT = "/root/reference/test/files/citation/url"
 EXTRA = "/root/reference/ferenda/sources/tech/res/extra/rfc.ttl"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF), reason="reference fixtures not available")
+pytestmark = pytest.mark.requires_reference(REF)
 
 BASEFILES = sorted(
-    f[:-4] for f in os.listdir(f"{REF}/distilled") if f.endswith(".ttl"))
+    f[:-4] for f in os.listdir(f"{REF}/distilled") if f.endswith(".ttl")
+) if os.path.isdir(REF) else []
 
 
 def _key(t: dict):

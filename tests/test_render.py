@@ -33,8 +33,7 @@ def _roundtrip(triples: list[dict], doc_uri: str, lang=None,
         f"\nmissing: {sorted(want - got)[:5]}\nextra: {sorted(got - want)[:5]}")
 
 
-@pytest.mark.skipif(not os.path.isdir(BASE_DISTILLED),
-                    reason="reference fixtures not available")
+@pytest.mark.requires_reference(BASE_DISTILLED)
 def test_roundtrip_reference_distilled_graphs():
     from ferenda_spark.turtle import parse_turtle
 
@@ -44,8 +43,7 @@ def test_roundtrip_reference_distilled_graphs():
         _roundtrip(trips, f"http://example.org/base/123/{bf}", lang="en")
 
 
-@pytest.mark.skipif(not os.path.isdir(TESTREPOS),
-                    reason="reference fixtures not available")
+@pytest.mark.requires_reference(TESTREPOS)
 def test_roundtrip_testrepos_parsed_graphs():
     """Distill the committed parsed XHTML, re-render, re-distill —
     fixed point."""

@@ -15,6 +15,7 @@ ANNOTATIONS_RQ = "/root/reference/ferenda/res/sparql/annotations.rq"
 # ---------------------------------------------------------------------------
 # parser
 
+@pytest.mark.requires_reference(ANNOTATIONS_RQ)
 def test_parse_reference_annotations_rq():
     """The reference's own shipped template parses to the expected
     shape: CONSTRUCT, 2 template patterns, ?s ?p ?o + a UNION whose
@@ -150,6 +151,7 @@ def test_path_plus_excludes_zero_length(graph):
         "http://e/d1#S1", "http://e/d1#S1.1"]
 
 
+@pytest.mark.requires_reference(ANNOTATIONS_RQ)
 def test_construct_reference_annotations(graph):
     """annotations.rq VERBATIM (uri = d1) over the fixture graph must
     produce: every triple of d1/its parts, plus the inbound-reference
@@ -249,6 +251,8 @@ SUBST = {"uri": "http://e/doc/1", "context": "http://e/ctx",
 RFC = "http://example.org/ontology/rfc/"
 RPUBL = "http://rinfo.lagrummet.se/ns/2008/11/rinfo/publ#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+# the tests below read the reference's shipped .rq templates verbatim
+requires_templates = pytest.mark.requires_reference(*REF_RQ_GLOB)
 
 
 def _all_reference_templates():
@@ -257,6 +261,7 @@ def _all_reference_templates():
     return files
 
 
+@requires_templates
 def test_parse_every_reference_template():
     """All 17 .rq templates the reference ships (core, tech, legal/se,
     general, lagen.nu, doc/examples) parse VERBATIM after the same
@@ -277,6 +282,7 @@ def _graph4(spark, rows):
         rows, "subj string, pred string, obj string, obj_is_uri boolean")
 
 
+@requires_templates
 def test_execute_rfc_annotations_verbatim(spark):
     """The reference's rfc-annotations.rq (5-branch UNION, semicolon
     lists, references+ path, BIND, FILTERs with =, !isUri, IN, !=, ||,
@@ -323,6 +329,7 @@ def test_execute_rfc_annotations_verbatim(spark):
     }
 
 
+@requires_templates
 def test_execute_sfs_changes_verbatim(spark):
     """sfs_changes.rq: predicate-object lists, variable predicate,
     OPTIONAL group with a ; list, FILTER(STRSTARTS && IN)."""
@@ -353,6 +360,7 @@ def test_execute_sfs_changes_verbatim(spark):
     }
 
 
+@requires_templates
 def test_execute_prop_annotations_path_quantifier(spark):
     """prop-annotations.rq: the {,1} path quantifier and the two-
     variable STRSTARTS(STR(?a), STR(?b)) form."""
@@ -380,6 +388,7 @@ def test_execute_prop_annotations_path_quantifier(spark):
     }
 
 
+@requires_templates
 def test_execute_keyword_sfs_graph_block(spark):
     """keyword_sfs.rq: GRAPH wrapper (transparent single-graph store),
     nested braced group, ; list with an isPartOf* path."""
