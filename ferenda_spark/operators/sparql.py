@@ -80,8 +80,15 @@ Spark shape / scale notes:
 
 * Each triple pattern is a FILTERED SCAN of the triples table — its
   constant terms (pred almost always, often subj or obj too) become
-  pushed-down predicates, so at 100 TB a pattern touches only its
-  pred_bucket partitions.
+  pushed-down predicates.  Partition pruning applies when the input
+  carries the ``pred_bucket`` column of the pipeline's triple log (a
+  ``spark.read.parquet`` of it, or ``pipeline.current_triples`` over
+  one): the compiler keeps that column, and every scan with a bound
+  predicate (``pred = <iri>``, and the single ``isin`` scan of a plain
+  alternation) adds its bucket as a partition filter
+  (``pipeline.where_pred``), so at 100 TB a pattern reads only its
+  pred_bucket partitions.  Variable predicates, negated property sets
+  and inputs without the column read every partition.
 * Patterns are joined GREEDILY in selectivity order (most bound
   constants first), always preferring a pattern that shares a variable
   with the solution built so far — a cartesian product only happens if
@@ -103,6 +110,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ferenda_spark.pipeline import where_pred
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
@@ -130,6 +139,21 @@ _SHADOW_PREFIXES = (_SHADOW, _LANG_SHADOW)
 
 def _is_shadow(c: str) -> bool:
     return c.startswith(_SHADOW_PREFIXES)
+
+
+_ECHAR = {"t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f"}
+
+
+def _unescape(lit: str) -> str:
+    """The value of a quoted SPARQL string token (``\\X`` escapes)."""
+    return re.sub(r"\\(.)", lambda m: _ECHAR.get(m.group(1), m.group(1)),
+                  lit[1:-1])
+
+
+def _sql_str(value: str) -> str:
+    """A Spark SQL string literal for ``value``.  Spark's parser reads
+    backslash escapes, so backslashes are escaped along with quotes."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _tokenize(q: str) -> list[str]:
@@ -257,7 +281,7 @@ class _Parser:
         if t.startswith("<"):
             return Term("iri", t[1:-1])
         if t.startswith('"'):
-            return Term("lit", t[1:-1].replace('\\"', '"'))
+            return Term("lit", _unescape(t))
         if t == "a":
             return Term("iri", RDF_TYPE)
         if ":" in t:
@@ -431,7 +455,7 @@ class _Parser:
             lit = self.next()
             if not lit.startswith('"'):
                 raise ValueError("sparql: SEPARATOR needs a literal")
-            sep = lit[1:-1].replace('\\"', '"')
+            sep = _unescape(lit)
         self.expect(")")
         as_kw = self.next()
         if as_kw.upper() != "AS":
@@ -881,8 +905,7 @@ class _ExprCompiler:
         if t.startswith("?"):
             return self._var_col(t)
         if t.startswith('"'):
-            return "'" + t[1:-1].replace("\\\\", "\\").replace('\\"', '"') \
-                .replace("'", "''") + "'"
+            return _sql_str(_unescape(t))
         if t.startswith("<"):
             iri = t[1:-1]
             # xsd constructor casts: try_cast, so a SPARQL type error
@@ -896,7 +919,7 @@ class _ExprCompiler:
                 arg, = self._args(1, 1)
                 return f"try_cast({arg} AS {sql_type})"
             # otherwise IRIs are plain string terms
-            return "'" + iri.replace("'", "''") + "'"
+            return _sql_str(iri)
         if re.fullmatch(r"-?\d+(\.\d+)?", t):
             return t
         if low == "regex":
@@ -956,11 +979,11 @@ class _ExprCompiler:
                 raise ValueError(
                     "sparql: langMatches needs a literal range")
             self.expect(")")
-            t = tag[1:-1].replace("'", "''").lower()
+            t = _unescape(tag).lower()
             if t == "*":
                 return f"({rng} <> '')"
-            return (f"(lower({rng}) = '{t}' OR "
-                    f"startswith(lower({rng}), '{t}-'))")
+            return (f"(lower({rng}) = {_sql_str(t)} OR "
+                    f"startswith(lower({rng}), {_sql_str(t + '-')}))")
         if low in _FUNCS_2:
             self.expect("(")
             a = self.value()
@@ -1059,7 +1082,8 @@ def _pattern_df(triples: DataFrame, pat: Pattern, max_path_depth: int,
             else:
                 sel[term.value] = col
         else:
-            df = df.where(F.col(col) == term.value)
+            df = (where_pred(df, term.value) if col == "pred"
+                  else df.where(F.col(col) == term.value))
             n_bound += 1
     cols = [F.col(c).alias(v) for v, c in sel.items()]
     for v, c in sel.items():
@@ -1083,7 +1107,7 @@ def _path_df(triples: DataFrame, pat: Pattern, max_path_depth: int,
         raise ValueError("sparql: property path needs a constant predicate")
     lo, hi = pat.path
     hi = max_path_depth if hi is None else hi
-    edges = (triples.where(F.col("pred") == pat.p.value)
+    edges = (where_pred(triples, pat.p.value)
              .select(F.col("subj").alias("_s"), F.col("obj").alias("_o"))
              .dropDuplicates())
     closure = edges if lo <= 1 and hi >= 1 else None
@@ -1178,7 +1202,7 @@ def _elt_edges(triples: DataFrame, elt: PathElt,
     elif elt.group is not None:
         base = _alt_edges(triples, elt.group, max_path_depth)
     else:
-        base = (triples.where(F.col("pred") == elt.iri)
+        base = (where_pred(triples, elt.iri)
                 .select(F.col("subj").alias("_s"),
                         F.col("obj").alias("_o"))
                 .dropDuplicates())
@@ -1202,7 +1226,7 @@ def _alt_edges(triples: DataFrame, alt: PathAlt,
              if len(s.elts) == 1 and s.elts[0].iri is not None
              and not s.elts[0].inverse and s.elts[0].quant is None]
     if len(alt.seqs) > 1 and len(plain) == len(alt.seqs):
-        return (triples.where(F.col("pred").isin(plain))
+        return (where_pred(triples, *plain)
                 .select(F.col("subj").alias("_s"),
                         F.col("obj").alias("_o"))
                 .dropDuplicates())
@@ -1497,6 +1521,8 @@ def sparql_query(triples: DataFrame, query: str,
                     f"sparql: this query needs the {col} column in the "
                     "triples DataFrame (operators/triples.py TRIPLES_COLS)")
             need.append(col)
+    if "pred_bucket" in triples.columns:   # lets scans prune partitions
+        need.append("pred_bucket")
     t = triples.select(*need)
     if ast.form == "describe":
         # all triples where the target is subject, plus inbound edges;

@@ -26,7 +26,10 @@ Partitioning rationale (100 TB): predicate frequency is Zipfian, so
 partitioning raw ``pred`` would produce a handful of huge partitions;
 ``pred_bucket = pmod(xxhash64(pred), N_PRED_BUCKETS)`` bounds partition
 count while still enabling partition pruning for predicate-filtered
-queries.  crawl_date enables incremental-load pruning.
+queries: the readers (``where_pred``, used by the SPARQL compiler and
+the faceted API) add the bucket of each bound predicate as a partition
+filter, computed by the same ``pred_bucket`` expression the writer
+uses.  crawl_date enables incremental-load pruning.
 
 Exactly-once incremental commits WITHOUT Iceberg's MERGE INTO: each
 run's pending set gets a deterministic ``batch`` id (hash of its
@@ -41,7 +44,10 @@ SUPERSEDE semantics (a re-crawled url replaces its old graph, like the
 reference's re-parse overwriting the distilled file): the raw batch
 partitions are an APPEND LOG, and ``current_triples`` /
 ``current_dependencies`` are the queryable views — latest ``commit_ts``
-per url wins.  On Iceberg the views collapse into MERGE-on-commit.
+per url wins.  Opening a view materializes its (url, latest commit_ts)
+index once, so every request on the view reuses it instead of
+re-aggregating the log.  On Iceberg the views collapse into
+MERGE-on-commit.
 
 Metrics come from ``DataFrame.observe`` on the write jobs (zero extra
 scans — VERDICT r01 "count storm") plus a tiny per-batch ``metrics``
@@ -54,7 +60,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ferenda_spark import checkpoint
@@ -63,6 +69,25 @@ from ferenda_spark.operators.extract import extract
 from ferenda_spark.operators.triples import all_triples
 
 N_PRED_BUCKETS = 16
+
+
+def pred_bucket(pred: Column) -> Column:
+    """The ``pred_bucket`` partition value of a predicate.  The writer
+    applies it to every row; a reader applies it to a literal, which
+    Catalyst constant-folds into a partition filter.  One expression for
+    both, so they cannot drift apart."""
+    return F.pmod(F.xxhash64(pred), F.lit(N_PRED_BUCKETS))
+
+
+def where_pred(triples: DataFrame, *preds: str) -> DataFrame:
+    """Rows whose ``pred`` is one of ``preds``.  On a table partitioned
+    by ``pred_bucket`` the filter also names those predicates' buckets,
+    so the scan reads only their partitions."""
+    cond = F.col("pred").isin(*preds)
+    if "pred_bucket" in triples.columns:
+        cond &= F.col("pred_bucket").isin(
+            *[pred_bucket(F.lit(p)) for p in preds])
+    return triples.where(cond)
 
 
 def with_partition_cols(triples: DataFrame, warc_ts_by_url: DataFrame) -> DataFrame:
@@ -83,8 +108,7 @@ def with_partition_cols(triples: DataFrame, warc_ts_by_url: DataFrame) -> DataFr
     t = triples.join(warc_ts_by_url, "url", "left")
     n = triples.sparkSession.sparkContext.defaultParallelism
     return (
-        t.withColumn("pred_bucket",
-                     F.pmod(F.xxhash64("pred"), F.lit(N_PRED_BUCKETS)))
+        t.withColumn("pred_bucket", pred_bucket(F.col("pred")))
         .withColumn("crawl_date", F.to_date("warc_ts"))
         .drop("warc_ts")
         .repartition(n, "pred_bucket", "crawl_date")
@@ -106,22 +130,48 @@ def batch_id(todo: DataFrame) -> str:
     return f"{row['n']}x{h:012x}"
 
 
+def _latest_versions(triples_all: DataFrame) -> DataFrame:
+    """(url, commit_ts) of each url's latest committed version."""
+    return triples_all.groupBy("url").agg(
+        F.max("commit_ts").alias("commit_ts"))
+
+
+def _latest_index(triples_all: DataFrame) -> DataFrame:
+    """``_latest_versions`` computed now, by one job, and held in the
+    executors' block stores.
+
+    ``localCheckpoint`` and not ``cache()``: the cache manager matches a
+    plan over ``spark.read.parquet(path)`` by its root path, so a view
+    opened after a later commit would be served the earlier view's
+    stale index.  A checkpoint belongs to the DataFrame that made it."""
+    return _latest_versions(triples_all).localCheckpoint()
+
+
 def current_triples(triples_all: DataFrame) -> DataFrame:
     """The queryable graph: latest committed version per url (the raw
     table is an append log of batches; a re-crawled url's older batches
-    are superseded)."""
-    latest = triples_all.groupBy("url").agg(
-        F.max("commit_ts").alias("commit_ts"))
-    return triples_all.join(latest, ["url", "commit_ts"], "left_semi")
+    are superseded).
+
+    The view is a snapshot.  Its (url, latest commit_ts) index is built
+    once, when the view is opened, and every request on the view
+    semi-joins against it instead of re-aggregating the whole log; a
+    ``spark.read.parquet`` input also keeps the file listing it was
+    opened with.  A commit made after opening is therefore seen only by
+    a view opened after it.  The index lives in executor memory
+    (``localCheckpoint``): if an executor holding part of it is lost,
+    requests on the view fail, and the view must be reopened."""
+    return triples_all.join(_latest_index(triples_all),
+                            ["url", "commit_ts"], "left_semi")
 
 
 def current_dependencies(deps_all: DataFrame,
                          triples_all: DataFrame) -> DataFrame:
     """Dependencies view: keep rows whose from-document version is still
-    the current one (``from_commit_ts`` carried from the triple log)."""
-    latest = (triples_all.groupBy("url")
-              .agg(F.max("commit_ts").alias("from_commit_ts"))
-              .withColumnRenamed("url", "from_url"))
+    the current one (``from_commit_ts`` carried from the triple log).
+    A snapshot, like ``current_triples``."""
+    latest = _latest_index(triples_all).select(
+        F.col("url").alias("from_url"),
+        F.col("commit_ts").alias("from_commit_ts"))
     return (deps_all.join(latest, ["from_url", "from_commit_ts"],
                           "left_semi")
             .select("from_url", "to_url").dropDuplicates())
@@ -203,8 +253,11 @@ def run(
     # narrow projection of the prior log — NOT a full self-join
     triples_all = spark.read.parquet(f"{out_dir}/triples")
     triples_new = triples_all.where(F.col("batch") == batch)
-    triples_prior = current_triples(
-        triples_all.where(F.col("batch") != batch))
+    # lazy, not current_triples: relate is the only consumer, so an
+    # eagerly built index would cost a job and save none
+    prior_log = triples_all.where(F.col("batch") != batch)
+    triples_prior = prior_log.join(_latest_versions(prior_log),
+                                   ["url", "commit_ts"], "left_semi")
     obs_dep = Observation()
     deps = (canonicalize.incremental_dependency_join(
         triples_new, triples_prior)

@@ -96,6 +96,40 @@ def test_run_and_resume(spark, tmp_path_factory):
     del stale_from
 
 
+def test_view_is_a_snapshot(spark, tmp_path_factory):
+    """A view opened before a re-crawl commit keeps its snapshot, and a
+    view opened after it shows the new version.  A view's latest-version
+    index shared through the cache manager (which matches a plan over
+    the same parquet path) would serve the second view the first view's
+    stale index."""
+    out = str(tmp_path_factory.mktemp("snap"))
+    entries = f"{out}/entries"
+    pages = web_pages_df(spark, 6)
+    r1 = pipeline.run(spark, pages, commondata_df(spark), out,
+                      entries_path=entries)
+    url = pages.select("url").first().url
+
+    def batches(view):
+        return {r.batch for r in view.where(F.col("url") == url)
+                .select("batch").distinct().collect()}
+
+    old = pipeline.current_triples(spark.read.parquet(f"{out}/triples"))
+    assert batches(old) == {r1.batch}
+
+    changed = pages.where(F.col("url") == url).withColumn(
+        "html", F.to_binary(F.lit("<html><body><p>v2</p></body></html>"),
+                            F.lit("utf-8")))
+    r2 = pipeline.run(spark, changed, commondata_df(spark), out,
+                      entries_path=entries)
+    assert r2.batch not in (None, r1.batch)
+
+    new = pipeline.current_triples(spark.read.parquet(f"{out}/triples"))
+    assert batches(new) == {r2.batch}
+    assert batches(old) == {r1.batch}
+    assert new.where(F.col("url") != url).count() == \
+        old.where(F.col("url") != url).count()
+
+
 def test_incremental_deps_scan_only_new_batch(spark, tmp_path_factory):
     """The second commit's dependency job must scan the triple log with
     a batch partition filter on its new side (VERDICT r01 #4) and

@@ -1,6 +1,8 @@
 """Plan-shape regression tests: pushdown, pruning, broadcast, shuffle
 counts (SURVEY.md §4; task brief "explain and iterate")."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -369,3 +371,148 @@ def test_simhash_prod_caps_hot_buckets(spark):
     plan = plans.explain_str(df, mode="simple")
     assert plan.count("LeftSemi") >= 1
     assert "hamming" in plan and "<= 3" in plan.replace("(", " (")
+
+
+# ---------------------------------------------------------------------------
+# the read path over a pipeline.run-written triple log
+
+PARTITION_FILTERS = re.compile(r"PartitionFilters: \[([^\]]*)\]")
+
+
+@pytest.fixture(scope="module")
+def kg_log(spark, tmp_path_factory):
+    """A two-commit triple log: the second commit adds pages, so the
+    log is partitioned by batch, pred_bucket and crawl_date."""
+    from ferenda_spark import pipeline
+    from ferenda_spark.fixtures.webpages import commondata_df, web_pages_df
+
+    out = str(tmp_path_factory.mktemp("kglog"))
+    for n in (12, 16):
+        pipeline.run(spark, web_pages_df(spark, n), commondata_df(spark),
+                     out, entries_path=f"{out}/entries")
+    return f"{out}/triples"
+
+
+def _read_path_requests(triples):
+    """The benchmark's kind of requests over ``triples``: a BGP join, an
+    isPartOf+ path to a document with parts, and a faceted pivot."""
+    from ferenda_spark import ns
+    from ferenda_spark.operators import api
+    from ferenda_spark.operators.sparql import sparql_query
+
+    doc = (triples.where(F.col("pred") == ns.DCT_ISPARTOF)
+           .select("obj").orderBy("obj").first().obj)
+    select = sparql_query(triples, f"""
+        SELECT ?doc ?title ?pub WHERE {{
+          ?doc <{ns.DCT_PUBLISHER}> ?pub ; <{ns.DCT_TITLE}> ?title }}""")
+    path = sparql_query(triples, f"""
+        SELECT ?part WHERE {{ ?part <{ns.DCT_ISPARTOF}>+ <{doc}> }}""")
+    facet = api._faceted_pivot(
+        triples, {"dcterms_publisher": "*/ext/network-working-group"})
+    return select, path, facet
+
+
+def test_read_path_scans_prune_pred_bucket(spark, kg_log):
+    """Every scan of a pattern, a path and a faceted pivot with a
+    parameter reads only its predicates' pred_bucket partitions."""
+    from ferenda_spark import pipeline
+
+    cur = pipeline.current_triples(spark.read.parquet(kg_log))
+    for df in _read_path_requests(cur):
+        filters = PARTITION_FILTERS.findall(plans.explain_str(df))
+        assert filters and all("pred_bucket" in f for f in filters), \
+            filters
+
+
+def test_view_requests_reuse_latest_index(spark, kg_log):
+    """A request over ``current_triples`` reads the view's materialized
+    (url, latest commit_ts) index: its plan never re-aggregates
+    max(commit_ts) over the log."""
+    from ferenda_spark import pipeline
+
+    cur = pipeline.current_triples(spark.read.parquet(kg_log))
+    for df in (cur,) + _read_path_requests(cur):
+        assert "max(commit_ts" not in plans.explain_str(df, "extended")
+
+
+def test_sparql_without_pred_bucket_answers_the_same(spark, kg_log):
+    """The pruning is only an addition: without the pred_bucket column
+    the scans are unpruned and the answers are unchanged."""
+    log = spark.read.parquet(kg_log)
+    for pruned, plain in zip(_read_path_requests(log),
+                             _read_path_requests(log.drop("pred_bucket"))):
+        assert any(PARTITION_FILTERS.findall(plans.explain_str(pruned)))
+        assert not any(PARTITION_FILTERS.findall(plans.explain_str(plain)))
+        assert sorted(pruned.collect()) == sorted(plain.collect())
+
+
+def _paging_cases(spark):
+    """(name, triples, texts, page, publisher, q) — four paging cases
+    over 30 documents, every third published by http://pub/1 and every
+    second with "needle" in its body text.  Pages hold 4 hits, fewer
+    than a hit set, so a top-k that stops reading early shows."""
+    triples = spark.createDataFrame(
+        [(f"http://x/{i:03d}", p, o)
+         for i in range(30)
+         for p, o in [(Q.RDF_TYPE, "T"),
+                      ("http://purl.org/dc/terms/title", f"doc {i}"),
+                      ("http://purl.org/dc/terms/publisher",
+                       f"http://pub/{i % 3}"),
+                      ("http://purl.org/dc/terms/issued",
+                       f"20{i % 20:02d}-01-01")]],
+        "subj string, pred string, obj string")
+    texts = spark.createDataFrame(
+        [(f"http://x/{i:03d}", f"body {i}" + " needle" * (i % 2))
+         for i in range(30)], "iri string, text string")
+    return [
+        ("page 0", triples, texts, 0, "http://pub/1", "needle"),
+        ("past the end", triples, texts, 3, "http://pub/1", "needle"),
+        ("empty hit set", triples, texts, 0, "http://pub/9", "nowhere"),
+        ("statically empty input", triples.where(F.lit(False)),
+         texts.where(F.lit(False)), 0, "http://pub/1", "needle"),
+    ]
+
+
+def test_api_page_and_total_in_one_job(spark, monkeypatch):
+    """faceted_query, fulltext_query and advanced_query answer the page
+    and its total from one job: no DataFrame.count, and the total equals
+    a separate count of the hit set in every case — including a
+    statically empty input, whose observation the optimizer removes."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from ferenda_spark.operators import api
+
+    fields = [("dcterms_title", "http://purl.org/dc/terms/title", "text"),
+              ("dcterms_issued", "http://purl.org/dc/terms/issued", "date"),
+              ("dcterms_publisher", "http://purl.org/dc/terms/publisher",
+               "uri")]
+    title = F.col("dcterms_title").contains
+    expected = []
+    for _, t, texts, _, pub, q in _paging_cases(spark):
+        pivot = api._faceted_pivot(t, {"dcterms_publisher": pub})
+        hits = (pivot.join(texts.withColumnRenamed("iri", "subj"), "subj",
+                           "left")
+                .where(F.coalesce(F.col("text"), F.lit("")).contains(q)
+                       | title(q)))
+        expected.append((pivot.count(), hits.count()))
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count called")
+
+    monkeypatch.setattr(DataFrame, "count", no_count)
+    for (name, t, texts, page, pub, q), (n_docs, n_text) in zip(
+            _paging_cases(spark), expected):
+        on_page = max(0, min(4, n_docs - 4 * page))
+        r = api.faceted_query(t, {"dcterms_publisher": pub}, page=page,
+                              page_size=4)
+        assert (r["totalResults"], len(r["items"])) == (n_docs, on_page), \
+            name
+        r = api.advanced_query(t, fields, {"dcterms_publisher": pub},
+                               page=page, page_size=4)
+        assert (r["totalResults"], len(r["items"])) == (n_docs, on_page), \
+            name
+        r = api.fulltext_query(t, texts, q, {"dcterms_publisher": pub},
+                               page=page, page_size=4)
+        assert r["totalResults"] == n_text, name
+    # the cases are not vacuous
+    assert expected == [(10, 5), (10, 5), (0, 0), (0, 0)]

@@ -565,6 +565,31 @@ def test_lang_and_langmatches(spark):
     assert [r.o for r in plain] == ["1999:175"]
 
 
+def test_backslashes_reach_spark_unchanged(spark):
+    """A literal, an IRI and a langMatches range are quoted for Spark's
+    SQL parser with their backslashes escaped, and a pattern constant
+    is unescaped like a FILTER literal."""
+    g = spark.createDataFrame([
+        ("http://e/d", DCT + "title", "a\\b", "x\\y"),
+        ("http://e/d", DCT + "title", "ab", "xy"),
+        ("http://e/d", DCT + "source", "http://e/a\\b", None),
+        ("http://e/d", DCT + "source", "http://e/ab", None),
+    ], "subj string, pred string, obj string, obj_lang string")
+
+    def objs(where):
+        return sorted(r.o for r in sparql_query(
+            g, "SELECT ?o WHERE { ?s ?p ?o . %s }" % where).collect())
+
+    assert objs(r'FILTER(?o = "a\\b")') == ["a\\b"]
+    assert objs(r'FILTER(STRENDS(?o, "\\b"))') == [
+        "a\\b", "http://e/a\\b"]
+    assert objs(r"FILTER(?o = <http://e/a\b>)") == ["http://e/a\\b"]
+    assert objs(r'FILTER(langMatches(lang(?o), "x\\y"))') == ["a\\b"]
+    rows = sparql_query(
+        g, r'SELECT ?s WHERE { ?s ?p "a\\b" }').collect()
+    assert [r.s for r in rows] == ["http://e/d"]
+
+
 def test_lang_without_column_raises(graph):
     with pytest.raises(ValueError, match="obj_lang"):
         sparql_query(graph, """SELECT ?o WHERE {

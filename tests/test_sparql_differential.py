@@ -11,6 +11,7 @@ function library (tests/test_scalars.py)."""
 
 import itertools
 import random
+import re
 
 import pytest
 
@@ -139,13 +140,22 @@ def _left_join(left, right):
     return out
 
 
+def _lit_value(tok):
+    """A quoted literal token's value: the pool escapes only \\ and \"."""
+    return re.sub(r'\\([\\"])', r"\1", tok[1:-1])
+
+
 def _eval_filter(toks, b):
     """Evaluate the tiny FILTER subset the fuzz pool uses:
-    ?x = ?y | ?x != ?y | ?x = "lit" | ?x != "lit" | bound(?x)."""
+    ?x = ?y | ?x != ?y | ?x = "lit" | ?x != "lit" | bound(?x) |
+    regex(?x, "re")."""
     if toks[0].lower() == "bound":
         return b.get(toks[2][1:]) is not None
+    if toks[0].lower() == "regex":
+        v = b.get(toks[2][1:])
+        return v is not None and re.search(_lit_value(toks[4]), v) is not None
     lhs = b.get(toks[0][1:])
-    rhs = toks[2][1:-1] if toks[2].startswith('"') else \
+    rhs = _lit_value(toks[2]) if toks[2].startswith('"') else \
         toks[2][1:-1] if toks[2].startswith("<") else b.get(toks[2][1:])
     if lhs is None or rhs is None:
         return False
@@ -208,7 +218,7 @@ def naive_select(triples, query):
 
 SUBJECTS = ["http://e/a", "http://e/b", "http://e/c"]
 PREDS = [DCT + "title", DCT + "isPartOf", DCT + "references"]
-OBJS = ["X", "Y", "http://e/a", "http://e/b"]
+OBJS = ["X", "Y", "http://e/a", "http://e/b", "X1", "Y\\"]
 
 QUERY_POOL = [
     # plain BGP joins
@@ -252,6 +262,10 @@ QUERY_POOL = [
     """SELECT ?s ?o WHERE { ?s <%(p0)s> ?o . MINUS { ?s <%(p1)s> "X" } }""",
     """SELECT ?s ?o WHERE { ?s <%(p0)s> ?o .
        VALUES ?o { "X" "http://e/a" } }""",
+    # backslash escapes: the pattern is the regex \d, and a literal
+    # that ends in a backslash
+    """SELECT ?s ?o WHERE { ?s <%(p0)s> ?o . FILTER(regex(?o, "\\\\d")) }""",
+    """SELECT ?s WHERE { ?s <%(p0)s> ?o . FILTER(?o = "Y\\\\") }""",
 ]
 
 
