@@ -9,7 +9,6 @@ pure columnar.
 from __future__ import annotations
 
 import re
-import unicodedata
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -219,10 +218,6 @@ def year_of(col: Column) -> Column:
 def firstletter(col: Column) -> Column:
     """facet.py:210-230."""
     return F.lower(F.substring(F.trim(col), 1, 1))
-
-
-def _nfc(s: str) -> str:
-    return unicodedata.normalize("NFC", s)
 
 
 # ---------------------------------------------------------------------------

@@ -7,9 +7,11 @@
   (relate_dependencies, documentrepository.py:1889-1926)
 - skeleton_entities: J4 — URIs referenced but never described
   (sources/general/skeleton.py:16-142)
-- annotation_closure: J3 — transitive isPartOf closure + inbound
-  references (construct_annotations, documentrepository.py:2471-2502,
-  res/sparql/annotations.rq)
+- J3 (transitive isPartOf closure + inbound references,
+  construct_annotations, documentrepository.py:2471-2502,
+  res/sparql/annotations.rq) is not here: the annotations.rq query
+  itself compiles through operators/sparql.py, whose isPartOf* closure
+  is exact (queries.q_sparql_construct_annotations)
 
 Scale notes: the dictionary side of J1 is small => broadcast hash join,
 which is immune to Zipfian label skew (no shuffle of the fact side's hot
@@ -185,36 +187,4 @@ def skeleton_entities(triples: DataFrame) -> DataFrame:
             F.lit(None).cast("string").alias("obj_lang"),
             F.lit(None).cast("string").alias("obj_datatype"),
         )
-    )
-
-
-def annotation_closure(triples: DataFrame, max_depth: int = 3) -> DataFrame:
-    """J3: for each document URI, all part URIs in its transitive
-    dcterms:isPartOf closure plus inbound dcterms:references to any part.
-    Part nesting is bounded (S / S.1 / S.1.1), so the closure is
-    ``max_depth`` chained self-joins, not an iterative fixpoint
-    (annotations.rq:1-19; SURVEY.md §2 J3).
-
-    Returns (doc_uri, part_uri, inbound_ref) rows."""
-    parts = triples.where(F.col("pred") == ns.DCT_ISPARTOF).select(
-        F.col("subj").alias("part"), F.col("obj").alias("parent"))
-    # level 1: direct parts of the doc
-    closure = parts.select(F.col("parent").alias("doc_uri"),
-                           F.col("part").alias("part_uri"))
-    frontier = closure
-    for _ in range(max_depth - 1):
-        frontier = (
-            frontier.alias("f")
-            .join(parts.alias("p"), F.col("p.parent") == F.col("f.part_uri"))
-            .select(F.col("f.doc_uri").alias("doc_uri"),
-                    F.col("p.part").alias("part_uri"))
-        )
-        closure = closure.unionByName(frontier)
-    # keep document-level roots only (fragment-free URIs)
-    closure = closure.where(~F.col("doc_uri").contains("#")).dropDuplicates()
-    refs = triples.where(F.col("pred") == ns.DCT_REFERENCES).select(
-        F.col("obj").alias("part_uri"), F.col("subj").alias("inbound_ref"))
-    return (
-        closure.join(refs, "part_uri", "left")
-        .select("doc_uri", "part_uri", "inbound_ref")
     )

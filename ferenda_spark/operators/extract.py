@@ -29,7 +29,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ferenda_spark import htmlparse as hp
@@ -313,9 +312,3 @@ def extract(web_pages: DataFrame,
 
     cols = ["url", "warc_ts", "html"]
     return web_pages.select(*cols).mapInPandas(run, schema)
-
-
-def with_repartition(web_pages: DataFrame, partitions: int) -> DataFrame:
-    """Optional explicit pre-UDF repartition by url hash for uniform batch
-    cost when input file sizes are skewed (SURVEY.md §4)."""
-    return web_pages.repartition(partitions, F.col("url"))

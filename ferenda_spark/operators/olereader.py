@@ -120,11 +120,6 @@ class _Cfb:
         return self._chain(e["start"])[:e["size"]]
 
 
-def ole_streams(data: bytes) -> list[str]:
-    """Stream names (for format probing / tests)."""
-    return [e["name"] for e in _Cfb(data).entries if e["type"] == 2]
-
-
 def _pieces(word: bytes, table: bytes) -> list[tuple[int, int, bool]]:
     """CLX piece table -> [(fc, n_chars, is_unicode)] ([MS-DOC] 2.8.35:
     Clx = RgPrc* + Pcdt; Pcdt = 0x02 lcb PlcPcd)."""

@@ -70,11 +70,23 @@ general, and lagen.nu), plus the common SELECT forms:
   prop-annotations.rq), sequence ``p1/p2``, inverse ``^p``,
   alternation ``p1|p2``, negated property sets ``!p`` / ``!(p1|p2)``
   (forward members only) and parenthesized combinations with
-  quantifiers — bounded closure, default depth 3 for the unbounded
-  forms (the reference's part trees nest S / S.1 / S.1.1, same bound
-  as operators/canonicalize.annotation_closure).  Zero-length paths
-  range over the nodes of the path's own edge subgraph (documented
-  deviation from the spec's all-terms domain)
+  quantifiers.  Every quantified element, a bare ``p*`` included, is
+  one closure (``_closure``), and the closure is exact: ``*``, ``+``
+  and ``{m,}`` iterate to a fixpoint however deep the graph nests
+  (``{m,}`` with m >= 2 is m exact steps, then ``*``), and ``{m,n}``
+  takes at most n exact-length steps.  A walk that still finds new
+  pairs after ``_CLOSURE_MAX_ROUNDS`` rounds raises ``RuntimeError``
+  instead of returning part of the answer.  When the quantified
+  element is the whole path and the pattern has a constant subject
+  (else object), the walk starts there: ``?part dct:isPartOf*
+  <doc>`` visits only that document's part tree.  Zero-length paths
+  follow one rule for every path form: a constant endpoint reaches
+  itself (also when it is not in the graph), and a variable-to-variable
+  path ranges over the nodes of its own edge subgraph (a documented
+  deviation from the spec's all-terms domain).  Path results are
+  sets, for sequences and alternations too: ``?x p/q ?y`` yields each
+  (x, y) pair once however many middle nodes join them, where the
+  spec counts one solution per path.
 
 Spark shape / scale notes:
 
@@ -95,9 +107,12 @@ Spark shape / scale notes:
   the query itself is disconnected.
 * A pattern bound by 2+ constants is a needle in the table => its scan
   is broadcast-hinted into the join.
-* ``p*``/``p+``/``p{m,n}`` closures are chained self-joins of the
-  edge subset (one pred-filtered scan reused), not a driver loop over
-  collected rows.
+* A closure materializes its edge set once (one pred-filtered scan,
+  ``localCheckpoint``) and then each round's new frontier, so a round
+  joins two materialized sets and the plan does not grow with the
+  depth.  No rows reach the driver; each round costs two small jobs
+  (materialize, test for empty), which run when the query is
+  compiled, not when its result is collected.
 * The ``obj_is_uri`` shadow columns that power isURI/isLiteral are
   only materialized when the query actually uses those functions, so
   the common case pays nothing.
@@ -181,7 +196,6 @@ class Pattern:
     s: Term
     p: Term     # kind 'iri'/'var', or 'path' with value = a PathAlt
     o: Term
-    path: tuple[int, int | None] | None = None  # (min, max); max None = default
 
 
 @dataclass
@@ -342,7 +356,7 @@ class _Parser:
                 if (where.unions or where.optionals or where.filters
                         or where.binds or where.exists or where.minuses
                         or where.values or where.subselects
-                        or any(p.path or p.p.kind == "path"
+                        or any(p.p.kind == "path"
                                for p in where.patterns)):
                     raise ValueError(
                         "sparql: CONSTRUCT WHERE shorthand allows only "
@@ -497,6 +511,8 @@ class _Parser:
             if self.peek() and re.fullmatch(r"\d+", self.peek()):
                 hi = int(self.next())
             self.expect("}")
+            if hi is not None and hi < lo:
+                raise ValueError(f"sparql: empty path quantifier {{{lo},{hi}}}")
             return (lo, hi)
         return None
 
@@ -558,20 +574,19 @@ class _Parser:
             seqs.append(self._path_seq())
         return PathAlt(seqs)
 
-    def _pred(self) -> tuple[Term, tuple | None]:
-        """The predicate position: a var, a bare (possibly quantified)
-        IRI — the fast scan path — or a full path expression."""
+    def _pred(self) -> Term:
+        """The predicate position: a var, a bare IRI — the fast scan
+        path — or a path expression (a quantified IRI is a one-element
+        path)."""
         if self.peek() in ("^", "(", "!"):
-            return Term("path", self._path_alt()), None
+            return Term("path", self._path_alt())
         p = self.term()
         quant = self._path_quant()
-        if self.peek() in ("/", "|"):
-            if p.kind != "iri":
-                raise ValueError(
-                    "sparql: property path elements must be IRIs")
-            first = PathElt(p.value, False, quant)
-            return Term("path", self._path_alt(first)), None
-        return p, quant
+        if quant is None and self.peek() not in ("/", "|"):
+            return p
+        if p.kind != "iri":
+            raise ValueError("sparql: property path elements must be IRIs")
+        return Term("path", self._path_alt(PathElt(p.value, False, quant)))
 
     def pattern_block(self) -> list[Pattern]:
         """One subject's statements: ``s p1 o1a, o1b ; p2 o2`` ->
@@ -580,11 +595,11 @@ class _Parser:
         s = self.term()
         pats: list[Pattern] = []
         while True:
-            p, path = self._pred()
-            pats.append(Pattern(s, p, self.term(), path))
+            p = self._pred()
+            pats.append(Pattern(s, p, self.term()))
             while self.peek() == ",":
                 self.next()
-                pats.append(Pattern(s, p, self.term(), path))
+                pats.append(Pattern(s, p, self.term()))
             if self.peek() == ";":
                 self.next()
                 if self.peek() in (None, ".", "}", ";"):   # trailing ;
@@ -1060,7 +1075,7 @@ def _uses_shadows(g: Group) -> frozenset:
 # ---------------------------------------------------------------------------
 # compilation
 
-def _pattern_df(triples: DataFrame, pat: Pattern, max_path_depth: int,
+def _pattern_df(triples: DataFrame, pat: Pattern,
                 kinds: frozenset) -> tuple[DataFrame, int]:
     """One triple pattern -> (projected scan keyed by its variable
     columns, n_bound_constants).  Constants become pushdown filters.
@@ -1069,9 +1084,7 @@ def _pattern_df(triples: DataFrame, pat: Pattern, max_path_depth: int,
     table's obj_is_uri flag) and ``__lang__v`` (obj_lang for obj
     bindings, NULL otherwise)."""
     if pat.p.kind == "path":
-        return _complex_path_df(triples, pat, max_path_depth, kinds)
-    if pat.path:
-        return _path_df(triples, pat, max_path_depth, kinds)
+        return _path_pattern_df(triples, pat, kinds)
     df = triples
     n_bound = 0
     sel: dict[str, str] = {}  # var -> source column
@@ -1097,135 +1110,136 @@ def _pattern_df(triples: DataFrame, pat: Pattern, max_path_depth: int,
     return df.select(*cols), n_bound
 
 
-def _path_df(triples: DataFrame, pat: Pattern, max_path_depth: int,
-             kinds: frozenset) -> tuple[DataFrame, int]:
-    """``?s p* ?o`` / ``p+`` / ``p{m,n}``: bounded closure of the
-    p-edge subset.  Zero-length paths (min 0) mean every node reaches
-    itself — for a constant endpoint that is just the constant row;
-    for the var-var form the node set of the p-subgraph."""
-    if pat.p.kind == "var":
-        raise ValueError("sparql: property path needs a constant predicate")
-    lo, hi = pat.path
-    hi = max_path_depth if hi is None else hi
-    edges = (where_pred(triples, pat.p.value)
-             .select(F.col("subj").alias("_s"), F.col("obj").alias("_o"))
-             .dropDuplicates())
-    closure = edges if lo <= 1 and hi >= 1 else None
-    frontier = edges
-    for length in range(2, hi + 1):
-        frontier = (frontier.alias("f")
-                    .join(edges.alias("e"),
-                          F.col("f._o") == F.col("e._s"))
-                    .select(F.col("f._s").alias("_s"),
-                            F.col("e._o").alias("_o")))
+# Rounds a closure may take.  A walk still finding new pairs after this
+# many rounds raises instead of returning a subset of the closure.
+_CLOSURE_MAX_ROUNDS = 64
+
+_CONSTRAINTS = "spark.sql.constraintPropagation.enabled"
+
+
+def _materialize(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint()``, built with constraint propagation off.
+
+    Spark 4.1's checkpoint keeps the constraints the optimizer inferred
+    for ``df`` under the optimized plan's attribute ids, which differ
+    from the checkpoint's own once an alias is dropped as redundant.  A
+    later union or self-join of such checkpoints then fails in
+    constraint inference (``NoSuchElementException: key not found``).
+    Built without constraints, the checkpoint carries none.  The switch
+    is session-wide while the checkpoint job runs."""
+    conf = df.sparkSession.conf
+    old = conf.get(_CONSTRAINTS)
+    conf.set(_CONSTRAINTS, "false")
+    try:
+        return df.localCheckpoint()
+    finally:
+        conf.set(_CONSTRAINTS, old)
+
+
+def _closure(edges: DataFrame, lo: int, hi: int | None,
+             s0: str | None = None, o0: str | None = None) -> DataFrame:
+    """The (_s, _o) pairs joined by a path of ``lo``..``hi`` edges
+    (``hi`` None: unbounded), computed exactly.
+
+    Each round extends the frontier by one edge, drops duplicates and
+    materializes the result (``_materialize``); the walk ends when
+    the frontier is empty.  Once paths reach length ``lo``, an
+    unbounded walk keeps only pairs not found before (semi-naive), so
+    it ends on cyclic graphs too; a bounded one stops after ``hi``
+    rounds.  A constant subject ``s0`` (else object ``o0``) seeds the
+    walk, which then only visits what that node reaches.  Zero-length
+    paths pair a constant endpoint with itself, else every node of the
+    edge set with itself."""
+    if hi is None or hi > 1:      # more than one round reads the edges
+        edges = _materialize(edges)
+    backward = s0 is None and o0 is not None
+    frontier = (edges.where(F.col("_s") == s0) if s0 is not None
+                else edges.where(F.col("_o") == o0) if backward
+                else edges)
+    out, length = None, 1
+    for _ in range(_CLOSURE_MAX_ROUNDS):
+        if hi is not None and length > hi:      # {0,0}
+            break
         if length >= lo:
-            closure = frontier if closure is None \
-                else closure.unionByName(frontier).dropDuplicates()
+            out = frontier if out is None else out.unionByName(frontier)
+        if length == hi:
+            break
+        f, e = frontier.alias("f"), edges.alias("e")
+        frontier = (f.join(e, F.col("e._o") == F.col("f._s"))
+                    .select(F.col("e._s").alias("_s"),
+                            F.col("f._o").alias("_o"))
+                    if backward else
+                    f.join(e, F.col("f._o") == F.col("e._s"))
+                    .select(F.col("f._s").alias("_s"),
+                            F.col("e._o").alias("_o"))).dropDuplicates()
+        if hi is None and length >= lo:
+            frontier = frontier.join(out, ["_s", "_o"], "left_anti")
+        frontier = _materialize(frontier)
+        length += 1
+        if frontier.isEmpty():
+            break
+    else:
+        raise RuntimeError(
+            f"sparql: a property path closure found new pairs after "
+            f"{_CLOSURE_MAX_ROUNDS} rounds (_CLOSURE_MAX_ROUNDS); the "
+            f"graph has longer paths than the cap")
     if lo == 0:
-        if pat.s.kind != "var":
-            zero = triples.sparkSession.createDataFrame(
-                [(pat.s.value, pat.s.value)], "_s string, _o string")
-        elif pat.o.kind != "var":
-            zero = triples.sparkSession.createDataFrame(
-                [(pat.o.value, pat.o.value)], "_s string, _o string")
+        node = s0 if s0 is not None else o0
+        if node is not None:
+            zero = edges.sparkSession.createDataFrame(
+                [(node, node)], "_s string, _o string")
         else:
             nodes = (edges.select(F.col("_s").alias("n"))
-                     .unionByName(edges.select(F.col("_o").alias("n")))
-                     .dropDuplicates())
+                     .unionByName(edges.select(F.col("_o").alias("n"))))
             zero = nodes.select(F.col("n").alias("_s"),
                                 F.col("n").alias("_o"))
-        closure = zero if closure is None \
-            else closure.unionByName(zero).dropDuplicates()
-    if closure is None:
-        raise ValueError(f"sparql: empty path quantifier {{{lo},{hi}}}")
-
-    df = closure
-    n_bound = 0
-    sel: dict[str, str] = {}
-    for term, col in ((pat.s, "_s"), (pat.o, "_o")):
-        if term.kind == "var":
-            if term.value in sel:
-                df = df.where(F.col(col) == F.col(sel[term.value]))
-            else:
-                sel[term.value] = col
-        else:
-            df = df.where(F.col(col) == term.value)
-            n_bound += 1
-    cols = [F.col(c).alias(v) for v, c in sel.items()]
-    # path endpoints are IRIs by construction (part-tree edges)
-    if "isuri" in kinds:
-        cols += [F.lit(True).alias(_SHADOW + v) for v in sel]
-    if "lang" in kinds:
-        cols += [F.lit(None).cast("string").alias(_LANG_SHADOW + v)
-                 for v in sel]
-    return df.select(*cols), n_bound
+        out = zero if out is None else out.unionByName(zero)
+    if out is None:
+        return edges.where(F.lit(False))
+    return out.dropDuplicates()
 
 
-def _edge_nodes(edges: DataFrame) -> DataFrame:
-    return (edges.select(F.col("_s").alias("n"))
-            .unionByName(edges.select(F.col("_o").alias("n")))
-            .dropDuplicates())
-
-
-def _edge_closure(edges: DataFrame, lo: int, hi: int) -> DataFrame:
-    """Paths of length max(lo,1)..hi over an (_s,_o) edge set; a
-    zero-length component (lo == 0) is the identity over the edge
-    subgraph's node set."""
-    closure = edges if lo <= 1 and hi >= 1 else None
-    frontier = edges
-    for length in range(2, hi + 1):
-        frontier = (frontier.alias("f")
-                    .join(edges.alias("e"),
-                          F.col("f._o") == F.col("e._s"))
-                    .select(F.col("f._s").alias("_s"),
-                            F.col("e._o").alias("_o")))
-        if length >= lo:
-            closure = frontier if closure is None \
-                else closure.unionByName(frontier).dropDuplicates()
-    if lo == 0:
-        zero = _edge_nodes(edges).select(F.col("n").alias("_s"),
-                                         F.col("n").alias("_o"))
-        closure = zero if closure is None \
-            else closure.unionByName(zero).dropDuplicates()
-    if closure is None:
-        raise ValueError(f"sparql: empty path quantifier {{{lo},{hi}}}")
-    return closure
-
-
-def _elt_edges(triples: DataFrame, elt: PathElt,
-               max_path_depth: int) -> DataFrame:
+def _elt_edges(triples: DataFrame, elt: PathElt, s0: str | None = None,
+               o0: str | None = None) -> DataFrame:
+    """One path element -> its (_s, _o) edge DataFrame.  ``s0``/``o0``
+    are the pattern's constant endpoints when this element is the whole
+    path: a closure starts its walk there."""
+    if elt.inverse:
+        s0, o0 = o0, s0
     if elt.neg is not None:
         base = (triples.where(~F.col("pred").isin(elt.neg))
                 .select(F.col("subj").alias("_s"),
                         F.col("obj").alias("_o"))
                 .dropDuplicates())
     elif elt.group is not None:
-        base = _alt_edges(triples, elt.group, max_path_depth)
+        base = (_alt_edges(triples, elt.group) if elt.quant is not None
+                else _alt_edges(triples, elt.group, s0, o0))
     else:
         base = (where_pred(triples, elt.iri)
                 .select(F.col("subj").alias("_s"),
                         F.col("obj").alias("_o"))
                 .dropDuplicates())
+    if elt.quant is not None:
+        base = _closure(base, *elt.quant, s0, o0)
     if elt.inverse:
         base = base.select(F.col("_o").alias("_s"),
                            F.col("_s").alias("_o"))
-    if elt.quant is not None:
-        lo, hi = elt.quant
-        base = _edge_closure(base, lo,
-                             max_path_depth if hi is None else hi)
     return base
 
 
-def _alt_edges(triples: DataFrame, alt: PathAlt,
-               max_path_depth: int) -> DataFrame:
+def _alt_edges(triples: DataFrame, alt: PathAlt, s0: str | None = None,
+               o0: str | None = None) -> DataFrame:
     """A path expression -> its (_s, _o) edge DataFrame: sequences are
-    chained joins (_o -> _s), alternatives union.  An alternation of
-    plain forward predicates collapses to ONE isin-filtered scan
-    instead of per-branch scans + union."""
+    chained joins (_o -> _s), alternatives union, and the result is a
+    set.  An alternation of plain forward predicates collapses to ONE
+    isin-filtered scan instead of per-branch scans + union.  A sole
+    element gets the constant endpoints (see ``_elt_edges``)."""
+    if len(alt.seqs) == 1 and len(alt.seqs[0].elts) == 1:
+        return _elt_edges(triples, alt.seqs[0].elts[0], s0, o0)
     plain = [s.elts[0].iri for s in alt.seqs
              if len(s.elts) == 1 and s.elts[0].iri is not None
              and not s.elts[0].inverse and s.elts[0].quant is None]
-    if len(alt.seqs) > 1 and len(plain) == len(alt.seqs):
+    if len(plain) == len(alt.seqs):
         return (where_pred(triples, *plain)
                 .select(F.col("subj").alias("_s"),
                         F.col("obj").alias("_o"))
@@ -1234,7 +1248,7 @@ def _alt_edges(triples: DataFrame, alt: PathAlt,
     for seq in alt.seqs:
         df = None
         for elt in seq.elts:
-            e = _elt_edges(triples, elt, max_path_depth)
+            e = _elt_edges(triples, elt)
             df = e if df is None else (
                 df.alias("l")
                 .join(e.alias("r"), F.col("l._o") == F.col("r._s"))
@@ -1247,13 +1261,13 @@ def _alt_edges(triples: DataFrame, alt: PathAlt,
     return out.dropDuplicates()
 
 
-def _complex_path_df(triples: DataFrame, pat: Pattern,
-                     max_path_depth: int, kinds: frozenset,
+def _path_pattern_df(triples: DataFrame, pat: Pattern, kinds: frozenset,
                      ) -> tuple[DataFrame, int]:
-    """A pattern whose predicate is a path EXPRESSION (sequence /
-    inverse / alternation): compile the expression to an edge set,
-    then bind the endpoints like the simple-path case."""
-    df = _alt_edges(triples, pat.p.value, max_path_depth)
+    """A pattern whose predicate is a path expression: compile the
+    expression to an edge set, then bind the endpoints."""
+    s0 = None if pat.s.kind == "var" else pat.s.value
+    o0 = None if pat.o.kind == "var" else pat.o.value
+    df = _alt_edges(triples, pat.p.value, s0, o0)
     n_bound = 0
     sel: dict[str, str] = {}
     for term, col in ((pat.s, "_s"), (pat.o, "_o")):
@@ -1284,11 +1298,10 @@ def _drop_dup_shadows(df: DataFrame, sol_cols: set[str]) -> DataFrame:
 
 
 def _join_patterns(triples: DataFrame, pats: list[Pattern],
-                   max_path_depth: int, kinds: frozenset,
-                   ) -> DataFrame | None:
+                   kinds: frozenset) -> DataFrame | None:
     if not pats:
         return None
-    scans = [_pattern_df(triples, p, max_path_depth, kinds) for p in pats]
+    scans = [_pattern_df(triples, p, kinds) for p in pats]
     # selectivity-ordered greedy join: start from the most
     # constant-bound scan, always extend with a scan sharing a variable
     order = sorted(range(len(scans)), key=lambda i: -scans[i][1])
@@ -1403,7 +1416,7 @@ def _select_result(sol: DataFrame, ast: Query) -> DataFrame:
         out = grouped.agg(*exprs)
         for htoks in ast.having:
             out = out.where(_filter_expr(htoks, set(out.columns)))
-        proj = (ast.select_vars or ast.group_by) + \
+        proj = ast.select_vars + \
             [a.alias for a in ast.aggs]
         out = out.select(*proj)
     else:
@@ -1421,11 +1434,11 @@ def _select_result(sol: DataFrame, ast: Query) -> DataFrame:
     return out
 
 
-def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
+def _compile_group(triples: DataFrame, g: Group,
                    kinds: frozenset) -> DataFrame | None:
-    sol = _join_patterns(triples, g.patterns, max_path_depth, kinds)
+    sol = _join_patterns(triples, g.patterns, kinds)
     for sq in g.subselects:
-        inner = _compile_group(triples, sq.where, max_path_depth, kinds)
+        inner = _compile_group(triples, sq.where, kinds)
         if inner is None:
             raise ValueError("sparql: empty subquery WHERE group")
         sdf = _select_result(inner, sq)   # projected vars only
@@ -1436,7 +1449,7 @@ def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
             sol = sol.join(sdf, on=shared) if shared \
                 else sol.crossJoin(sdf)
     for branches in g.unions:
-        dfs = [_compile_group(triples, b, max_path_depth, kinds)
+        dfs = [_compile_group(triples, b, kinds)
                for b in branches]
         if any(d is None for d in dfs):
             raise ValueError("sparql: empty UNION branch")
@@ -1455,7 +1468,7 @@ def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
     for opt in g.optionals:
         if sol is None:
             raise ValueError("sparql: OPTIONAL without a base pattern")
-        odf = _compile_group(triples, opt, max_path_depth, kinds)
+        odf = _compile_group(triples, opt, kinds)
         if odf is None:
             continue
         shared = [c for c in _var_cols(odf.columns) if c in sol.columns]
@@ -1478,7 +1491,7 @@ def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
     for positive, eg in g.exists:
         if sol is None:
             raise ValueError("sparql: EXISTS without a base pattern")
-        edf = _compile_group(triples, eg, max_path_depth, kinds)
+        edf = _compile_group(triples, eg, kinds)
         shared = [c for c in _var_cols(edf.columns) if c in sol.columns]
         if not shared:
             raise ValueError(
@@ -1490,7 +1503,7 @@ def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
     for mg in g.minuses:
         if sol is None:
             raise ValueError("sparql: MINUS without a base pattern")
-        mdf = _compile_group(triples, mg, max_path_depth, kinds)
+        mdf = _compile_group(triples, mg, kinds)
         shared = [c for c in _var_cols(mdf.columns) if c in sol.columns]
         if not shared:
             continue   # SPARQL spec: disjoint MINUS removes nothing
@@ -1501,8 +1514,7 @@ def _compile_group(triples: DataFrame, g: Group, max_path_depth: int,
     return sol
 
 
-def sparql_query(triples: DataFrame, query: str,
-                 max_path_depth: int = 3) -> DataFrame:
+def sparql_query(triples: DataFrame, query: str) -> DataFrame:
     """Run a SPARQL query (see module docstring for the subset) against
     a (subj, pred, obj[, obj_is_uri], ...) triples DataFrame.
 
@@ -1536,7 +1548,7 @@ def sparql_query(triples: DataFrame, query: str,
             out = tt.where(F.col("subj").isin(uris)
                            | F.col("obj").isin(uris))
         if dvars:
-            sol = _compile_group(t, ast.where, max_path_depth, kinds)
+            sol = _compile_group(t, ast.where, kinds)
             if sol is None:
                 raise ValueError("sparql: empty DESCRIBE WHERE group")
             nodes = None
@@ -1552,7 +1564,7 @@ def sparql_query(triples: DataFrame, query: str,
         if out is None:
             raise ValueError("sparql: DESCRIBE needs at least one target")
         return out.dropDuplicates()
-    sol = _compile_group(t, ast.where, max_path_depth, kinds)
+    sol = _compile_group(t, ast.where, kinds)
     if sol is None:
         raise ValueError("sparql: empty WHERE group")
     if ast.form == "ask":

@@ -74,78 +74,10 @@ def _ts(subj, pred, obj, is_uri=False, lang=None, datatype=None) -> Column:
     )
 
 
-def _emit(df: DataFrame, triple_structs: list[Column]) -> DataFrame:
-    """array(structs) -> explode -> drop null-object rows -> flat cols."""
-    return (
-        df.select("url", F.explode(F.array(*triple_structs)).alias("t"))
-        .where(F.col("t.obj").isNotNull())
-        .select("url", "t.subj", "t.pred", "t.obj", "t.obj_is_uri",
-                "t.obj_lang", "t.obj_datatype")
-    )
-
-
 def _frag(ordinal: Column) -> Column:
     """'1.1' -> 'S1.1', 'PS2' -> 'PS2' (elements.py:595-596 / FIXTURES §4)."""
     return F.when(ordinal.startswith("PS"), ordinal).otherwise(
         F.concat(F.lit("S"), ordinal))
-
-
-def doc_scalar_triples(extracted: DataFrame) -> DataFrame:
-    """Branch 1+2: everything derivable from one row without joins."""
-    e = extracted.where("parse_ok")
-    classname = _alias_case({a: r["classname"] for a, r in REPOS.items()})
-    h = F.col("rfc_header")
-    identifier = _identifier_col()
-    short_title = F.when(F.col("short_title") != F.col("title"),
-                         F.col("short_title"))
-    structs = [
-        _ts(F.col("doc_uri"), ns.RDF_TYPE, _rdf_type_col(), True),
-        _ts(F.col("doc_uri"), ns.DCT_TITLE, F.col("title"),
-            lang=F.col("lang")),
-        _ts(F.col("doc_uri"), ns.BIBO_SHORTTITLE, short_title,
-            lang=F.col("lang")),
-        _ts(F.col("doc_uri"), ns.DCT_IDENTIFIER, identifier),
-        _ts(F.col("doc_uri"), ns.DCT_PUBLISHER, _static_publisher_col(),
-            True),
-        _ts(F.col("doc_uri"), ns.PROV_WASGENERATEDBY, classname),
-        _ts(F.col("doc_uri"), ns.DCT_ISSN, h["issn"]),
-        _ts(F.col("doc_uri"), ns.DCT_ISSUED, h["issued"],
-            datatype=ns.XSD_GYEARMONTH),
-        _ts(F.col("doc_uri"), ns.RFC_BCPNUMBER, h["bcpnumber"]),
-        _ts(F.col("doc_uri"), ns.RFC_STDNUMBER, h["stdnumber"]),
-        _ts(F.col("doc_uri"), ns.RFC_FYINUMBER, h["fyinumber"]),
-    ]
-    for key, (pred, dtype) in KNOWN_HEAD_META.items():
-        structs.append(
-            _ts(F.col("doc_uri"), pred, F.col("head_meta").getItem(key),
-                datatype=dtype))
-    base = _emit(e, structs)
-
-    people = e.select(
-        "url", "doc_uri",
-        F.explode(
-            F.concat(
-                F.coalesce(
-                    F.transform(h["creators"],
-                                lambda c: F.struct(F.lit(ns.DCT_CREATOR)
-                                                   .alias("pred"),
-                                                   c.alias("obj"))),
-                    F.array()),
-                F.coalesce(
-                    F.transform(h["rightsholders"],
-                                lambda c: F.struct(F.lit(ns.DCT_RIGHTSHOLDER)
-                                                   .alias("pred"),
-                                                   c.alias("obj"))),
-                    F.array()),
-            )
-        ).alias("po"),
-    ).select(
-        "url", F.col("doc_uri").alias("subj"), "po.pred", "po.obj",
-        F.lit(False).alias("obj_is_uri"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(None).cast("string").alias("obj_datatype"),
-    )
-    return base.unionByName(people)
 
 
 def label_link_triples(extracted: DataFrame, commondata: DataFrame) -> DataFrame:
@@ -178,106 +110,6 @@ def label_link_triples(extracted: DataFrame, commondata: DataFrame) -> DataFrame
         )
         out = branch if out is None else out.unionByName(branch)
     return out
-
-
-def updates_obsoletes_triples(extracted: DataFrame) -> DataFrame:
-    """Branch 4: rfc:updates / rfc:obsoletes with COIN-minted targets."""
-    e = extracted.where("parse_ok")
-    h = F.col("rfc_header")
-    po = e.select(
-        "url", "doc_uri",
-        F.explode(
-            F.concat(
-                F.coalesce(F.transform(
-                    h["updates"],
-                    lambda x: F.struct(F.lit(ns.RFC_UPDATES).alias("pred"),
-                                       x.alias("num"))), F.array()),
-                F.coalesce(F.transform(
-                    h["obsoletes"],
-                    lambda x: F.struct(F.lit(ns.RFC_OBSOLETES).alias("pred"),
-                                       x.alias("num"))), F.array()),
-            )
-        ).alias("po"),
-    )
-    minted = compile_coin(
-        RFC_COIN_TEMPLATES, BASE_URL,
-        {"rfcnum": F.col("po.num"), "secref": F.lit(None).cast("string")},
-    )
-    return po.select(
-        "url", F.col("doc_uri").alias("subj"), F.col("po.pred").alias("pred"),
-        minted.alias("obj"), F.lit(True).alias("obj_is_uri"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(None).cast("string").alias("obj_datatype"),
-    )
-
-
-def section_triples(extracted: DataFrame) -> DataFrame:
-    """Branch 5 (P9): fragment URIs + DocumentPart/title/isPartOf/chapter
-    (+ per-section identifiers for the rfc repo; preamble parts are
-    type+title only there — see fused _section_structs for citations)."""
-    e = extracted.where("parse_ok")
-    s = (e.select("url", "doc_uri", "lang", "alias", "basefile",
-                  F.explode("sections").alias("s"))
-         .select("url", "doc_uri", "lang", "alias", "basefile", "s.*"))
-    is_rfc = F.col("alias") == "rfc"
-    is_ps = F.col("ordinal").startswith("PS")
-    subj = F.concat(F.col("doc_uri"), F.lit("#"), _frag(F.col("ordinal")))
-    parent = F.when(
-        F.col("parent_ordinal").isNull(), F.col("doc_uri")
-    ).otherwise(F.concat(F.col("doc_uri"), F.lit("#"),
-                         _frag(F.col("parent_ordinal"))))
-    parent_obj = F.when(is_rfc & ~is_ps, parent)
-    chapter = F.when(~is_ps, F.col("ordinal"))
-    chapter_lang = F.when(is_rfc, F.col("lang"))
-    sec_ident = F.when(
-        is_rfc & ~is_ps,
-        F.concat(F.lit("RFC "), F.col("basefile"),
-                 F.lit(", section "), F.col("ordinal")))
-    return _emit(
-        s.withColumn("subj0", subj).withColumn("parent0", parent_obj),
-        [
-            _ts(F.col("subj0"), ns.RDF_TYPE, ns.BIBO_DOCUMENTPART, True),
-            _ts(F.col("subj0"), ns.DCT_TITLE, F.col("title"),
-                lang=F.col("lang")),
-            _ts(F.col("subj0"), ns.DCT_IDENTIFIER, sec_ident,
-                lang=F.col("lang")),
-            _ts(F.col("subj0"), ns.DCT_ISPARTOF, F.col("parent0"), True),
-            _ts(F.col("subj0"), ns.BIBO_CHAPTER, chapter, lang=chapter_lang),
-        ],
-    )
-
-
-def citation_triples(extracted: DataFrame) -> DataFrame:
-    """Branch 6 (C2/C3): spans -> dcterms:references with COIN-minted or
-    literal-URL targets; subject is the enclosing section (or the doc)."""
-    e = extracted.where("parse_ok")
-    c = (e.select("url", "doc_uri", F.explode("citations").alias("c"))
-         .select("url", "doc_uri", F.col("c.section_ordinal").alias("section_ordinal"),
-                 F.col("c.kind").alias("kind"), F.col("c.url").alias("cited_url"),
-                 F.col("c.rfcnum").alias("rfcnum"), F.col("c.secref").alias("secref")))
-    subj = F.when(
-        F.col("section_ordinal").isNull(), F.col("doc_uri")
-    ).otherwise(F.concat(F.col("doc_uri"), F.lit("#"),
-                         _frag(F.col("section_ordinal"))))
-    minted = compile_coin(
-        RFC_COIN_TEMPLATES, BASE_URL,
-        {"rfcnum": F.col("rfcnum"), "secref": F.col("secref")},
-    )
-    obj = (F.when(F.col("kind").isin("url", "sfs"), F.col("cited_url"))
-           .when(F.col("kind") == "sec",
-                 F.concat(F.col("doc_uri"), F.lit("#S"), F.col("secref")))
-           .otherwise(minted))
-    return (
-        c.select(
-            "url", subj.alias("subj"),
-            F.lit(ns.DCT_REFERENCES).alias("pred"), obj.alias("obj"),
-            F.lit(True).alias("obj_is_uri"),
-            F.lit(None).cast("string").alias("obj_lang"),
-            F.lit(None).cast("string").alias("obj_datatype"),
-        )
-        .where(F.col("obj").isNotNull())
-        .dropDuplicates(["url", "subj", "pred", "obj"])
-    )
 
 
 def _arr(col: Column) -> Column:
@@ -322,11 +154,9 @@ def fused_scalar_triples(extracted: DataFrame,
     """Branches 1+2+4+5+6 in ONE scan + ONE explode: every per-row
     triple source (doc scalars, header people/relations, sections,
     citations) is concatenated into a single array<struct> before the
-    Generate.  Equivalent to unioning the per-branch functions above
-    (which remain as the readable spec / unit-test surface), but emits
-    1 map stage instead of 5 — on a cluster that is 4 fewer scans of the
-    extracted table; in local mode it also cuts task-launch overhead,
-    which dominates at fixture scale."""
+    Generate.  One map stage instead of one per branch — on a cluster
+    that is 4 fewer scans of the extracted table; in local mode it also
+    cuts task-launch overhead, which dominates at fixture scale."""
     e = extracted.where("parse_ok")
     classname = _alias_case({a: r["classname"] for a, r in REPOS.items()})
     h = F.col("rfc_header")

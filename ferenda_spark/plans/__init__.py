@@ -1,5 +1,6 @@
 from ferenda_spark.plans.audit import (  # noqa: F401
     executed_plan_str,
+    executed_plans,
     explain_str,
     has_broadcast_hash_join,
     has_pushed_filter,

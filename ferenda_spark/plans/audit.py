@@ -76,3 +76,26 @@ def executed_plan_str(df: DataFrame) -> str:
     isFinalPlan=false without them."""
     df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def executed_plans(spark, thunk) -> list[str]:
+    """The physical plan of every SQL execution ``thunk()`` runs, in
+    order: the jobs a query runs while it is built (a checkpoint, say)
+    as well as the ones its actions run.  Read from the session's SQL
+    status store, which is kept with the UI off too and lists
+    executions by ascending id."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    seq = store.executionsList()
+    before = seq.apply(seq.size() - 1).executionId() if seq.size() else -1
+    thunk()
+    bus.waitUntilEmpty()
+    seq = store.executionsList()
+    plans = []
+    for i in reversed(range(seq.size())):
+        e = seq.apply(i)
+        if e.executionId() <= before:
+            break
+        plans.append(e.physicalPlanDescription())
+    return plans[::-1]

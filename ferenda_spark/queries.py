@@ -2912,8 +2912,9 @@ def q_sparql_construct_annotations(spark, sf_dir):
     plan: the per-doc constant uri becomes ?root constrained to typed
     documents.  Scale shape: each triple pattern is a pred-filtered
     scan (partition-prunable on pred_bucket), patterns join in
-    selectivity order, the isPartOf* closure is depth-bounded
-    self-joins of the tiny part-edge subset — never a driver loop."""
+    selectivity order, the isPartOf* closure is an exact fixpoint over
+    the tiny part-edge subset, materialized round by round on the
+    executors — no rows reach the driver."""
     from ferenda_spark.operators.sparql import sparql_query
     g = _kg_graph(spark, sf_dir)
     rq = f"""

@@ -243,14 +243,22 @@ def test_skeleton_entities(triples):
     assert not (stub_uris & described)
 
 
-def test_annotation_closure(triples):
-    ann = canonicalize.annotation_closure(triples)
-    rows = ann.collect()
+def test_part_of_closure_with_inbound_refs(triples):
+    """J3 (annotations.rq) through the SPARQL compiler: a document's
+    isPartOf closure plus inbound references to any of its parts."""
+    from ferenda_spark import ns
+    from ferenda_spark.operators.sparql import sparql_query
+
+    rows = sparql_query(triples, f"""
+        SELECT ?doc ?part ?ref WHERE {{
+          ?part <{ns.DCT_ISPARTOF}>+ ?doc .
+          OPTIONAL {{ ?ref <{ns.DCT_REFERENCES}> ?part }}
+          FILTER (!CONTAINS(?doc, "#")) }}""").collect()
     # S1.1 sections must appear in their *document's* closure (depth 2)
-    deep = [r for r in rows if r.part_uri.endswith("#S1.1")]
-    assert deep and all("#" not in r.doc_uri for r in deep)
+    deep = [r for r in rows if r.part.endswith("#S1.1")]
+    assert deep and all("#" not in r.doc for r in deep)
     # inbound refs: some section is referenced by another doc's section
-    assert any(r.inbound_ref for r in rows)
+    assert any(r.ref for r in rows)
 
 
 def test_lookup_labels_fuzzy(spark):

@@ -377,6 +377,9 @@ def test_simhash_prod_caps_hot_buckets(spark):
 # the read path over a pipeline.run-written triple log
 
 PARTITION_FILTERS = re.compile(r"PartitionFilters: \[([^\]]*)\]")
+# one parquet scan's details in a formatted plan
+PARQUET_SCAN = re.compile(r"^\(\d+\) Scan parquet.*?(?=^\(\d+\) |\Z)",
+                          re.M | re.S)
 
 
 @pytest.fixture(scope="module")
@@ -394,45 +397,67 @@ def kg_log(spark, tmp_path_factory):
 
 
 def _read_path_requests(triples):
-    """The benchmark's kind of requests over ``triples``: a BGP join, an
-    isPartOf+ path to a document with parts, and a faceted pivot."""
+    """The benchmark's kind of requests over ``triples``, each as a
+    function that builds its DataFrame: a BGP join, an isPartOf+ path to
+    a document with parts, and a faceted pivot."""
     from ferenda_spark import ns
     from ferenda_spark.operators import api
     from ferenda_spark.operators.sparql import sparql_query
 
     doc = (triples.where(F.col("pred") == ns.DCT_ISPARTOF)
            .select("obj").orderBy("obj").first().obj)
-    select = sparql_query(triples, f"""
-        SELECT ?doc ?title ?pub WHERE {{
-          ?doc <{ns.DCT_PUBLISHER}> ?pub ; <{ns.DCT_TITLE}> ?title }}""")
-    path = sparql_query(triples, f"""
-        SELECT ?part WHERE {{ ?part <{ns.DCT_ISPARTOF}>+ <{doc}> }}""")
-    facet = api._faceted_pivot(
-        triples, {"dcterms_publisher": "*/ext/network-working-group"})
-    return select, path, facet
+    return [
+        lambda: sparql_query(triples, f"""
+            SELECT ?doc ?title ?pub WHERE {{
+              ?doc <{ns.DCT_PUBLISHER}> ?pub ; <{ns.DCT_TITLE}> ?title }}"""),
+        lambda: sparql_query(triples, f"""
+            SELECT ?part WHERE {{ ?part <{ns.DCT_ISPARTOF}>+ <{doc}> }}"""),
+        lambda: api._faceted_pivot(
+            triples, {"dcterms_publisher": "*/ext/network-working-group"}),
+    ]
+
+
+def _run(spark, build):
+    """(the physical plan of every execution, the rows) of building one
+    request and collecting it.  Building a path query already runs
+    jobs: its closure materializes the edge set and each round."""
+    rows = []
+    executed = plans.executed_plans(
+        spark, lambda: rows.extend(build().collect()))
+    return executed, rows
+
+
+def _partition_filters(executed):
+    """The partition filters of every parquet scan in the plans, '' for
+    a scan without any (the formatted plan then omits the entry)."""
+    return [m.group(1) if m else ""
+            for plan in executed for scan in PARQUET_SCAN.findall(plan)
+            for m in [PARTITION_FILTERS.search(scan)]]
 
 
 def test_read_path_scans_prune_pred_bucket(spark, kg_log):
-    """Every scan of a pattern, a path and a faceted pivot with a
-    parameter reads only its predicates' pred_bucket partitions."""
+    """Every scan that a pattern, a path (its closure's edge scan
+    included) and a faceted pivot with a parameter run reads only its
+    predicates' pred_bucket partitions."""
     from ferenda_spark import pipeline
 
     cur = pipeline.current_triples(spark.read.parquet(kg_log))
-    for df in _read_path_requests(cur):
-        filters = PARTITION_FILTERS.findall(plans.explain_str(df))
+    for build in _read_path_requests(cur):
+        filters = _partition_filters(_run(spark, build)[0])
         assert filters and all("pred_bucket" in f for f in filters), \
             filters
 
 
 def test_view_requests_reuse_latest_index(spark, kg_log):
     """A request over ``current_triples`` reads the view's materialized
-    (url, latest commit_ts) index: its plan never re-aggregates
+    (url, latest commit_ts) index: no job it runs re-aggregates
     max(commit_ts) over the log."""
     from ferenda_spark import pipeline
 
     cur = pipeline.current_triples(spark.read.parquet(kg_log))
-    for df in (cur,) + _read_path_requests(cur):
-        assert "max(commit_ts" not in plans.explain_str(df, "extended")
+    for build in [lambda: cur] + _read_path_requests(cur):
+        for plan in _run(spark, build)[0]:
+            assert "max(commit_ts" not in plan
 
 
 def test_sparql_without_pred_bucket_answers_the_same(spark, kg_log):
@@ -441,9 +466,11 @@ def test_sparql_without_pred_bucket_answers_the_same(spark, kg_log):
     log = spark.read.parquet(kg_log)
     for pruned, plain in zip(_read_path_requests(log),
                              _read_path_requests(log.drop("pred_bucket"))):
-        assert any(PARTITION_FILTERS.findall(plans.explain_str(pruned)))
-        assert not any(PARTITION_FILTERS.findall(plans.explain_str(plain)))
-        assert sorted(pruned.collect()) == sorted(plain.collect())
+        pruned_plans, pruned_rows = _run(spark, pruned)
+        plain_plans, plain_rows = _run(spark, plain)
+        assert any(_partition_filters(pruned_plans))
+        assert not any(_partition_filters(plain_plans))
+        assert sorted(pruned_rows) == sorted(plain_rows)
 
 
 def _paging_cases(spark):
@@ -516,3 +543,20 @@ def test_api_page_and_total_in_one_job(spark, monkeypatch):
         assert r["totalResults"] == n_text, name
     # the cases are not vacuous
     assert expected == [(10, 5), (10, 5), (0, 0), (0, 0)]
+
+
+def test_advanced_query_pages_without_an_issued_field(spark):
+    """A facet config without dcterms_issued pages by subject: every
+    page comes back, in subject order, with the full total."""
+    from ferenda_spark.operators import api
+
+    _, triples, _, _, _, _ = _paging_cases(spark)[0]
+    fields = [("dcterms_title", "http://purl.org/dc/terms/title", "text"),
+              ("dcterms_publisher", "http://purl.org/dc/terms/publisher",
+               "uri")]
+    iris = []
+    for page in range(8):
+        r = api.advanced_query(triples, fields, {}, page=page, page_size=4)
+        assert r["totalResults"] == 30
+        iris += [item["iri"] for item in r["items"]]
+    assert iris == [f"http://x/{i:03d}" for i in range(30)]

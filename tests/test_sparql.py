@@ -5,6 +5,7 @@ res/sparql/annotations.rq)."""
 
 import pytest
 
+from ferenda_spark.operators import sparql
 from ferenda_spark.operators.sparql import (Pattern, parse_sparql,
                                             sparql_query)
 
@@ -30,7 +31,8 @@ def test_parse_reference_annotations_rq():
     assert [(p.s.value, p.p.value, p.o.value) for p in g.patterns] == \
         [("s", "p", "o")]
     (left, right), = g.unions
-    assert left.patterns[0].path == (0, None)   # isPartOf*
+    (seq,) = left.patterns[0].p.value.seqs      # isPartOf*
+    assert seq.elts[0].quant == (0, None)
     assert left.patterns[0].o.value == "http://ex.org/doc/1"
     assert right.patterns[1].p.value == DCT + "references"
 
@@ -214,6 +216,13 @@ def test_group_by_count(graph):
     assert rows["http://purl.org/dc/terms/isPartOf"] == 2
     assert rows["rdf:type"] == 2 and rows[DCT + "title"] == 3
 
+
+def test_aggregate_projects_only_selected_vars(graph):
+    """A GROUP BY variable that is not selected is not in the result."""
+    df = sparql_query(graph, """SELECT (COUNT(*) AS ?n)
+        WHERE { ?s ?p ?o } GROUP BY ?p""")
+    assert df.columns == ["n"]
+    assert sorted(r.n for r in df.collect()) == [1, 2, 2, 3]
 
 def test_count_distinct_global(graph):
     row, = sparql_query(
@@ -472,6 +481,27 @@ def test_path_quantifier_bounds(graph):
     assert sorted(r.p for r in rows) == [
         "http://e/d1", "http://e/d1#S1", "http://e/d1#S1.1"]
 
+
+def _chain(spark, n):
+    """http://e/c0 <- c1 <- ... <- cn along dcterms:isPartOf."""
+    return spark.createDataFrame(
+        [(f"http://e/c{i}", DCT + "isPartOf", f"http://e/c{i - 1}")
+         for i in range(1, n + 1)], "subj string, pred string, obj string")
+
+
+def test_path_closure_raises_at_the_round_cap(spark, monkeypatch):
+    """A closure never returns part of its answer: a chain longer than
+    the round cap raises, one within it comes back whole."""
+    monkeypatch.setattr(sparql, "_CLOSURE_MAX_ROUNDS", 4)
+    q = f"SELECT ?x WHERE {{ ?x <{DCT}isPartOf>+ <http://e/c0> }}"
+    assert len(sparql_query(_chain(spark, 4), q).collect()) == 4
+    with pytest.raises(RuntimeError, match="_CLOSURE_MAX_ROUNDS"):
+        sparql_query(_chain(spark, 12), q)
+
+
+def test_path_quantifier_must_not_be_empty():
+    with pytest.raises(ValueError, match="empty path quantifier"):
+        parse_sparql(f"SELECT ?x WHERE {{ ?x <{DCT}isPartOf>{{3,2}} ?y }}")
 
 def test_filter_in_and_iri_equality(graph):
     rows = sparql_query(graph, """PREFIX dct: <http://purl.org/dc/terms/>

@@ -24,38 +24,45 @@ DCT = "http://purl.org/dc/terms/"
 # naive evaluator (pure Python, written against the SPARQL spec subset —
 # intentionally shares NO code with the compiler)
 
-DEPTH = 3
-
-
-def _naive_closure(edges, lo, hi):
-    hi = DEPTH if hi is None else hi
-    by_len = {1: set(edges)}
-    for ln in range(2, hi + 1):
-        by_len[ln] = {(a, d) for (a, b) in by_len[ln - 1]
-                      for (c, d) in edges if b == c}
-    out = set()
-    for ln in range(max(lo, 1), hi + 1):
-        out |= by_len.get(ln, set())
-    if lo == 0:
-        out |= {(n, n) for e in edges for n in e}
+def _naive_closure(edges, lo, hi, ends=()):
+    """Pairs joined by a walk of lo..hi edges (hi None: unbounded).
+    Zero-length walks pair each constant endpoint in ``ends`` with
+    itself, or, without one, each node of the edge set.  Walks are
+    enumerated by length until the length-k pair sets repeat."""
+    zero = {(c, c) for c in ends} or {(n, n) for e in edges for n in e}
+    out = set(zero) if lo == 0 else set()
+    level, seen, length = set(edges), set(), 1
+    while hi is None or length <= hi:
+        if length >= lo:
+            if frozenset(level) in seen:
+                break
+            seen.add(frozenset(level))
+            out |= level
+        level = {(a, d) for (a, b) in level for (c, d) in edges if b == c}
+        length += 1
     return out
 
 
-def _naive_elt_edges(triples, elt):
+def _naive_elt_edges(triples, elt, ends=()):
     if elt.neg is not None:
         base = {(s, o) for (s, p, o) in triples if p not in elt.neg}
     elif elt.group is not None:
-        base = _naive_alt_edges(triples, elt.group)
+        base = _naive_alt_edges(triples, elt.group,
+                                () if elt.quant else ends)
     else:
         base = {(s, o) for (s, p, o) in triples if p == elt.iri}
     if elt.inverse:
         base = {(o, s) for (s, o) in base}
     if elt.quant is not None:
-        base = _naive_closure(base, *elt.quant)
+        base = _naive_closure(base, *elt.quant, ends)
     return base
 
 
-def _naive_alt_edges(triples, alt):
+def _naive_alt_edges(triples, alt, ends=()):
+    """``ends``: the pattern's constant endpoints, which only the sole
+    element of a path sees."""
+    if len(alt.seqs) == 1 and len(alt.seqs[0].elts) == 1:
+        return _naive_elt_edges(triples, alt.seqs[0].elts[0], ends)
     out = set()
     for seq in alt.seqs:
         acc = None
@@ -70,13 +77,9 @@ def _naive_alt_edges(triples, alt):
 def _match_pattern(triples, pat, binding):
     """All extensions of ``binding`` by one solution of ``pat``."""
     out = []
-    if pat.p.kind == "path" or pat.path is not None:
-        if pat.p.kind == "path":
-            pairs = _naive_alt_edges(triples, pat.p.value)
-        else:
-            edges = {(s, o) for (s, p, o) in triples
-                     if p == pat.p.value}
-            pairs = _naive_closure(edges, *pat.path)
+    if pat.p.kind == "path":
+        ends = [t.value for t in (pat.s, pat.o) if t.kind != "var"]
+        pairs = _naive_alt_edges(triples, pat.p.value, ends)
         cands = [((s, o), ((pat.s, s), (pat.o, o)))
                  for (s, o) in sorted(pairs)]
     else:
@@ -254,6 +257,10 @@ QUERY_POOL = [
     """SELECT ?x ?y WHERE { ?x !(<%(p0)s>) ?y }""",
     """SELECT ?x ?y WHERE { ?x (<%(p0)s>|^<%(p1)s>)+ ?y }""",
     """SELECT ?x ?y WHERE { ?x <%(p0)s>?/<%(p1)s> ?y }""",
+    """SELECT ?x ?y WHERE { ?x <%(p1)s>{2,} ?y }""",
+    """SELECT ?y WHERE { <http://e/a> <%(p1)s>* ?y }""",
+    # zero-length from a constant that is not in the graph
+    """SELECT ?y WHERE { <http://e/zz> ^<%(p1)s>* ?y }""",
     # EXISTS / NOT EXISTS / MINUS / VALUES
     """SELECT ?s WHERE { ?s <%(p0)s> ?o .
        FILTER NOT EXISTS { ?s <%(p1)s> ?t } }""",
@@ -290,3 +297,39 @@ def test_compiler_agrees_with_naive_evaluator(spark, seed):
         assert got == expected, (
             f"seed={seed} query={q!r}\n got={got}\n expected={expected}\n"
             f" graph={triples}")
+
+
+# A 13-edge isPartOf chain n0 <- n1 <- ... <- n13 with a cycle (n5 is
+# also part of n13), deeper than any fixed unrolling of a closure would
+# reach, plus a references edge and a title on the side.
+ISPARTOF, REFS = DCT + "isPartOf", DCT + "references"
+CHAIN = ([(f"http://e/n{i}", ISPARTOF, f"http://e/n{i - 1}")
+          for i in range(1, 14)]
+         + [("http://e/n5", ISPARTOF, "http://e/n13"),
+            ("http://e/n13", REFS, "http://e/n2"),
+            ("http://e/n0", DCT + "title", "X")])
+
+CHAIN_POOL = [
+    "SELECT ?x ?y WHERE { ?x <%(p)s>* ?y }",
+    "SELECT ?x ?y WHERE { ?x <%(p)s>+ ?y }",
+    "SELECT ?x WHERE { ?x <%(p)s>+ <http://e/n0> }",
+    "SELECT ?x WHERE { ?x <%(p)s>* <http://e/n12> }",
+    "SELECT ?y WHERE { <http://e/n13> <%(p)s>* ?y }",
+    "SELECT ?y WHERE { <http://e/n1> <%(p)s>+ ?y }",
+    "SELECT ?y WHERE { <http://e/n0> ^<%(p)s>+ ?y }",
+    "SELECT ?x ?y WHERE { ?x <%(p)s>{2,} ?y }",
+    "SELECT ?x ?y WHERE { ?x <%(p)s>{2,9} ?y }",
+    "SELECT ?y WHERE { <http://e/n13> (<%(p)s>|<%(r)s>)+ ?y }",
+    "SELECT ?y WHERE { <http://e/absent> ^<%(p)s>* ?y }",
+    "SELECT ?y WHERE { <http://e/absent> <%(p)s>* ?y }",
+]
+
+
+@pytest.mark.parametrize("qt", CHAIN_POOL)
+def test_deep_cyclic_chain_agrees_with_naive_evaluator(spark, qt):
+    df = spark.createDataFrame(CHAIN, "subj string, pred string, obj string")
+    q = qt % {"p": ISPARTOF, "r": REFS}
+    expected = naive_select(CHAIN, q)
+    got = sorted((tuple(r) for r in sparql_query(df, q).collect()),
+                 key=lambda r: tuple(x or "" for x in r))
+    assert got == expected, f"query={q!r}\n got={got}\n expected={expected}"
