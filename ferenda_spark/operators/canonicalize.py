@@ -140,12 +140,30 @@ def incremental_dependency_join(triples_new: DataFrame,
           FIRST appear in this batch (broadcast — the new-doc set is
           batch-sized, never corpus-sized).
 
-    Commit cost is O(new batch) + one narrow column scan of the prior
-    graph's (url, pred, obj) projection — never a full-graph self-join.
-    Rows carry ``from_commit_ts`` (the from-document's version stamp) so
-    the current-version view can drop superseded rows (pipeline.py)."""
+    ``triples_prior`` may be the raw append log of earlier batches or a
+    view of it (``pipeline.current_triples``): when it has a
+    ``commit_ts`` column, each url keeps only the rows of its latest
+    commit, by one ``max(commit_ts) over (partition by url)`` window.
+    The window runs over all of a url's rows before the object-URI
+    filter, so a url whose latest version cites nothing does not fall
+    back to an older version's citations; on a view it keeps every row.
+    The prior documents and the prior object URIs both come from that
+    one windowed frame, so the prior log is read twice (once per side)
+    and never aggregated separately.
+
+    Commit cost is O(new batch) + narrow column scans of the prior
+    graph's (url, commit_ts, pred, obj) projection — never a full-graph
+    self-join.  Rows carry ``from_commit_ts`` (the from-document's
+    version stamp) so the current-version view can drop superseded rows
+    (pipeline.py)."""
     has_ts = "commit_ts" in triples_new.columns
     extra = ("commit_ts",) if has_ts else ()
+
+    if "commit_ts" in triples_prior.columns:
+        latest = F.max("commit_ts").over(Window.partitionBy("url"))
+        triples_prior = (triples_prior.withColumn("_latest_ts", latest)
+                         .where(F.col("commit_ts") == F.col("_latest_ts"))
+                         .drop("_latest_ts"))
 
     objs_new = _dep_objs(triples_new, extra)
     docs_new = triples_new.select(F.col("url").alias("to_url")).distinct()

@@ -21,6 +21,8 @@ broadcast exchange):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -157,7 +159,13 @@ def fused_scalar_triples(extracted: DataFrame,
     Generate.  One map stage instead of one per branch — on a cluster
     that is 4 fewer scans of the extracted table; in local mode it also
     cuts task-launch overhead, which dominates at fixture scale."""
-    e = extracted.where("parse_ok")
+    return _explode_triples(extracted, _triple_array(extra_structs))
+
+
+def _triple_array(extra_structs: list[Column] | None) -> Column:
+    """The fused lift's per-row array<struct> of candidate triples.  It
+    depends only on module constants and ``extra_structs``, so one build
+    serves every batch; building it costs a few thousand py4j calls."""
     classname = _alias_case({a: r["classname"] for a, r in REPOS.items()})
     h = F.col("rfc_header")
     identifier = _identifier_col()
@@ -250,8 +258,13 @@ def fused_scalar_triples(extracted: DataFrame,
 
     citations = F.transform(_arr(F.col("citations")), _citation_struct)
 
-    allt = F.concat(F.array(*fixed), creators, rights, updates, obsoletes,
+    return F.concat(F.array(*fixed), creators, rights, updates, obsoletes,
                     sections, citations, *(extra_structs or []))
+
+
+def _explode_triples(extracted: DataFrame, allt: Column) -> DataFrame:
+    """One row per distinct non-null triple of ``allt`` (built by
+    ``_triple_array``) for each parsed document of ``extracted``."""
     # Set semantics WITHOUT a shuffle: duplicates can only occur within
     # one document (subjects embed the per-url doc_uri), and a doc's
     # triples are all born in this one array — so array_distinct before
@@ -260,7 +273,8 @@ def fused_scalar_triples(extracted: DataFrame,
     # different triples); the former dropDuplicates over the exploded
     # rows shuffled the entire triple log for the same result.
     return (
-        e.select("url", F.explode(F.array_distinct(allt)).alias("t"))
+        extracted.where("parse_ok")
+        .select("url", F.explode(F.array_distinct(allt)).alias("t"))
         .where(F.col("t.obj").isNotNull())
         .select("url", "t.subj", "t.pred", "t.obj", "t.obj_is_uri",
                 "t.obj_lang", "t.obj_datatype")
@@ -272,8 +286,15 @@ def fused_scalar_triples(extracted: DataFrame,
 # ones too big to broadcast go through canonicalize.salted_join
 _LITERAL_DICT_MAX = 10_000
 
+# fused lift expressions kept for distinct dictionaries: a deployment
+# lifts every batch under one dictionary, a test suite under a few
+_LIFT_CACHE_SIZE = 4
 
-def _label_link_structs(commondata_rows: list[dict]):
+# a dictionary row: (uri, label, pred), commondata's columns
+DictRows = tuple[tuple[str, str, str], ...]
+
+
+def _label_link_structs(dict_rows: DictRows) -> list[Column]:
     """J1 as pure column logic: the label->URI dictionary becomes a
     literal map expression — the columnar twin of the reference's
     in-memory graph lookup (documentrepository.py:439-485), valid
@@ -285,8 +306,8 @@ def _label_link_structs(commondata_rows: list[dict]):
         ("publisher", ns.FOAF_NAME, ns.DCT_PUBLISHER),
         ("category", ns.BIBO_IDENTIFIER, ns.DCT_SUBJECT),
     ]:
-        entries = [(r["label"], r["uri"]) for r in commondata_rows
-                   if r["pred"] == lookup_pred]
+        entries = [(label, uri) for uri, label, p in dict_rows
+                   if p == lookup_pred]
         label = h[field_name]
         if entries:
             flat = []
@@ -303,6 +324,16 @@ def _label_link_structs(commondata_rows: list[dict]):
     return out
 
 
+@functools.lru_cache(maxsize=_LIFT_CACHE_SIZE)
+def _fused_lift(dict_rows: DictRows) -> Column:
+    """The fused lift's array<struct> with the dictionary compiled in,
+    built once per dictionary.  A Column is an unresolved expression
+    tree, so one build applies to every batch's ``extracted``; the key
+    is the dictionary's rows in collect order, so any other dictionary
+    (or order) builds its own."""
+    return _triple_array(_label_link_structs(dict_rows))
+
+
 def all_triples(extracted: DataFrame, commondata: DataFrame) -> DataFrame:
     """The full distilled graph; set semantics (reference distilled
     graphs are triple SETS) — shuffle-free in the fused branch (per-
@@ -311,18 +342,17 @@ def all_triples(extracted: DataFrame, commondata: DataFrame) -> DataFrame:
     Strategy: when the entity dictionary is small enough to collect
     (it is config-scale data in the reference — res/extra/*.ttl), the
     J1 label lookup compiles into the fused single-pass emission as a
-    literal map => the WHOLE lift is one map stage + one dedup shuffle.
-    Otherwise fall back to the broadcast-join branch (and for
-    dictionaries beyond broadcast size, canonicalize.salted_join)."""
-    dict_rows = None
-    if commondata.count() <= _LITERAL_DICT_MAX:
-        dict_rows = [r.asDict() for r in commondata.collect()]
-
-    if dict_rows is not None:
-        # fused_scalar_triples already enforces set semantics per
-        # document via pre-explode array_distinct — no dedup shuffle
-        return fused_scalar_triples(
-            extracted, extra_structs=_label_link_structs(dict_rows))
+    literal map => the WHOLE lift is one map stage, its expression
+    built once per dictionary (``_fused_lift``).  Reading the dictionary
+    is one bounded collect.  Otherwise fall back to the broadcast-join
+    branch (and for dictionaries beyond broadcast size,
+    canonicalize.salted_join)."""
+    rows = commondata.limit(_LITERAL_DICT_MAX + 1).collect()
+    if len(rows) <= _LITERAL_DICT_MAX:
+        # _explode_triples enforces set semantics per document via
+        # pre-explode array_distinct — no dedup shuffle
+        key = tuple((r["uri"], r["label"], r["pred"]) for r in rows)
+        return _explode_triples(extracted, _fused_lift(key))
     # join-branch: label_link rows come from a second scan, so the
     # cross-source dedup still needs the shuffle (non-bench path,
     # dictionaries too big to compile into the fused expression)

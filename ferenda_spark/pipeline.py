@@ -7,14 +7,17 @@ Stage layout mirrors the reference's parse/relate actions
 Spark scheduler:
 
   1. pending = anti-join of web_pages against the entries checkpoint
-     (exact resume; checkpoint.py)
+     (exact resume; checkpoint.py), read by ONE aggregate that gives
+     both the row count (0 => no-op resume) and the batch id
   2. extract: one narrow mapInPandas pass (operators/extract.py)
   3. triples: fused single-pass columnar lift over the persisted
-     extracted table (operators/triples.py)
+     extracted table, its expression built once per entity dictionary
+     (operators/triples.py)
   4. relate: INCREMENTAL dependency maintenance — the new batch's
      object URIs vs all documents, plus the prior graph's object URIs
      vs this batch's brand-new documents (broadcast); never a
-     full-graph self-join per commit (canonicalize.py)
+     full-graph self-join per commit.  It reads the raw prior log and
+     keeps each url's latest version with one window (canonicalize.py)
   5. write: triples partitioned by (batch, pred_bucket, crawl_date) —
      the Iceberg layout from SURVEY §1.3; parquet stand-in locally.
      The rows are first hash-clustered on (pred_bucket, crawl_date)
@@ -70,6 +73,11 @@ from ferenda_spark.operators.triples import all_triples
 
 N_PRED_BUCKETS = 16
 
+# the per-batch metrics table's columns, one row per commit
+_METRICS_COLS = (("batch", "string"), ("n_extracted", "long"),
+                ("n_triples", "long"), ("n_dependencies", "long"),
+                ("commit_ts", "double"), ("wall_s", "double"))
+
 
 def pred_bucket(pred: Column) -> Column:
     """The ``pred_bucket`` partition value of a predicate.  The writer
@@ -115,10 +123,8 @@ def with_partition_cols(triples: DataFrame, warc_ts_by_url: DataFrame) -> DataFr
     )
 
 
-def batch_id(todo: DataFrame) -> str:
-    """Deterministic id of a pending set: order-insensitive hash of its
-    (url, content) keys.  The same failed batch re-runs under the same
-    id => dynamic partition overwrite makes the retry idempotent."""
+def _pending_batch(todo: DataFrame) -> tuple[int, str]:
+    """(row count, ``batch_id``) of a pending set, from one aggregate."""
     # per-row hash reduced mod p, summed as decimal(38,0): overflow-free
     # (ANSI mode) up to ~10^28 rows
     p = 1_000_000_007
@@ -127,24 +133,27 @@ def batch_id(todo: DataFrame) -> str:
         F.sum(F.pmod(F.xxhash64("url", "html"), F.lit(p))
               .cast("decimal(38,0)")).alias("h")).collect()[0]
     h = int(row["h"] or 0) % (1 << 48)
-    return f"{row['n']}x{h:012x}"
+    return row["n"], f"{row['n']}x{h:012x}"
 
 
-def _latest_versions(triples_all: DataFrame) -> DataFrame:
-    """(url, commit_ts) of each url's latest committed version."""
-    return triples_all.groupBy("url").agg(
-        F.max("commit_ts").alias("commit_ts"))
+def batch_id(todo: DataFrame) -> str:
+    """Deterministic id of a pending set: order-insensitive hash of its
+    (url, content) keys.  The same failed batch re-runs under the same
+    id => dynamic partition overwrite makes the retry idempotent."""
+    return _pending_batch(todo)[1]
 
 
 def _latest_index(triples_all: DataFrame) -> DataFrame:
-    """``_latest_versions`` computed now, by one job, and held in the
-    executors' block stores.
+    """(url, commit_ts) of each url's latest committed version, computed
+    now, by one job, and held in the executors' block stores.
 
     ``localCheckpoint`` and not ``cache()``: the cache manager matches a
     plan over ``spark.read.parquet(path)`` by its root path, so a view
     opened after a later commit would be served the earlier view's
     stale index.  A checkpoint belongs to the DataFrame that made it."""
-    return _latest_versions(triples_all).localCheckpoint()
+    return (triples_all.groupBy("url")
+            .agg(F.max("commit_ts").alias("commit_ts"))
+            .localCheckpoint())
 
 
 def current_triples(triples_all: DataFrame) -> DataFrame:
@@ -213,7 +222,8 @@ def run(
     if input_partitions:
         todo = todo.repartition(input_partitions, "url")
 
-    if todo.isEmpty():
+    n_todo, batch = _pending_batch(todo)
+    if n_todo == 0:
         # no-op resume: touch nothing (the destructive alternative —
         # overwriting the table with an empty batch — is exactly what
         # the checkpoint contract forbids)
@@ -223,7 +233,6 @@ def run(
             n_dependencies=0,
             wall_s=time.time() - t0, batch=None)
 
-    batch = batch_id(todo)
     commit_ts = time.time()
 
     obs_ext = Observation()
@@ -249,29 +258,29 @@ def run(
      .parquet(f"{out_dir}/triples"))
     n_triples = int(obs_tri.get["n"])
 
-    # incremental relate: scans the new batch (partition-pruned) plus a
-    # narrow projection of the prior log — NOT a full self-join
+    # incremental relate: scans the new batch (partition-pruned) plus
+    # narrow projections of the prior log — NOT a full self-join.  The
+    # raw prior log, not current_triples: relate keeps each url's latest
+    # rows by a window over the scan it reads anyway, where the view
+    # would cost an extra job over the log
     triples_all = spark.read.parquet(f"{out_dir}/triples")
-    triples_new = triples_all.where(F.col("batch") == batch)
-    # lazy, not current_triples: relate is the only consumer, so an
-    # eagerly built index would cost a job and save none
-    prior_log = triples_all.where(F.col("batch") != batch)
-    triples_prior = prior_log.join(_latest_versions(prior_log),
-                                   ["url", "commit_ts"], "left_semi")
     obs_dep = Observation()
     deps = (canonicalize.incremental_dependency_join(
-        triples_new, triples_prior)
+        triples_all.where(F.col("batch") == batch),
+        triples_all.where(F.col("batch") != batch))
         .withColumn("batch", F.lit(batch))
         .observe(obs_dep, F.count(F.lit(1)).alias("n")))
     (deps.write.mode("overwrite").partitionBy("batch")
      .parquet(f"{out_dir}/dependencies"))
     n_deps = int(obs_dep.get["n"])
 
-    metrics = spark.createDataFrame(
-        [(batch, n_extracted, n_triples, n_deps, commit_ts,
-          time.time() - t0)],
-        "batch string, n_extracted long, n_triples long, "
-        "n_dependencies long, commit_ts double, wall_s double")
+    # built in the JVM: a createDataFrame row would be a Python-RDD
+    # scan, which needs a Python worker to write one row
+    values = (batch, n_extracted, n_triples, n_deps, commit_ts,
+              time.time() - t0)
+    metrics = spark.range(1).select(
+        *[F.lit(v).cast(t).alias(c)
+          for (c, t), v in zip(_METRICS_COLS, values)])
     (metrics.write.mode("overwrite").partitionBy("batch")
      .parquet(f"{out_dir}/metrics"))
 

@@ -4,6 +4,7 @@ from ferenda_spark.plans.audit import (  # noqa: F401
     explain_str,
     has_broadcast_hash_join,
     has_pushed_filter,
+    partition_filters,
     read_schema_columns,
     shuffle_exchange_count,
     wholestage_codegen_count,

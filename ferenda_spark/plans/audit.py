@@ -24,13 +24,48 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+# one parquet scan's details in a formatted plan (``explain_str``, or an
+# execution's ``physicalPlanDescription``)
+PARQUET_SCAN = re.compile(r"^\(\d+\) Scan parquet.*?(?=^\(\d+\) |\Z)",
+                          re.M | re.S)
+
+
+def _scan_entries(plan: str, entry: str) -> list[str]:
+    """The ``entry`` list (e.g. ``PartitionFilters``) of every parquet
+    scan in a formatted plan, '' for a scan without one: the formatted
+    plan omits an empty entry, so a scan that is not pruned still
+    counts.  An entry is read to the end of its line, since a filter
+    such as ``In(id, [1,3])`` nests brackets in the list."""
+    pattern = re.compile(rf"^{entry}: \[(.*)\]$", re.M)
+    return [m.group(1) if m else ""
+            for scan in PARQUET_SCAN.findall(plan)
+            for m in [pattern.search(scan)]]
+
+
+def final_scans(plan: str) -> list[str]:
+    """The parquet scans of a formatted plan as it ran.  For an
+    adaptive plan those are the ones in its Final Plan: its Initial Plan
+    also lists the scans that exchange reuse removed at run time."""
+    scans = PARQUET_SCAN.findall(plan)
+    if "== Final Plan ==" not in plan:
+        return scans
+    tree = plan.split("== Final Plan ==", 1)[1].split(
+        "== Initial Plan ==", 1)[0]
+    ids = set(re.findall(r"Scan parquet [^\n(]*\((\d+)\)", tree))
+    return [s for s in scans if re.match(r"\((\d+)\)", s).group(1) in ids]
+
+
+def partition_filters(plans: list[str]) -> list[str]:
+    """The partition filters of every parquet scan in ``plans``."""
+    return [f for plan in plans
+            for f in _scan_entries(plan, "PartitionFilters")]
+
+
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
-    """True iff a scan's PushedFilters mentions ``fragment``."""
-    plan = explain_str(df)
-    for m in re.finditer(r"PushedFilters: \[([^\]]*)\]", plan):
-        if fragment in m.group(1):
-            return True
-    return False
+    """True iff the plan has parquet scans and every one of them has
+    ``fragment`` in its PushedFilters."""
+    entries = _scan_entries(explain_str(df), "PushedFilters")
+    return bool(entries) and all(fragment in e for e in entries)
 
 
 def read_schema_columns(df: DataFrame) -> list[list[str]]:
@@ -44,13 +79,11 @@ def read_schema_columns(df: DataFrame) -> list[list[str]]:
 
 
 def has_partition_filter(df: DataFrame, fragment: str) -> bool:
-    """True iff a scan's PartitionFilters mentions ``fragment`` —
-    i.e. the filter prunes whole partitions, not just row groups."""
-    plan = explain_str(df)
-    for m in re.finditer(r"PartitionFilters: \[([^\]]*)\]", plan):
-        if fragment in m.group(1):
-            return True
-    return False
+    """True iff the plan has parquet scans and every one of them has
+    ``fragment`` in its PartitionFilters — i.e. the filter prunes whole
+    partitions, not just row groups, on every read of the table."""
+    filters = partition_filters([explain_str(df)])
+    return bool(filters) and all(fragment in f for f in filters)
 
 
 def has_broadcast_hash_join(df: DataFrame) -> bool:

@@ -161,6 +161,134 @@ def test_incremental_deps_scan_only_new_batch(spark, tmp_path_factory):
     assert got == want
 
 
+def _prior_and_next(spark):
+    """(prior pages, next pages) of a two-commit log: the next commit
+    adds two pages, one citing a prior page and one cited by prior
+    pages, so both sides of the incremental relate have rows."""
+    pages = web_pages_df(spark, 30)
+    urls = [r.url for r in pages.select("url").collect()]
+    return pages.where(~F.col("url").isin(urls[7], urls[14])), pages
+
+
+def _commit(spark, pages, out):
+    return pipeline.run(spark, pages, commondata_df(spark), out,
+                        entries_path=f"{out}/entries")
+
+
+def test_incremental_commit_shape(spark, tmp_path):
+    """A second, non-empty commit runs at most 9 SQL executions, writes
+    its metrics row without a Python-RDD scan, and its relate reads the
+    prior log (the ``NOT (batch = ...)`` partition) at most twice."""
+    from ferenda_spark.plans import audit
+
+    out = str(tmp_path)
+    prior, pages = _prior_and_next(spark)
+    _commit(spark, prior, out)
+    res = []
+    executed = audit.executed_plans(
+        spark, lambda: res.append(_commit(spark, pages, out)))
+    assert res[0].n_extracted == 2 and res[0].n_dependencies > 0
+
+    assert len(executed) <= 9, [p.splitlines()[1] for p in executed]
+
+    def write_of(table):
+        plans = [p for p in executed
+                 if "InsertIntoHadoopFsRelationCommand" in p
+                 and f"path={out}/{table}]" in p]
+        assert len(plans) == 1, table
+        return plans[0]
+
+    assert "applySchemaToPythonRDD" not in write_of("metrics")
+    metrics = spark.read.parquet(f"{out}/metrics").schema
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in metrics.fields] == [
+        ("n_extracted", "bigint", True), ("n_triples", "bigint", True),
+        ("n_dependencies", "bigint", True), ("commit_ts", "double", True),
+        ("wall_s", "double", True), ("batch", "string", True)]
+    prior_scans = [s for s in audit.final_scans(write_of("dependencies"))
+                   if "NOT (batch" in s]
+    assert 1 <= len(prior_scans) <= 2, prior_scans
+
+
+def test_relate_on_the_raw_log_keeps_each_urls_latest_version(spark):
+    """X v1 cites N, X v2 cites nothing, then N arrives: relate over the
+    raw prior log equals relate over its current view, and X's
+    superseded citation yields no X -> N row.  A latest-version filter
+    applied after the object-URI filter would keep X v1's citation."""
+    from ferenda_spark import ns
+
+    x, y, n = "http://x/doc", "http://y/doc", "http://n/doc"
+    schema = ("url string, subj string, pred string, obj string, "
+              "obj_is_uri boolean, commit_ts double")
+    log = spark.createDataFrame([
+        (x, x, ns.DCT_REFERENCES, f"{n}#S1", True, 1.0),
+        (x, x, ns.DCT_TITLE, "x v1", False, 1.0),
+        (y, y, ns.DCT_REFERENCES, n, True, 1.0),
+        (x, x, ns.RDF_TYPE, ns.FOAF_DOCUMENT, True, 2.0),
+        (x, x, ns.DCT_TITLE, "x v2", False, 2.0),
+    ], schema)
+    new = spark.createDataFrame([
+        (n, n, ns.DCT_TITLE, "n", False, 3.0),
+        (n, n, ns.DCT_REFERENCES, y, True, 3.0),
+    ], schema)
+
+    def rows(prior):
+        return sorted(tuple(r) for r in
+                      canonicalize.incremental_dependency_join(new, prior)
+                      .collect())
+
+    raw = rows(log)
+    assert raw == rows(pipeline.current_triples(log))
+    assert raw == [(n, y, 3.0), (y, n, 1.0)]
+
+
+# columns that hold a commit's clock time, not its content
+_CLOCK_COLS = ("commit_ts", "from_commit_ts", "wall_s", "started_at")
+
+
+def _table_rows(spark, out, table):
+    df = spark.read.parquet(f"{out}/{table}")
+    df = df.drop(*[c for c in _CLOCK_COLS if c in df.columns])
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_crash_before_the_entries_append_resumes_exactly(
+        spark, tmp_path, monkeypatch):
+    """A commit that dies after its triple, dependency and metrics
+    writes but before the entries append is re-run under the same batch
+    id and leaves every table as an uninterrupted run does."""
+    prior, pages = _prior_and_next(spark)
+    fresh, crashed = str(tmp_path / "fresh"), str(tmp_path / "crashed")
+    for out in (fresh, crashed):
+        _commit(spark, prior, out)
+    want = _commit(spark, pages, fresh)
+
+    real = checkpoint.append_entries
+
+    def crash_once(entries, path):
+        monkeypatch.setattr(checkpoint, "append_entries", real)
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(checkpoint, "append_entries", crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _commit(spark, pages, crashed)
+    for table in ("triples", "dependencies", "metrics"):
+        batches = spark.read.parquet(f"{crashed}/{table}") \
+            .select("batch").distinct().collect()
+        assert want.batch in {r.batch for r in batches}, table
+
+    got = _commit(spark, pages, crashed)
+    assert got.batch == want.batch
+    assert (got.n_extracted, got.n_triples, got.n_dependencies) == \
+        (want.n_extracted, want.n_triples, want.n_dependencies)
+    for table in ("extracted", "triples", "dependencies", "metrics",
+                  "entries"):
+        assert _table_rows(spark, crashed, table) == \
+            _table_rows(spark, fresh, table), table
+    metrics = spark.read.parquet(f"{crashed}/metrics")
+    assert metrics.count() == metrics.select("batch").distinct().count() == 2
+
+
 def test_triples_partition_layout(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("layout"))
     # the fixture's crawl dates repeat every 84 pages, so with three

@@ -17,6 +17,27 @@ def test_filter_pushdown_reaches_scan(spark):
     assert plans.has_pushed_filter(d, "lang")
 
 
+def test_filter_helpers_check_every_scan(spark, tmp_path):
+    """A pruned scan next to an unpruned one of the same table is not
+    "filtered": the formatted plan omits an empty PartitionFilters
+    entry, so a check that any scan matches cannot see the second.  A
+    filter list is read whole, past the brackets an ``In`` nests."""
+    from ferenda_spark.plans import audit
+
+    path = str(tmp_path / "t")
+    (spark.range(4).withColumn("part", F.col("id") % 2)
+     .withColumn("x", F.col("id") * 2)
+     .write.partitionBy("part").parquet(path))
+    t = spark.read.parquet(path)
+    pruned = t.where("part = 1 AND id IN (1, 3) AND x > 0")
+    assert audit.has_partition_filter(pruned, "part")
+    assert plans.has_pushed_filter(pruned, "id")
+    assert plans.has_pushed_filter(pruned, "GreaterThan(x,0)")
+    both = pruned.unionByName(t)
+    assert not audit.has_partition_filter(both, "part")
+    assert not plans.has_pushed_filter(both, "id")
+
+
 def test_column_pruning(spark):
     d = (spark.read.parquet(f"{SF}/documents.parquet")
          .select("doc_id", "lang"))
@@ -376,12 +397,6 @@ def test_simhash_prod_caps_hot_buckets(spark):
 # ---------------------------------------------------------------------------
 # the read path over a pipeline.run-written triple log
 
-PARTITION_FILTERS = re.compile(r"PartitionFilters: \[([^\]]*)\]")
-# one parquet scan's details in a formatted plan
-PARQUET_SCAN = re.compile(r"^\(\d+\) Scan parquet.*?(?=^\(\d+\) |\Z)",
-                          re.M | re.S)
-
-
 @pytest.fixture(scope="module")
 def kg_log(spark, tmp_path_factory):
     """A two-commit triple log: the second commit adds pages, so the
@@ -427,14 +442,6 @@ def _run(spark, build):
     return executed, rows
 
 
-def _partition_filters(executed):
-    """The partition filters of every parquet scan in the plans, '' for
-    a scan without any (the formatted plan then omits the entry)."""
-    return [m.group(1) if m else ""
-            for plan in executed for scan in PARQUET_SCAN.findall(plan)
-            for m in [PARTITION_FILTERS.search(scan)]]
-
-
 def test_read_path_scans_prune_pred_bucket(spark, kg_log):
     """Every scan that a pattern, a path (its closure's edge scan
     included) and a faceted pivot with a parameter run reads only its
@@ -443,7 +450,7 @@ def test_read_path_scans_prune_pred_bucket(spark, kg_log):
 
     cur = pipeline.current_triples(spark.read.parquet(kg_log))
     for build in _read_path_requests(cur):
-        filters = _partition_filters(_run(spark, build)[0])
+        filters = plans.partition_filters(_run(spark, build)[0])
         assert filters and all("pred_bucket" in f for f in filters), \
             filters
 
@@ -468,8 +475,8 @@ def test_sparql_without_pred_bucket_answers_the_same(spark, kg_log):
                              _read_path_requests(log.drop("pred_bucket"))):
         pruned_plans, pruned_rows = _run(spark, pruned)
         plain_plans, plain_rows = _run(spark, plain)
-        assert any(_partition_filters(pruned_plans))
-        assert not any(_partition_filters(plain_plans))
+        assert any(plans.partition_filters(pruned_plans))
+        assert not any(plans.partition_filters(plain_plans))
         assert sorted(pruned_rows) == sorted(plain_rows)
 
 

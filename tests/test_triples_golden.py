@@ -69,3 +69,40 @@ def test_triples_schema_invariants(spark, extracted):
     assert t.where("subj IS NULL OR pred IS NULL OR obj IS NULL").count() == 0
     # every URI object either matches a scheme or is a fragment of one
     assert t.where("obj_is_uri AND obj NOT RLIKE '^(https?|ftp)://'").count() == 0
+
+
+def test_lift_memo_is_keyed_by_the_dictionary(spark, extracted):
+    """The fused lift's expression is built once per dictionary: a
+    second dictionary (same labels, other URIs) gets its own build, whose
+    label links match a build that bypasses the memo, and lifting again
+    under the first dictionary is a cache hit."""
+    from pyspark.sql import functions as F
+
+    from ferenda_spark import ns
+    from ferenda_spark.operators import triples as T
+
+    first = commondata_df(spark)
+    second = first.withColumn("uri", F.concat("uri", F.lit("/v2")))
+
+    def links(t):
+        return sorted(tuple(r) for r in t.where(
+            F.col("pred").isin(ns.DCT_PUBLISHER, ns.DCT_SUBJECT))
+            .select(*KEY).collect())
+
+    def unmemoized(commondata):
+        rows = tuple((r.uri, r.label, r.pred) for r in commondata.collect())
+        return T.fused_scalar_triples(
+            extracted, extra_structs=T._label_link_structs(rows))
+
+    T._fused_lift.cache_clear()
+    a = links(all_triples(extracted, first))
+    b = links(all_triples(extracted, second))
+    assert T._fused_lift.cache_info().misses == 2
+    assert a and a != b
+    assert any(r[3].endswith("/v2") for r in b)
+    assert a == links(unmemoized(first))
+    assert b == links(unmemoized(second))
+
+    hits = T._fused_lift.cache_info().hits
+    assert links(all_triples(extracted, first)) == a
+    assert T._fused_lift.cache_info().hits == hits + 1
