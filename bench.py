@@ -1,5 +1,6 @@
 """Benchmark driver: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the machine's
+CPU count, as session.get_spark).
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -31,7 +32,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
 # scaling corpus: big enough that compute dominates local-mode task
 # overhead (~260 core-seconds; see BASELINE.md §4)
 KG_PAGES = int(os.environ.get("SPARK_GRAFT_KG_PAGES", "600000"))

@@ -63,8 +63,12 @@ general, and lagen.nu), plus the common SELECT forms:
   ``STRAFTER`` ('' when the needle is absent), ``IRI()/URI()``,
   ``sameTerm``, ``isBlank``, arithmetic ``+ - * /`` with the usual
   precedence, and ``xsd:`` constructor casts compiled as
-  ``try_cast`` (a SPARQL type error is NULL -> filter-false, never
-  an ANSI runtime abort on dirty data)
+  ``try_cast``.  FILTER, BIND and HAVING expressions compile to
+  ``Column``s (``_ExprCompiler``), never to Spark SQL text.  A string
+  compared with a number, or an operand of arithmetic, is read with
+  ``try_cast(... AS DOUBLE)``: a SPARQL type error is NULL ->
+  filter-false (or an unbound BIND variable), never an ANSI runtime
+  abort on dirty data
 * property paths: quantifiers ``p*`` / ``p+`` / ``p?`` / ``p{m,n}``
   (e.g. the reference's ``dcterms:isPartOf{,1}`` in
   prop-annotations.rq), sequence ``p1/p2``, inverse ``^p``,
@@ -120,11 +124,14 @@ Spark shape / scale notes:
 
 from __future__ import annotations
 
+import operator
 import re
 from dataclasses import dataclass, field
+from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, NumericType, StringType
 
 from ferenda_spark.pipeline import where_pred
 
@@ -146,6 +153,7 @@ _TOKEN_RE = re.compile(
     )""",
     re.X | re.I)
 
+_NUM_RE = re.compile(r"-?\d+(\.\d+)?")
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 _SHADOW = "__isuri__"       # prefix of the per-var URI-ness shadow column
 _LANG_SHADOW = "__lang__"   # prefix of the per-var language-tag column
@@ -163,12 +171,6 @@ def _unescape(lit: str) -> str:
     """The value of a quoted SPARQL string token (``\\X`` escapes)."""
     return re.sub(r"\\(.)", lambda m: _ECHAR.get(m.group(1), m.group(1)),
                   lit[1:-1])
-
-
-def _sql_str(value: str) -> str:
-    """A Spark SQL string literal for ``value``.  Spark's parser reads
-    backslash escapes, so backslashes are escaped along with quotes."""
-    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _tokenize(q: str) -> list[str]:
@@ -257,11 +259,15 @@ class Query:
     having: list = field(default_factory=list)   # [token list]
 
 
-class _Parser:
+class _Cursor:
+    """A read position in a token list.  ``expect`` ignores case, so
+    keywords match however the query spells them."""
+    _END = "query"       # what an early end is the end of
+    _EXPECTED = "expected"
+
     def __init__(self, toks: list[str]):
         self.toks = toks
         self.i = 0
-        self.prefixes: dict[str, str] = {}
 
     def peek(self, ahead: int = 0) -> str | None:
         j = self.i + ahead
@@ -270,14 +276,20 @@ class _Parser:
     def next(self) -> str:
         t = self.peek()
         if t is None:
-            raise ValueError("sparql: unexpected end of query")
+            raise ValueError(f"sparql: unexpected end of {self._END}")
         self.i += 1
         return t
 
     def expect(self, tok: str) -> None:
         t = self.next()
         if t.upper() != tok.upper():
-            raise ValueError(f"sparql: expected {tok!r}, got {t!r}")
+            raise ValueError(f"sparql: {self._EXPECTED} {tok!r}, got {t!r}")
+
+
+class _Parser(_Cursor):
+    def __init__(self, toks: list[str]):
+        super().__init__(toks)
+        self.prefixes: dict[str, str] = {}
 
     def _expand_pname(self, t: str) -> str:
         pfx, local = t.split(":", 1)
@@ -300,7 +312,7 @@ class _Parser:
             return Term("iri", RDF_TYPE)
         if ":" in t:
             return Term("iri", self._expand_pname(t))
-        if re.fullmatch(r"-?\d+(\.\d+)?", t):
+        if _NUM_RE.fullmatch(t):
             return Term("lit", t)
         raise ValueError(f"sparql: bad term {t!r}")
 
@@ -771,7 +783,7 @@ class _Parser:
                 if not depth:
                     break
             if (":" in t and not t.startswith(("?", '"', "<"))
-                    and not re.fullmatch(r"-?\d+(\.\d+)?", t)):
+                    and not _NUM_RE.fullmatch(t)):
                 t = "<" + self._expand_pname(t) + ">"
             toks.append(t)
         return toks
@@ -782,207 +794,211 @@ def parse_sparql(q: str) -> Query:
 
 
 # ---------------------------------------------------------------------------
-# FILTER / BIND expression compilation (token list -> Spark SQL string)
+# FILTER / BIND / HAVING expression compilation (token list -> Column)
 
-_FUNCS_2 = {"strstarts": "startswith", "strends": "endswith",
-            "contains": "contains"}
-_FUNCS_1 = {"lcase": "lower", "ucase": "upper", "strlen": "length"}
-_CMP_OPS = ("=", "!=", "<", "<=", ">", ">=")
+# SPARQL function -> (Column function, least and most arguments)
+_FUNCS = {"strstarts": (F.startswith, 2, 2), "strends": (F.endswith, 2, 2),
+          "contains": (F.contains, 2, 2), "regex": (F.regexp, 2, 2),
+          "sameterm": (Column.eqNullSafe, 2, 2),
+          "lcase": (F.lower, 1, 1), "ucase": (F.upper, 1, 1),
+          "strlen": (F.length, 1, 1),
+          "concat": (F.concat, 1, None), "coalesce": (F.coalesce, 1, None),
+          "substr": (F.substr, 2, 3),           # 1-based, like SQL's
+          "replace": (F.regexp_replace, 3, 3)}  # regex-based
+_CMP_OPS = {"=": operator.eq, "!=": operator.ne, "<": operator.lt,
+            "<=": operator.le, ">": operator.gt, ">=": operator.ge}
+_ARITH_OPS = {"+": operator.add, "-": operator.sub, "*": operator.mul,
+              "/": operator.truediv}
 _XSD = "http://www.w3.org/2001/XMLSchema#"
-_XSD_CASTS = {"integer": "BIGINT", "int": "BIGINT", "long": "BIGINT",
-              "short": "BIGINT", "byte": "BIGINT",
-              "nonNegativeInteger": "BIGINT",
-              "decimal": "DOUBLE", "double": "DOUBLE", "float": "DOUBLE",
-              "string": "STRING", "boolean": "BOOLEAN",
-              "date": "DATE", "dateTime": "TIMESTAMP"}
+_XSD_CASTS = {"integer": "bigint", "int": "bigint", "long": "bigint",
+              "short": "bigint", "byte": "bigint",
+              "nonNegativeInteger": "bigint",
+              "decimal": "double", "double": "double", "float": "double",
+              "string": "string", "boolean": "boolean",
+              "date": "date", "dateTime": "timestamp"}
 
 
-class _ExprCompiler:
-    """Recursive-descent compiler for the FILTER/BIND expression subset
-    to an injection-safe Spark SQL string: every emitted fragment is a
-    backticked column, a vetted operator/function, or a literal
-    re-quoted from our own tokenizer."""
+def _among(c: Column, cols: list[Column]) -> bool:
+    return any(c is x for x in cols)
 
-    def __init__(self, toks: list[str], cols: set[str]):
-        self.toks = toks
+
+class _ExprCompiler(_Cursor):
+    """Recursive-descent compiler for the FILTER/BIND/HAVING expression
+    subset to a ``Column``.  Literals become ``F.lit`` values, so no
+    query text is ever parsed as Spark SQL.  Numeric tokens keep the
+    types Spark's SQL parser gives them: an integer is an int literal,
+    a decimal token a DECIMAL.
+
+    Numbers: a string-valued variable that is an operand of ``+ - * /``,
+    or compared with a numeric operand (a number, arithmetic, a numeric
+    ``xsd:`` cast, STRLEN or a numeric variable), is read with
+    ``try_cast(... AS DOUBLE)``.  A value that does not parse is NULL,
+    so the FILTER is false or the BIND variable unbound."""
+    _END = "FILTER expression"
+    _EXPECTED = "FILTER expected"
+
+    def __init__(self, toks: list[str], cols: dict[str, DataType]):
+        super().__init__(toks)
         self.cols = cols
-        self.i = 0
+        self.numbers: list[Column] = []   # numeric operands
+        self.strings: list[Column] = []   # string-valued variables
 
-    def peek(self, ahead: int = 0) -> str | None:
-        j = self.i + ahead
-        return self.toks[j] if j < len(self.toks) else None
+    def _number(self, c: Column) -> Column:
+        self.numbers.append(c)
+        return c
 
-    def next(self) -> str:
-        t = self.peek()
-        if t is None:
-            raise ValueError("sparql: unexpected end of FILTER expression")
-        self.i += 1
-        return t
+    def _as_number(self, c: Column) -> Column:
+        return c.try_cast("double") if _among(c, self.strings) else c
 
-    def expect(self, tok: str) -> None:
-        t = self.next()
-        if t != tok:
-            raise ValueError(f"sparql: FILTER expected {tok!r}, got {t!r}")
-
-    def compile(self) -> str:
+    def compile(self) -> Column:
         out = self.or_expr()
         if self.peek() is not None:
             raise ValueError(
                 f"sparql: trailing FILTER token {self.peek()!r}")
         return out
 
-    def or_expr(self) -> str:
-        parts = [self.and_expr()]
+    def or_expr(self) -> Column:
+        out = self.and_expr()
         while self.peek() == "||":
             self.next()
-            parts.append(self.and_expr())
-        return " OR ".join(parts) if len(parts) > 1 \
-            else parts[0]
+            out = out | self.and_expr()
+        return out
 
-    def and_expr(self) -> str:
-        parts = [self.not_expr()]
+    def and_expr(self) -> Column:
+        out = self.not_expr()
         while self.peek() == "&&":
             self.next()
-            parts.append(self.not_expr())
-        return " AND ".join(f"({p})" for p in parts) if len(parts) > 1 \
-            else parts[0]
+            out = out & self.not_expr()
+        return out
 
-    def not_expr(self) -> str:
+    def not_expr(self) -> Column:
         if self.peek() == "!":
             self.next()
-            return f"(NOT ({self.not_expr()}))"
+            return ~self.not_expr()
         return self.rel_expr()
 
-    def rel_expr(self) -> str:
+    def rel_expr(self) -> Column:
         left = self.add_expr()
         t = self.peek()
         if t in _CMP_OPS:
             self.next()
-            return f"{left} {t} {self.add_expr()}"
+            right = self.add_expr()
+            if _among(right, self.numbers):
+                left = self._as_number(left)
+            if _among(left, self.numbers):
+                right = self._as_number(right)
+            return _CMP_OPS[t](left, right)
         if t is not None and t.upper() == "IN":
             self.next()
-            self.expect("(")
-            items = [self.add_expr()]
-            while self.peek() == ",":
-                self.next()
-                items.append(self.add_expr())
-            self.expect(")")
-            return f"{left} IN ({', '.join(items)})"
+            items = self._args(1, None)
+            if any(_among(c, self.numbers) for c in items):
+                left = self._as_number(left)
+            return left.isin(*items)
         return left
 
-    def add_expr(self) -> str:
+    def _arith(self, op: str, a: Column, b: Column) -> Column:
+        return self._number(
+            _ARITH_OPS[op](self._as_number(a), self._as_number(b)))
+
+    def add_expr(self) -> Column:
         out = self.mul_expr()
         while True:
             t = self.peek()
             if t in ("+", "-"):
                 self.next()
-                out = f"({out} {t} {self.mul_expr()})"
-            elif t is not None and re.fullmatch(r"-\d+(\.\d+)?", t):
+                out = self._arith(t, out, self.mul_expr())
+            elif t is not None and t[0] == "-" and _NUM_RE.fullmatch(t):
                 # '10 -3' tokenizes the 3 as a negative number
-                self.next()
-                out = f"({out} - {t[1:]})"
+                out = self._arith("-", out, self._num_lit(self.next()[1:]))
             else:
                 return out
 
-    def mul_expr(self) -> str:
+    def mul_expr(self) -> Column:
         out = self.value()
         while self.peek() in ("*", "/"):
             op = self.next()
-            out = f"({out} {op} {self.value()})"
+            out = self._arith(op, out, self.value())
         return out
 
-    def _var_col(self, t: str) -> str:
+    def _num_lit(self, t: str) -> Column:
+        return self._number(F.lit(Decimal(t) if "." in t else int(t)))
+
+    def _var_col(self, t: str, prefix: str = "") -> Column:
         v = t[1:]
         if v not in self.cols:
             raise ValueError(f"sparql: FILTER on unbound ?{v}")
-        return f"`{v}`"
+        if prefix:                      # a shadow column of the variable
+            if prefix + v not in self.cols:
+                what = ("obj_is_uri (isURI/isLiteral)" if prefix == _SHADOW
+                        else "obj_lang (lang/langMatches)")
+                raise ValueError(
+                    f"sparql: {what} needs its column in the triples "
+                    f"DataFrame (missing for ?{v})")
+            return F.col(prefix + v)
+        c = F.col(v)
+        if isinstance(self.cols[v], NumericType):
+            self.numbers.append(c)
+        elif isinstance(self.cols[v], StringType):
+            self.strings.append(c)
+        return c
 
-    def _shadow(self, t: str, prefix: str = _SHADOW) -> str:
-        v = t[1:]
-        if v not in self.cols:
-            raise ValueError(f"sparql: FILTER on unbound ?{v}")
-        sh = prefix + v
-        if sh not in self.cols:
-            what = ("obj_is_uri (isURI/isLiteral)" if prefix == _SHADOW
-                    else "obj_lang (lang/langMatches)")
-            raise ValueError(
-                f"sparql: {what} needs its column in the triples "
-                f"DataFrame (missing for ?{v})")
-        return f"`{sh}`"
-
-    def value(self) -> str:
+    def value(self) -> Column:
         t = self.next()
         low = t.lower()
         if t == "(":
             inner = self.or_expr()
             self.expect(")")
-            return f"({inner})"
+            return inner
         if t.startswith("?"):
             return self._var_col(t)
         if t.startswith('"'):
-            return _sql_str(_unescape(t))
+            return F.lit(_unescape(t))
         if t.startswith("<"):
             iri = t[1:-1]
             # xsd constructor casts: try_cast, so a SPARQL type error
             # yields NULL (filter-false) instead of an ANSI runtime
             # abort on dirty data
             if iri.startswith(_XSD) and self.peek() == "(":
-                sql_type = _XSD_CASTS.get(iri[len(_XSD):])
-                if sql_type is None:
+                typ = _XSD_CASTS.get(iri[len(_XSD):])
+                if typ is None:
                     raise ValueError(
                         f"sparql: unsupported xsd cast {iri!r}")
                 arg, = self._args(1, 1)
-                return f"try_cast({arg} AS {sql_type})"
+                out = arg.try_cast(typ)
+                return self._number(out) if typ in ("bigint", "double") \
+                    else out
             # otherwise IRIs are plain string terms
-            return _sql_str(iri)
-        if re.fullmatch(r"-?\d+(\.\d+)?", t):
-            return t
-        if low == "regex":
-            self.expect("(")
-            arg = self.value()
-            self.expect(",")
-            pat = self.value()
-            self.expect(")")
-            return f"({arg} RLIKE {pat})"
+            return F.lit(iri)
+        if _NUM_RE.fullmatch(t):
+            return self._num_lit(t)
         if low == "bound":
             self.expect("(")
             v = self._var_col(self.next())
             self.expect(")")
-            return f"({v} IS NOT NULL)"
-        if low == "str":
-            self.expect("(")
-            arg = self.value()
-            self.expect(")")
-            return f"CAST({arg} AS STRING)"
-        if low in ("iri", "uri"):
+            return v.isNotNull()
+        if low in ("str", "iri", "uri"):
             # terms are stored as plain strings; IRI() is the identity
             arg, = self._args(1, 1)
-            return f"CAST({arg} AS STRING)"
-        if low == "sameterm":
-            a, b = self._args(2, 2)
-            return f"({a} <=> {b})"
+            return arg.cast("string")
         if low == "isblank":
             # the engine's triple tables carry no blank nodes (the
             # reference skolemizes on distill)
             self._args(1, 1)
-            return "false"
-        if low in ("isuri", "isiri"):
-            self.expect("(")
-            sh = self._shadow(self.next())
-            self.expect(")")
-            return f"(coalesce({sh}, false))"
-        if low == "isliteral":
+            return F.lit(False)
+        if low in ("isuri", "isiri", "isliteral"):
             self.expect("(")
             vt = self.next()
-            v, sh = self._var_col(vt), self._shadow(vt)
+            is_uri = F.coalesce(self._var_col(vt, _SHADOW), F.lit(False))
             self.expect(")")
-            return f"({v} IS NOT NULL AND NOT coalesce({sh}, false))"
+            if low == "isliteral":
+                return self._var_col(vt).isNotNull() & ~is_uri
+            return is_uri
         if low == "lang":
             # SPARQL lang() returns "" for plain literals and IRIs
             self.expect("(")
-            sh = self._shadow(self.next(), _LANG_SHADOW)
+            sh = self._var_col(self.next(), _LANG_SHADOW)
             self.expect(")")
-            return f"coalesce({sh}, '')"
+            return F.coalesce(sh, F.lit(""))
         if low == "langmatches":
             # RFC 4647 basic filtering: '*' = any non-empty tag,
             # otherwise exact primary tag or 'tag-' prefix
@@ -996,48 +1012,26 @@ class _ExprCompiler:
             self.expect(")")
             t = _unescape(tag).lower()
             if t == "*":
-                return f"({rng} <> '')"
-            return (f"(lower({rng}) = {_sql_str(t)} OR "
-                    f"startswith(lower({rng}), {_sql_str(t + '-')}))")
-        if low in _FUNCS_2:
-            self.expect("(")
-            a = self.value()
-            self.expect(",")
-            b = self.value()
-            self.expect(")")
-            return f"{_FUNCS_2[low]}({a}, {b})"
-        if low in _FUNCS_1:
-            self.expect("(")
-            a = self.value()
-            self.expect(")")
-            return f"{_FUNCS_1[low]}({a})"
-        if low in ("concat", "coalesce"):
-            args = self._args(1, None)
-            return f"{low}({', '.join(args)})"
+                return rng != F.lit("")
+            return ((F.lower(rng) == F.lit(t))
+                    | F.startswith(F.lower(rng), F.lit(t + "-")))
+        if low in _FUNCS:
+            fn, lo, hi = _FUNCS[low]
+            out = fn(*self._args(lo, hi))
+            return self._number(out) if low == "strlen" else out
         if low == "if":
             c, a, b = self._args(3, 3)
-            return f"if({c}, {a}, {b})"
-        if low == "substr":
-            # SPARQL SUBSTR is 1-based like SQL substring
-            args = self._args(2, 3)
-            return f"substring({', '.join(args)})"
-        if low == "replace":
-            # SPARQL REPLACE is regex-based
-            a, pat, rep = self._args(3, 3)
-            return f"regexp_replace({a}, {pat}, {rep})"
+            return F.when(c, a).otherwise(b)
         if low in ("strbefore", "strafter"):
             a, b = self._args(2, 2)
-            if low == "strbefore":
-                # '' when the needle does not occur, per spec
-                return (f"(CASE WHEN instr({a}, {b}) > 0 THEN "
-                        f"substring({a}, 1, instr({a}, {b}) - 1) "
-                        f"ELSE '' END)")
-            return (f"(CASE WHEN instr({a}, {b}) > 0 THEN "
-                    f"substring({a}, instr({a}, {b}) + length({b})) "
-                    f"ELSE '' END)")
+            pos = F.instr(a, b)
+            part = (F.substr(a, F.lit(1), pos - 1) if low == "strbefore"
+                    else F.substr(a, pos + F.length(b)))
+            # '' when the needle does not occur, per spec
+            return F.when(pos > 0, part).otherwise(F.lit(""))
         raise ValueError(f"sparql: unsupported FILTER token {t!r}")
 
-    def _args(self, lo: int, hi: int | None) -> list[str]:
+    def _args(self, lo: int, hi: int | None) -> list[Column]:
         self.expect("(")
         args = [self.or_expr()]
         while self.peek() == ",":
@@ -1050,8 +1044,9 @@ class _ExprCompiler:
         return args
 
 
-def _filter_expr(toks: list[str], cols: set[str]) -> Column:
-    return F.expr(_ExprCompiler(toks, cols).compile())
+def _compile_expr(toks: list[str], df: DataFrame) -> Column:
+    return _ExprCompiler(toks, {f.name: f.dataType
+                                for f in df.schema}).compile()
 
 
 def _uses_shadows(g: Group) -> frozenset:
@@ -1360,8 +1355,7 @@ def _apply_bind(sol: DataFrame, toks: list[str], var: str,
                     F.col(sh) if sh in sol.columns
                     else F.lit(None).cast(typ))
         return sol
-    expr = _ExprCompiler(toks, set(sol.columns)).compile()
-    sol = sol.withColumn(var, F.expr(expr))
+    sol = sol.withColumn(var, _compile_expr(toks, sol))
     if "isuri" in kinds:
         # a computed value is a literal unless it is a single IRI
         # token or an IRI()/URI() constructor call
@@ -1415,7 +1409,7 @@ def _select_result(sol: DataFrame, ast: Query) -> DataFrame:
             else sol.groupBy()
         out = grouped.agg(*exprs)
         for htoks in ast.having:
-            out = out.where(_filter_expr(htoks, set(out.columns)))
+            out = out.where(_compile_expr(htoks, out))
         proj = ast.select_vars + \
             [a.alias for a in ast.aggs]
         out = out.select(*proj)
@@ -1510,7 +1504,7 @@ def _compile_group(triples: DataFrame, g: Group,
         sol = sol.join(mdf.select(*shared).dropDuplicates(),
                        on=shared, how="left_anti")
     for ftoks in g.filters:
-        sol = sol.where(_filter_expr(ftoks, set(sol.columns)))
+        sol = sol.where(_compile_expr(ftoks, sol))
     return sol
 
 

@@ -3,7 +3,11 @@ engine-native counterpart of the reference's triplestore query surface
 (construct_annotations, documentrepository.py:2471-2488; template
 res/sparql/annotations.rq)."""
 
+import datetime
+from decimal import Decimal
+
 import pytest
+from pyspark.sql import functions as F
 
 from ferenda_spark.operators import sparql
 from ferenda_spark.operators.sparql import (Pattern, parse_sparql,
@@ -853,3 +857,175 @@ def test_plan_pin_alternation_single_scan(graph):
     assert plan.lower().count("pred") >= 1   # the isin filter survives
     rows = {(r.s, r.o) for r in df.collect()}
     assert len(rows) == 3
+
+
+# ---------------------------------------------------------------------------
+# every FILTER/BIND construct, compiled without Spark SQL text
+
+A, B, C, D = "http://e/a", "http://e/b", "http://e/c", "http://e/d"
+XSD_PFX = "PREFIX xsd: <http://www.w3.org/2001/XMLSchema#> "
+
+
+@pytest.fixture()
+def terms(spark):
+    """One object per subject: a tagged literal, a literal with a #, an
+    IRI and a number-like literal."""
+    return spark.createDataFrame([
+        (A, DCT + "title", "Alpha", False, "en-GB"),
+        (B, DCT + "title", "beta#gamma", False, "sv"),
+        (C, DCT + "title", "http://e/x", True, None),
+        (D, DCT + "title", "42", False, None),
+    ], "subj string, pred string, obj string, obj_is_uri boolean, "
+       "obj_lang string")
+
+
+@pytest.fixture()
+def no_sql_text(monkeypatch):
+    """Expressions compile to Columns: parsing SQL text fails the test."""
+    def refuse(*args, **kwargs):
+        raise AssertionError(f"functions.expr called with {args!r}")
+    monkeypatch.setattr(F, "expr", refuse)
+
+
+FILTER_CASES = [
+    ('?o = "Alpha"', {A}),
+    ('?o != "Alpha"', {B, C, D}),
+    ('?o < "b"', {A, D}),
+    ('?o <= "Alpha"', {A, D}),
+    ('?o > "beta"', {B, C}),
+    ('?o >= "http://e/x"', {C}),
+    ('?o = "Alpha" || ?o = "42"', {A, D}),
+    ('strstarts(?o, "h") && isIRI(?o)', {C}),
+    ('!(?o = "Alpha")', {B, C, D}),
+    ('?o IN ("42", <http://e/x>)', {C, D}),
+    ('?s = <http://e/a>', {A}),
+    ('regex(?o, "^[a-z]+#")', {B}),
+    (r'regex(?o, "\\d")', {D}),
+    ('bound(?o)', {A, B, C, D}),
+    ('str(?o) = "42"', {D}),
+    ('sameTerm(?o, "Alpha")', {A}),
+    ('isBlank(?o)', set()),
+    ('!isBlank(?s)', {A, B, C, D}),
+    ('isURI(?o)', {C}),
+    ('isIRI(?s)', {A, B, C, D}),
+    ('isLiteral(?o)', {A, B, D}),
+    ('lang(?o) = "sv"', {B}),
+    ('lang(?o) = ""', {C, D}),
+    ('langMatches(lang(?o), "en")', {A}),
+    ('langMatches(lang(?o), "EN-gb")', {A}),
+    ('langMatches(lang(?o), "*")', {A, B}),
+    ('STRSTARTS(?o, "Al")', {A}),
+    ('STRENDS(?o, "x")', {C}),
+    ('CONTAINS(?o, "#")', {B}),
+    ('CONTAINS("beta#gamma", ?o)', {B}),
+    ('LCASE(?o) = "alpha"', {A}),
+    ('UCASE(?o) = "BETA#GAMMA"', {B}),
+    ('STRLEN(?o) = 2', {D}),
+    ('STRLEN(?o) > 5 && STRLEN(?o) <= 10', {B, C}),
+    ('xsd:integer(?o) > 40', {D}),
+    ('xsd:decimal(?o) = 42.0', {D}),
+    ('(STRLEN(?o) + 1) * 2 = 6', {D}),
+    ('STRLEN(?o) -1 = 1', {D}),
+    ('1.5 * 2 = 3', {A, B, C, D}),
+]
+
+
+@pytest.mark.parametrize("expr,want", FILTER_CASES,
+                         ids=[c[0] for c in FILTER_CASES])
+def test_filter_construct(terms, no_sql_text, expr, want):
+    rows = sparql_query(terms, XSD_PFX + "SELECT ?s WHERE { ?s ?p ?o . "
+                        "FILTER(%s) }" % expr).collect()
+    assert {r.s for r in rows} == want
+
+
+def _per_subject(a, b, c, d):
+    return {A: a, B: b, C: c, D: d}
+
+
+BIND_CASES = [
+    # arithmetic: precedence, left associativity, '10 -3' tokenized as
+    # 10 and -3, a negative operand, a decimal literal
+    ("10 -3", 7),
+    ("2 + 3 * 4", 14),
+    ("(2 + 3) * 4", 20),
+    ("10 - 4 - 3", 3),
+    ("-2 * 3", -6),
+    ("7 / 2", 3.5),
+    ("1.5 + 1", Decimal("2.5")),
+    ("STRLEN(?o) * 10", _per_subject(50, 100, 100, 20)),
+    ('CONCAT(?o, "!")', _per_subject("Alpha!", "beta#gamma!",
+                                     "http://e/x!", "42!")),
+    ('CONCAT("<", ?o, ">")', _per_subject("<Alpha>", "<beta#gamma>",
+                                          "<http://e/x>", "<42>")),
+    ('COALESCE(?o, "none")', _per_subject("Alpha", "beta#gamma",
+                                          "http://e/x", "42")),
+    ("SUBSTR(?o, 2)", _per_subject("lpha", "eta#gamma", "ttp://e/x", "2")),
+    ("SUBSTR(?o, 2, 3)", _per_subject("lph", "eta", "ttp", "2")),
+    ('STRBEFORE(?o, "#")', _per_subject("", "beta", "", "")),
+    ('STRAFTER(?o, "#")', _per_subject("", "gamma", "", "")),
+    ('STRAFTER(?o, "://")', _per_subject("", "", "e/x", "")),
+    ('STRBEFORE(?o, "zz")', ""),
+    ('STRAFTER(?o, "zz")', ""),
+    ('REPLACE(?o, "[aeiou]", "_")', _per_subject(
+        "Alph_", "b_t_#g_mm_", "http://_/x", "42")),
+    ('IF(?o = "Alpha", "yes", "no")', _per_subject("yes", "no", "no", "no")),
+    ("LCASE(?o)", _per_subject("alpha", "beta#gamma", "http://e/x", "42")),
+    ("UCASE(?o)", _per_subject("ALPHA", "BETA#GAMMA", "HTTP://E/X", "42")),
+    ("STRLEN(?o)", _per_subject(5, 10, 10, 2)),
+    ("STR(?s)", _per_subject(A, B, C, D)),
+    ('IRI(CONCAT(?s, "/x"))', _per_subject(A + "/x", B + "/x", C + "/x",
+                                           D + "/x")),
+    ('URI("http://e/y")', "http://e/y"),
+    ("<http://e/y>", "http://e/y"),
+    ('"a\\"b"', 'a"b'),
+    ("LANG(?o)", _per_subject("en-GB", "sv", "", "")),
+    ("isLiteral(?o)", _per_subject(True, True, False, True)),
+    ('sameTerm(?o, "42")', _per_subject(False, False, False, True)),
+    ('xsd:integer("40") + 2', 42),
+    ("xsd:integer(?o)", _per_subject(None, None, None, 42)),
+    ('xsd:double("1.5")', 1.5),
+    ("xsd:string(42)", "42"),
+    ('xsd:boolean("true")', True),
+    ('xsd:date("2024-01-31")', datetime.date(2024, 1, 31)),
+    ('xsd:dateTime("2024-01-31 10:00:00")',
+     datetime.datetime(2024, 1, 31, 10, 0)),
+]
+
+
+@pytest.mark.parametrize("expr,want", BIND_CASES,
+                         ids=[c[0] for c in BIND_CASES])
+def test_bind_construct(terms, no_sql_text, expr, want):
+    rows = sparql_query(terms, XSD_PFX + "SELECT ?s ?v WHERE { ?s ?p ?o . "
+                        "BIND(%s AS ?v) }" % expr).collect()
+    if not isinstance(want, dict):
+        want = _per_subject(want, want, want, want)
+    assert {r.s: r.v for r in rows} == want
+
+
+def test_having_construct(terms, no_sql_text):
+    rows = sparql_query(terms, """SELECT ?p (COUNT(*) AS ?n)
+        WHERE { ?s ?p ?o } GROUP BY ?p HAVING(?n > 3 && ?n <= 4)""")
+    assert [(r.p, r.n) for r in rows.collect()] == [(DCT + "title", 4)]
+    rows = sparql_query(terms, """SELECT ?p (COUNT(*) AS ?n)
+        WHERE { ?s ?p ?o } GROUP BY ?p HAVING(?n > 4)""")
+    assert rows.collect() == []
+
+
+def test_numeric_comparison_and_arithmetic_over_non_numbers(spark):
+    """A string compared with a number, or an operand of arithmetic, is
+    read as a number; one that does not parse is a type error (filter
+    false, BIND unbound), not an ANSI cast abort of the whole query."""
+    g = spark.createDataFrame(
+        [(f"http://e/{i}", DCT + "extent", v)
+         for i, v in enumerate(["10", "3", "abc", "1.5"])],
+        "subj string, pred string, obj string")
+
+    def objs(expr):
+        return {r.o for r in sparql_query(
+            g, "SELECT ?o WHERE { ?s ?p ?o . FILTER(%s) }" % expr).collect()}
+
+    assert objs("?o > 5") == {"10"}
+    assert objs("?o > 1.2") == {"10", "3", "1.5"}
+    rows = {r.o: r.n for r in sparql_query(g, """SELECT ?o ?n WHERE {
+        ?s ?p ?o . BIND(?o * 2 AS ?n) }""").collect()}
+    assert rows["abc"] is None and rows["10"] == 20

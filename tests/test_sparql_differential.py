@@ -148,15 +148,28 @@ def _lit_value(tok):
     return re.sub(r'\\([\\"])', r"\1", tok[1:-1])
 
 
+def _number(v):
+    """A binding read as a number; None (a type error) if it is not."""
+    try:
+        return float(v)
+    except (TypeError, ValueError):
+        return None
+
+
 def _eval_filter(toks, b):
     """Evaluate the tiny FILTER subset the fuzz pool uses:
     ?x = ?y | ?x != ?y | ?x = "lit" | ?x != "lit" | bound(?x) |
-    regex(?x, "re")."""
+    regex(?x, "re") | ?x > number."""
     if toks[0].lower() == "bound":
         return b.get(toks[2][1:]) is not None
     if toks[0].lower() == "regex":
         v = b.get(toks[2][1:])
         return v is not None and re.search(_lit_value(toks[4]), v) is not None
+    if toks[1] == ">":
+        # compared with a number, a string is read as one; a type
+        # error makes the filter false
+        v = _number(b.get(toks[0][1:]))
+        return v is not None and v > float(toks[2])
     lhs = b.get(toks[0][1:])
     rhs = _lit_value(toks[2]) if toks[2].startswith('"') else \
         toks[2][1:-1] if toks[2].startswith("<") else b.get(toks[2][1:])
@@ -221,7 +234,7 @@ def naive_select(triples, query):
 
 SUBJECTS = ["http://e/a", "http://e/b", "http://e/c"]
 PREDS = [DCT + "title", DCT + "isPartOf", DCT + "references"]
-OBJS = ["X", "Y", "http://e/a", "http://e/b", "X1", "Y\\"]
+OBJS = ["X", "Y", "http://e/a", "http://e/b", "X1", "Y\\", "10", "3"]
 
 QUERY_POOL = [
     # plain BGP joins
@@ -273,6 +286,8 @@ QUERY_POOL = [
     # that ends in a backslash
     """SELECT ?s ?o WHERE { ?s <%(p0)s> ?o . FILTER(regex(?o, "\\\\d")) }""",
     """SELECT ?s WHERE { ?s <%(p0)s> ?o . FILTER(?o = "Y\\\\") }""",
+    # a numeric comparison over numeric and non-numeric strings
+    """SELECT ?s ?o WHERE { ?s <%(p0)s> ?o . FILTER(?o > 5) }""",
 ]
 
 

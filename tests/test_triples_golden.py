@@ -106,3 +106,18 @@ def test_lift_memo_is_keyed_by_the_dictionary(spark, extracted):
     hits = T._fused_lift.cache_info().hits
     assert links(all_triples(extracted, first)) == a
     assert T._fused_lift.cache_info().hits == hits + 1
+
+
+def test_join_branch_matches_fused_branch(spark, extracted, monkeypatch):
+    """A dictionary too big to compile into the fused lift takes the
+    join branch, which gives the same triple set."""
+    from ferenda_spark.operators import triples as T
+
+    def triple_set():
+        t = all_triples(extracted, commondata_df(spark)).select(*KEY)
+        return {tuple(r) for r in t.collect()}
+
+    fused = triple_set()
+    monkeypatch.setattr(T, "_LITERAL_DICT_MAX", 0)
+    joined = triple_set()
+    assert fused and joined == fused
