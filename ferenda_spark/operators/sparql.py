@@ -131,7 +131,8 @@ from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, NumericType, StringType
+from pyspark.sql.types import (DataType, NumericType, StringType,
+                               StructField, StructType)
 
 from ferenda_spark.pipeline import where_pred
 
@@ -1369,7 +1370,7 @@ def _apply_bind(sol: DataFrame, toks: list[str], var: str,
 
 
 def _values_df(spark, names: list[str], rows: list[tuple]) -> DataFrame:
-    schema = ", ".join(f"`{n}` string" for n in names)
+    schema = StructType([StructField(n, StringType()) for n in names])
     return spark.createDataFrame(rows, schema)
 
 
