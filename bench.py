@@ -1,6 +1,5 @@
 """Benchmark driver: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the machine's
-CPU count, as session.get_spark).
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -12,6 +11,9 @@ Extras (informational, per BASELINE.md protocol):
   its own fresh JVM subprocess (fair cold-start treatment), warmed up
   in-session and timed as best-of-3.  efficiency = (T_low/T_high)/(N/8)
   — the sandbox proxy for N vs 4N executor clusters (north_rule).
+
+SPARK_GRAFT_CPUS defaults to the machine's CPU count, as in
+session.get_spark.
 
 Env knobs: SPARK_GRAFT_SCALING=0 skips the scaling subprocesses;
 SPARK_GRAFT_KG_PAGES sizes the synthetic corpus (default 600000,
