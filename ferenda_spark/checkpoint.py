@@ -27,6 +27,7 @@ import time
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 ENTRIES_SCHEMA = ("url string, stage string, success boolean, "
                   "started_at timestamp, duration_s double, "
@@ -35,15 +36,25 @@ ENTRIES_SCHEMA = ("url string, stage string, success boolean, "
 
 def pending(web_pages: DataFrame, entries: DataFrame | None,
             stage: str = "parse") -> DataFrame:
-    """Rows still needing ``stage``: anti-join on (url, content_md5)
-    against successful entries.  With entries==None everything is
-    pending (first run)."""
+    """Rows still needing ``stage``: each url's latest capture, anti-joined
+    on (url, content_md5) against successful entries.  With entries==None
+    every url's latest capture is pending (first run).
+
+    A url offered more than once keeps only the capture with the greatest
+    ``warc_ts`` (on a tie, the greatest md5 of its html), as the
+    reference's re-download overwrites the stored file.  The pick runs
+    before the anti-join: picking after it would commit an older capture
+    over a newer, already committed one."""
+    latest = Window.partitionBy("url").orderBy(F.col("warc_ts").desc(),
+                                               F.col("_md5").desc())
+    keyed = (web_pages.withColumn("_md5", F.md5(F.col("html")))
+             .withColumn("_rank", F.row_number().over(latest))
+             .where(F.col("_rank") == 1).drop("_rank"))
     if entries is None:
-        return web_pages
+        return keyed.drop("_md5")
     done = (entries.where((F.col("stage") == stage) & F.col("success"))
             .select("url", F.col("content_md5").alias("done_md5"))
             .dropDuplicates(["url", "done_md5"]))
-    keyed = web_pages.withColumn("_md5", F.md5(F.col("html")))
     return (
         keyed.join(
             done,

@@ -20,10 +20,12 @@ Spark scheduler:
      keeps each url's latest version with one window (canonicalize.py)
   5. write: triples partitioned by (batch, pred_bucket, crawl_date) —
      the Iceberg layout from SURVEY §1.3; parquet stand-in locally.
-     The rows are first hash-clustered on (pred_bucket, crawl_date)
-     into ``defaultParallelism`` tasks, so each partition value is
-     written by exactly one task (one file per directory) and the
-     writers run on every core (``with_partition_cols``).
+     ``crawl_date`` is the crawl month (its first day): Iceberg's
+     ``months(warc_ts)`` transform.  The rows are first hash-clustered
+     on (pred_bucket, crawl_date) into ``defaultParallelism`` tasks, so
+     each partition value is written by exactly one task (one file per
+     (bucket, crawl month) directory) and the writers run on every core
+     (``with_partition_cols``).
 
 Partitioning rationale (100 TB): predicate frequency is Zipfian, so
 partitioning raw ``pred`` would produce a handful of huge partitions;
@@ -32,7 +34,13 @@ count while still enabling partition pruning for predicate-filtered
 queries: the readers (``where_pred``, used by the SPARQL compiler and
 the faceted API) add the bucket of each bound predicate as a partition
 filter, computed by the same ``pred_bucket`` expression the writer
-uses.  crawl_date enables incremental-load pruning.
+uses.  crawl_date enables incremental-load pruning at crawl-month
+grain.  A month, not a day: a commit writes one file per (bucket, crawl
+month) it touches, where a day grain made any commit of pages crawled
+over a few years write one small file per (bucket, day) — ~780 files
+for a few hundred fixture pages — which every later commit and query
+lists and opens.  No reader filters on crawl_date, so the coarser grain
+costs no pruning.
 
 Exactly-once incremental commits WITHOUT Iceberg's MERGE INTO: each
 run's pending set gets a deterministic ``batch`` id (hash of its
@@ -101,6 +109,9 @@ def where_pred(triples: DataFrame, *preds: str) -> DataFrame:
 def with_partition_cols(triples: DataFrame, warc_ts_by_url: DataFrame) -> DataFrame:
     """Add the write's partition columns and cluster the rows by them.
 
+    ``crawl_date`` is the first day of the page's crawl month, so each
+    commit writes one file per (``pred_bucket``, crawl month).
+
     Without the clustering the partitioned write makes one file per
     task per partition value, and a small batch (whose plan AQE
     coalesces to one partition) writes every file from a single task.
@@ -110,14 +121,15 @@ def with_partition_cols(triples: DataFrame, warc_ts_by_url: DataFrame) -> DataFr
     ``rebalance``, of a small batch back down to one partition.
 
     Skew limit: one task writes all of a partition value's rows, so at
-    scale the Zipfian ``rdf:type`` bucket of each crawl date lands in a
+    scale the Zipfian ``rdf:type`` bucket of each crawl month lands in a
     single task (and a single file); salting that bucket is open work.
     """
     t = triples.join(warc_ts_by_url, "url", "left")
     n = triples.sparkSession.sparkContext.defaultParallelism
     return (
         t.withColumn("pred_bucket", pred_bucket(F.col("pred")))
-        .withColumn("crawl_date", F.to_date("warc_ts"))
+        .withColumn("crawl_date",
+                    F.trunc(F.to_date("warc_ts"), "month"))
         .drop("warc_ts")
         .repartition(n, "pred_bucket", "crawl_date")
     )

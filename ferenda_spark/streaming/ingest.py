@@ -11,7 +11,7 @@ Two entry points:
   full batch DataFrame API is available.  Each micro-batch appends its
   triples as flat (unpartitioned) parquet under ``out_dir``, tagged
   with a ``stream_batch`` column; it does not write the batch
-  pipeline's (batch, pred_bucket, crawl_date) layout.
+  pipeline's (batch, pred_bucket, crawl month) layout.
 
 - ``windowed_event_counts``: event-time tumbling-window aggregation
   with a watermark for late data — the streaming generalization of the

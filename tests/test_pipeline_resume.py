@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ferenda_spark import checkpoint, pipeline
-from ferenda_spark.fixtures.webpages import commondata_df, web_pages_df
+from ferenda_spark.fixtures.webpages import (WEB_PAGES_SCHEMA, commondata_df,
+                                             gen_rows, web_pages_df)
 from ferenda_spark.operators import canonicalize
 from ferenda_spark.operators.extract import extract
 from ferenda_spark.operators.triples import all_triples
@@ -310,6 +311,11 @@ def test_triples_partition_layout(spark, tmp_path_factory):
             files[root] = sum(n.endswith(".parquet") for n in names)
     assert files and set(files.values()) == {1}, {
         k: v for k, v in files.items() if v != 1}
+    # the crawl-date partition is the crawl month: the 90 pages span 84
+    # days but 12 months, so the files follow the months
+    assert sum(files.values()) <= pipeline.N_PRED_BUCKETS * 12, len(files)
+    days = {re.search(r"crawl_date=([\d-]+)", k).group(1) for k in files}
+    assert days and all(d.endswith("-01") for d in days), sorted(days)
 
 
 def test_partition_cols_cluster_on_every_core(spark):
@@ -327,6 +333,42 @@ def test_partition_cols_cluster_on_every_core(spark):
     assert re.search(
         rf"hashpartitioning\(pred_bucket#\d+L?, crawl_date#\d+, {n}\)",
         plan), plan
+    assert df.first().crawl_date == datetime.date(2020, 1, 1)
+
+
+def test_url_offered_twice_commits_its_latest_capture(spark, tmp_path):
+    """Two captures of one url in one input commit only the latest one
+    (greatest warc_ts; on a tie, greatest md5 of the html): the triples
+    are not multiplied by the captures, and re-running the input is a
+    no-op."""
+    rows = gen_rows(5)
+    latest = rows[3]
+    older = dict(rows[4], url=latest["url"],
+                 warc_ts=latest["warc_ts"] - datetime.timedelta(days=40))
+
+    def df(*rs):
+        return spark.createDataFrame(
+            [tuple(r[c] for c in ("url", "warc_ts", "html", "text", "lang"))
+             for r in rs], WEB_PAGES_SCHEMA)
+
+    want = _commit(spark, df(latest), f"{tmp_path}/one")
+    got = _commit(spark, df(older, latest), f"{tmp_path}/two")
+    assert (got.batch, got.n_extracted, got.n_triples) == \
+        (want.batch, 1, want.n_triples)
+    assert _table_rows(spark, f"{tmp_path}/two", "triples") == \
+        _table_rows(spark, f"{tmp_path}/one", "triples")
+
+    again = _commit(spark, df(latest, older), f"{tmp_path}/two")
+    assert again.batch is None and again.n_extracted == 0
+    assert again.n_triples_total == want.n_triples
+
+    # a tie on warc_ts keeps the capture whose html has the greater md5
+    tied = dict(older, warc_ts=latest["warc_ts"])
+    md5s = [r.m for r in df(latest, tied)
+            .select(F.md5("html").alias("m")).collect()]
+    kept = checkpoint.pending(df(latest, tied), None) \
+        .select(F.md5("html").alias("m")).collect()
+    assert [r.m for r in kept] == [max(md5s)]
 
 
 def test_session_turns_off_dataframe_debugging(spark):
