@@ -314,8 +314,8 @@ def test_triples_partition_layout(spark, tmp_path_factory):
     # the crawl-date partition is the crawl month: the 90 pages span 84
     # days but 12 months, so the files follow the months
     assert sum(files.values()) <= pipeline.N_PRED_BUCKETS * 12, len(files)
-    days = {re.search(r"crawl_date=([\d-]+)", k).group(1) for k in files}
-    assert days and all(d.endswith("-01") for d in days), sorted(days)
+    dates = {re.search(r"crawl_date=([\d-]+)", k).group(1) for k in files}
+    assert dates and all(d.endswith("-01") for d in dates), sorted(dates)
 
 
 def test_partition_cols_cluster_on_every_core(spark):
