@@ -73,8 +73,6 @@ BENCH_QUERIES = [
     "kg_set_diff",
     "events_hourly_windows",
     "multimodal_features",
-    "tpch_q1_pricing",
-    "tpch_q3_shipping",
     "events_sessionize",
     "text_bpe_pretokens",
     "seq_pack_assign",

@@ -31,23 +31,26 @@ general, and lagen.nu), plus the common SELECT forms:
   WHERE solution via semi joins, never a driver collect)
 * basic graph patterns joined on shared variables, with
   predicate-object lists (``;``) and object lists (``,``)
-* ``OPTIONAL { ... }`` -> left outer join
+* ``OPTIONAL { ... }`` -> left outer join; a later OPTIONAL may bind
+  what an earlier one left unbound
 * ``{ ... } UNION { ... } UNION { ... }`` (n-ary) -> unionByName with
-  null-padded unbound vars; a braced group NOT followed by UNION is
-  merged into its parent (group nesting)
+  null-padded unbound vars, which join as unbound; a braced group NOT
+  followed by UNION is merged into its parent (group nesting)
 * ``GRAPH <iri> { ... }`` -> transparent: the engine is a
   single-graph store, the DataFrame handed in IS the named dataset
   (the reference parameterizes ``%(context)s`` per repo the same way)
 * ``BIND(expr AS ?v)`` -> withColumn at the group's position
 * ``FILTER [NOT] EXISTS { ... }`` -> left semi / left anti join on the
-  shared variables (must be correlated); ``MINUS { ... }`` -> left
-  anti join, and per SPARQL spec a MINUS sharing no variable with the
-  outer group removes nothing
+  shared variables, an unbound one matching any value;
+  ``MINUS { ... }`` -> left anti join that also needs a shared
+  variable bound on both sides, so a MINUS sharing none removes nothing
 * ``VALUES ?x { ... }`` / ``VALUES (?x ?y) { (a b) ... }`` -> inline
-  literal DataFrame joined into the solution (UNDEF not supported)
+  literal DataFrame joined into the solution; an ``UNDEF`` cell is
+  unbound and matches any value
 * subqueries ``{ SELECT ... WHERE { ... } GROUP BY ... }`` -> the
   inner SELECT compiles to its own (projected) solution DataFrame and
-  joins the outer group on the shared variables
+  joins the outer group on the shared variables, its unbound ones
+  matching any value
 * ``FILTER (...)`` with the full expression grammar the templates
   use: ``= != < <= > >= && || !``, parentheses, ``?x IN (iri, ...)``,
   ``regex(?v,"re")``, ``bound(?v)``, ``str(x)``, ``STRSTARTS/STRENDS/
@@ -124,6 +127,7 @@ Spark shape / scale notes:
 
 from __future__ import annotations
 
+import functools
 import operator
 import re
 from dataclasses import dataclass, field
@@ -714,7 +718,10 @@ class _Parser(_Cursor):
 
     def _values(self) -> tuple[list[str], list[tuple]]:
         """``VALUES ?x { v... }`` or ``VALUES (?x ?y) { (vx vy)... }``."""
-        def cell() -> str:
+        def cell() -> str | None:      # None: UNDEF, an unbound cell
+            if (self.peek() or "").upper() == "UNDEF":
+                self.next()
+                return None
             t = self.term()
             if t.kind == "var":
                 raise ValueError("sparql: VALUES data must be constants")
@@ -725,8 +732,6 @@ class _Parser(_Cursor):
             while self.peek() != ")":
                 v = self.next()
                 if not v.startswith("?"):
-                    if v.upper() == "UNDEF":
-                        raise ValueError("sparql: VALUES UNDEF unsupported")
                     raise ValueError(f"sparql: VALUES expects ?vars, got {v!r}")
                 names.append(v[1:])
             self.next()
@@ -736,8 +741,6 @@ class _Parser(_Cursor):
                 self.next()
                 row = []
                 while self.peek() != ")":
-                    if (self.peek() or "").upper() == "UNDEF":
-                        raise ValueError("sparql: VALUES UNDEF unsupported")
                     row.append(cell())
                 self.next()
                 if len(row) != len(names):
@@ -751,8 +754,6 @@ class _Parser(_Cursor):
         self.expect("{")
         rows = []
         while self.peek() != "}":
-            if (self.peek() or "").upper() == "UNDEF":
-                raise ValueError("sparql: VALUES UNDEF unsupported")
             rows.append((cell(),))
         self.next()
         return [v[1:]], rows
@@ -1288,45 +1289,72 @@ def _var_cols(cols) -> list[str]:
     return [c for c in cols if not _is_shadow(c)]
 
 
-def _drop_dup_shadows(df: DataFrame, sol_cols: set[str]) -> DataFrame:
-    dups = [c for c in df.columns if _is_shadow(c) and c in sol_cols]
-    return df.drop(*dups) if dups else df
+def _join(sol: tuple | None, other: tuple, how: str = "inner") -> tuple:
+    """Join two solution frames, each a (DataFrame, maybe-NULL vars)
+    pair (``sol`` None: ``other`` is the group's first frame), by
+    SPARQL's rule that an unbound (NULL) variable is compatible with
+    any value (SPARQL 1.1 §18.3).  ``how``: inner, left, left_semi,
+    left_anti or minus, a left_anti that also needs a shared variable
+    bound on both sides (§18.5).  Always-bound shared variables are a
+    plain equi-join (none shared: no condition); a maybe-NULL one joins
+    on ``l.v <=> r.v OR l.v IS NULL OR r.v IS NULL`` and is taken, with
+    its shadow columns, from the side that bound it."""
+    if sol is None:
+        return other
+    (left, lnull), (right, rnull) = sol, other
+    lvars, rvars = set(_var_cols(left.columns)), set(_var_cols(right.columns))
+    shared = [c for c in _var_cols(right.columns) if c in lvars]
+    loose = [v for v in shared if v in lnull or v in rnull]
+    minus = how == "minus"
+    if minus and not shared:
+        return sol
+    how = "left_anti" if minus else how
+    if how.startswith("left_"):
+        right, nulls = right.select(*shared).dropDuplicates(), lnull
+    else:
+        nulls = lnull | (rvars - lvars) if how == "left" else \
+            (lnull - rvars) | (rnull - lvars) | (lnull & rnull)
+    if not loose:
+        right = right.drop(*[c for c in right.columns
+                             if _is_shadow(c) and c in left.columns])
+        return left.join(right, on=shared or None, how=how), nulls
+    dup = {c: "__r" + c for c in right.columns if c in left.columns}
+    right = right.withColumnsRenamed(dup)
+    lv, rv = F.col, lambda c: F.col(dup[c])
+    cond = [lv(v) == rv(v) for v in shared if v not in loose] + [
+        lv(v).eqNullSafe(rv(v)) | lv(v).isNull() | rv(v).isNull()
+        for v in loose]
+    if minus:
+        cond.append(functools.reduce(operator.or_, (
+            lv(v).isNotNull() & rv(v).isNotNull() for v in shared)))
+    out = left.join(right, functools.reduce(operator.and_, cond), how)
+    if how.startswith("left_"):
+        return out, nulls
+    pick = {c: F.when(lv(v).isNotNull(), lv(c)).otherwise(rv(c))
+            for v in loose for c in (v, _SHADOW + v, _LANG_SHADOW + v)
+            if c in dup}
+    return out.select(*[pick.get(c, lv(c)).alias(c) for c in left.columns],
+                      *[c for c in right.columns if c not in dup.values()]
+                      ), nulls
 
 
 def _join_patterns(triples: DataFrame, pats: list[Pattern],
-                   kinds: frozenset) -> DataFrame | None:
+                   kinds: frozenset) -> tuple | None:
     if not pats:
         return None
     scans = [_pattern_df(triples, p, kinds) for p in pats]
     # selectivity-ordered greedy join: start from the most
     # constant-bound scan, always extend with a scan sharing a variable
     order = sorted(range(len(scans)), key=lambda i: -scans[i][1])
-    used = [False] * len(scans)
-    first = order[0]
-    used[first] = True
-    sol = scans[first][0]
-    remaining = len(scans) - 1
-    while remaining:
-        pick = None
-        for i in order:
-            if used[i]:
-                continue
-            if set(_var_cols(scans[i][0].columns)) & set(sol.columns):
-                pick = i
-                break
-        if pick is None:          # disconnected query: cartesian
-            pick = next(i for i in order if not used[i])
-            sol = sol.crossJoin(_drop_dup_shadows(scans[pick][0],
-                                                  set(sol.columns)))
-        else:
-            df, n_bound = scans[pick]
-            shared = [c for c in _var_cols(df.columns) if c in sol.columns]
-            df = _drop_dup_shadows(df, set(sol.columns))
-            # a 2+-constant pattern is a needle => broadcast it
-            sol = sol.join(F.broadcast(df) if n_bound >= 2 else df,
-                           on=shared)
-        used[pick] = True
-        remaining -= 1
+    sol = (scans[order.pop(0)][0], frozenset())   # no var is ever NULL
+    while order:
+        pick = next((i for i in order if set(_var_cols(scans[i][0].columns))
+                     & set(sol[0].columns)), order[0])
+        order.remove(pick)
+        df, n_bound = scans[pick]
+        # a 2+-constant pattern is a needle => broadcast it
+        sol = _join(sol, (F.broadcast(df) if n_bound >= 2 else df,
+                          frozenset()))
     return sol
 
 
@@ -1367,11 +1395,6 @@ def _apply_bind(sol: DataFrame, toks: list[str], var: str,
         sol = sol.withColumn(_LANG_SHADOW + var,
                              F.lit(None).cast("string"))
     return sol
-
-
-def _values_df(spark, names: list[str], rows: list[tuple]) -> DataFrame:
-    schema = StructType([StructField(n, StringType()) for n in names])
-    return spark.createDataFrame(rows, schema)
 
 
 def _select_result(sol: DataFrame, ast: Query) -> DataFrame:
@@ -1430,82 +1453,57 @@ def _select_result(sol: DataFrame, ast: Query) -> DataFrame:
 
 
 def _compile_group(triples: DataFrame, g: Group,
-                   kinds: frozenset) -> DataFrame | None:
+                   kinds: frozenset) -> tuple | None:
+    """A group -> its solution frame (DataFrame, maybe-NULL vars), or
+    None when empty.  Pattern and path variables are never NULL;
+    OPTIONAL, UNION, BIND, VALUES UNDEF and subselects can leave some
+    unbound."""
     sol = _join_patterns(triples, g.patterns, kinds)
+
+    def needs_base(what: str) -> None:
+        if sol is None:
+            raise ValueError(f"sparql: {what} without a base pattern")
+
     for sq in g.subselects:
         inner = _compile_group(triples, sq.where, kinds)
         if inner is None:
             raise ValueError("sparql: empty subquery WHERE group")
-        sdf = _select_result(inner, sq)   # projected vars only
-        if sol is None:
-            sol = sdf
-        else:
-            shared = [c for c in sdf.columns if c in sol.columns]
-            sol = sol.join(sdf, on=shared) if shared \
-                else sol.crossJoin(sdf)
+        sdf = _select_result(inner[0], sq)   # projected vars only
+        nulls = inner[1] | {a.alias for a in sq.aggs if a.func != "count"}
+        sol = _join(sol, (sdf, nulls & frozenset(sdf.columns)))
     for branches in g.unions:
-        dfs = [_compile_group(triples, b, kinds)
-               for b in branches]
+        dfs = [_compile_group(triples, b, kinds) for b in branches]
         if any(d is None for d in dfs):
             raise ValueError("sparql: empty UNION branch")
-        cols = sorted({c for d in dfs for c in d.columns})
-        udf_ = _null_pad(dfs[0], cols)
-        for d in dfs[1:]:
-            udf_ = udf_.unionByName(_null_pad(d, cols))
-        if sol is None:
-            sol = udf_
-        else:
-            shared = [c for c in _var_cols(udf_.columns)
-                      if c in sol.columns]
-            udf_ = _drop_dup_shadows(udf_, set(sol.columns))
-            sol = sol.join(udf_, on=shared) if shared \
-                else sol.crossJoin(udf_)
+        cols = sorted({c for d, _ in dfs for c in d.columns})
+        sol = _join(sol, (
+            functools.reduce(DataFrame.unionByName,
+                             [_null_pad(d, cols) for d, _ in dfs]),
+            frozenset(v for v in _var_cols(cols)
+                      if any(v in n or v not in d.columns for d, n in dfs))))
     for opt in g.optionals:
-        if sol is None:
-            raise ValueError("sparql: OPTIONAL without a base pattern")
+        needs_base("OPTIONAL")
         odf = _compile_group(triples, opt, kinds)
-        if odf is None:
-            continue
-        shared = [c for c in _var_cols(odf.columns) if c in sol.columns]
-        odf = _drop_dup_shadows(odf, set(sol.columns))
-        sol = sol.join(odf, on=shared, how="left") if shared \
-            else sol.crossJoin(odf)
+        if odf is not None:
+            sol = _join(sol, odf, "left")
     for names, rows in g.values:
-        vdf = _values_df(triples.sparkSession, names, rows)
-        if sol is None:
-            sol = vdf
-            continue
-        shared = [c for c in names if c in sol.columns]
+        vdf = triples.sparkSession.createDataFrame(
+            rows, StructType([StructField(n, StringType()) for n in names]))
         # an inline table is tiny by construction => broadcast
-        sol = sol.join(F.broadcast(vdf), on=shared) if shared \
-            else sol.crossJoin(F.broadcast(vdf))
+        sol = _join(sol, (F.broadcast(vdf), frozenset(
+            n for n, col in zip(names, zip(*rows)) if None in col)))
     for toks, var in g.binds:
-        if sol is None:
-            raise ValueError("sparql: BIND without a base pattern")
-        sol = _apply_bind(sol, toks, var, kinds)
+        needs_base("BIND")
+        sol = (_apply_bind(sol[0], toks, var, kinds), sol[1] | {var})
     for positive, eg in g.exists:
-        if sol is None:
-            raise ValueError("sparql: EXISTS without a base pattern")
-        edf = _compile_group(triples, eg, kinds)
-        shared = [c for c in _var_cols(edf.columns) if c in sol.columns]
-        if not shared:
-            raise ValueError(
-                "sparql: [NOT] EXISTS must share a variable with the "
-                "outer group")
-        edf = edf.select(*shared).dropDuplicates()
-        sol = sol.join(edf, on=shared,
-                       how="left_semi" if positive else "left_anti")
+        needs_base("EXISTS")
+        sol = _join(sol, _compile_group(triples, eg, kinds),
+                    "left_semi" if positive else "left_anti")
     for mg in g.minuses:
-        if sol is None:
-            raise ValueError("sparql: MINUS without a base pattern")
-        mdf = _compile_group(triples, mg, kinds)
-        shared = [c for c in _var_cols(mdf.columns) if c in sol.columns]
-        if not shared:
-            continue   # SPARQL spec: disjoint MINUS removes nothing
-        sol = sol.join(mdf.select(*shared).dropDuplicates(),
-                       on=shared, how="left_anti")
+        needs_base("MINUS")
+        sol = _join(sol, _compile_group(triples, mg, kinds), "minus")
     for ftoks in g.filters:
-        sol = sol.where(_compile_expr(ftoks, sol))
+        sol = (sol[0].where(_compile_expr(ftoks, sol[0])), sol[1])
     return sol
 
 
@@ -1546,6 +1544,7 @@ def sparql_query(triples: DataFrame, query: str) -> DataFrame:
             sol = _compile_group(t, ast.where, kinds)
             if sol is None:
                 raise ValueError("sparql: empty DESCRIBE WHERE group")
+            sol = sol[0]
             nodes = None
             for v in dvars:
                 nv = sol.select(F.col(v).alias("__n")).dropDuplicates()
@@ -1562,6 +1561,7 @@ def sparql_query(triples: DataFrame, query: str) -> DataFrame:
     sol = _compile_group(t, ast.where, kinds)
     if sol is None:
         raise ValueError("sparql: empty WHERE group")
+    sol = sol[0]
     if ast.form == "ask":
         return (sol.limit(1)
                 .agg(F.count(F.lit(1)).alias("n"))

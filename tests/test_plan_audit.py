@@ -55,11 +55,6 @@ def test_entity_link_broadcasts(spark):
     assert plans.shuffle_exchange_count(df) <= 1
 
 
-def test_tpch_q3_broadcasts_customer(spark):
-    df = Q.q_tpch_q3_shipping(spark, SF)
-    assert plans.has_broadcast_hash_join(df)
-
-
 def test_lift_is_single_stage_codegen(spark):
     # the triple lift is a pure narrow map: no shuffle at all
     df = Q.q_kg_triples_lift(spark, SF)

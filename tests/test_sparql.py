@@ -572,10 +572,18 @@ def test_values_single_and_multi(graph):
     assert [(r.d, r.t) for r in rows] == [("http://e/d1", "Alpha")]
 
 
-def test_values_undef_rejected():
-    with pytest.raises(ValueError, match="UNDEF"):
-        parse_sparql("""SELECT ?x WHERE {
-            ?x ?p ?o . VALUES ?x { UNDEF } }""")
+def test_values_undef_matches_any_value(spark):
+    # an UNDEF cell leaves its variable unbound: compatible with any value
+    g = spark.createDataFrame([
+        ("http://e/a", DCT + "title", "X"), ("http://e/a", DCT + "title", "Y"),
+        ("http://e/b", DCT + "title", "X"), ("http://e/b", DCT + "title", "Z"),
+    ], "subj string, pred string, obj string")
+    rows = sparql_query(g, """PREFIX dct: <http://purl.org/dc/terms/>
+        SELECT ?s ?o WHERE { ?s dct:title ?o .
+          VALUES (?s ?o) { (UNDEF "X") (<http://e/a> UNDEF) } }""").collect()
+    assert sorted((r.s, r.o) for r in rows) == [
+        ("http://e/a", "X"), ("http://e/a", "X"), ("http://e/a", "Y"),
+        ("http://e/b", "X")]
 
 
 def test_lang_and_langmatches(spark):
@@ -774,6 +782,21 @@ def test_subquery_limit_restricts_outer(graph):
           { SELECT ?t WHERE { ?x dct:title ?t } ORDER BY ?t LIMIT 1 }
         }""").collect()
     assert [(r.d, r.t) for r in rows] == [("http://e/d1", "Alpha")]
+
+
+def test_subquery_optional_var_joins_as_unbound(graph):
+    # the inner ?r is unbound for d1, so d1 is compatible with every
+    # outer ?r; d2's ?r must match
+    rows = sparql_query(graph, """PREFIX dct: <http://purl.org/dc/terms/>
+        SELECT ?d ?r ?up WHERE {
+          ?r dct:isPartOf ?up .
+          { SELECT ?d ?r WHERE { ?d <rdf:type> "foaf:Document"
+              OPTIONAL { ?d dct:references ?r } } }
+        }""").collect()
+    assert sorted((r.d, r.r, r.up) for r in rows) == [
+        ("http://e/d1", "http://e/d1#S1", "http://e/d1"),
+        ("http://e/d1", "http://e/d1#S1.1", "http://e/d1#S1"),
+        ("http://e/d2", "http://e/d1#S1.1", "http://e/d1#S1")]
 
 
 def test_subquery_only_group(graph):

@@ -5,9 +5,11 @@ DataFrame plan on randomized graphs and a pool of query shapes.
 
 The naive evaluator implements the same algebra the compiler's module
 docstring specifies (patterns joined on shared vars -> UNION branches
-joined in -> OPTIONALs left-joined -> BINDs -> FILTERs), with bag
-semantics — the same twin strategy the repo uses for the scalar
-function library (tests/test_scalars.py)."""
+joined in -> OPTIONALs left-joined -> VALUES joined in -> EXISTS ->
+MINUS -> FILTERs), with bag semantics and SPARQL's compatibility rule
+(an unbound variable is compatible with any value) — the same twin
+strategy the repo uses for the scalar function library
+(tests/test_scalars.py)."""
 
 import itertools
 import random
@@ -112,30 +114,35 @@ def _eval_bgp(triples, patterns, bindings):
     return bindings
 
 
+def _compatible(lb, rb):
+    """SPARQL 1.1 §18.3: a variable bound (not None) on both sides has
+    the same value on both; an unbound one is compatible with any."""
+    return all(lb[k] == rb[k] for k in lb.keys() & rb.keys()
+               if lb[k] is not None and rb[k] is not None)
+
+
+def _merge(lb, rb):
+    m = dict(lb)
+    m.update({k: v for k, v in rb.items() if v is not None})
+    return m
+
+
+def _bound(b):
+    return {k for k, v in b.items() if v is not None}
+
+
 def _join(left, right):
-    out = []
-    for lb in left:
-        for rb in right:
-            if all(lb[k] == rb[k] for k in lb.keys() & rb.keys()
-                   if lb[k] is not None and rb[k] is not None):
-                m = dict(lb)
-                m.update({k: v for k, v in rb.items() if v is not None})
-                out.append(m)
-    return out
+    return [_merge(lb, rb) for lb in left for rb in right
+            if _compatible(lb, rb)]
 
 
 def _left_join(left, right):
     out = []
     rvars = set().union(*(rb.keys() for rb in right)) if right else set()
     for lb in left:
-        matches = [rb for rb in right
-                   if all(lb[k] == rb[k] for k in lb.keys() & rb.keys()
-                          if lb[k] is not None)]
+        matches = [rb for rb in right if _compatible(lb, rb)]
         if matches:
-            for rb in matches:
-                m = dict(lb)
-                m.update(rb)
-                out.append(m)
+            out.extend(_merge(lb, rb) for rb in matches)
         else:
             m = dict(lb)
             m.update({v: None for v in rvars - lb.keys()})
@@ -197,24 +204,19 @@ def _eval_group(triples, g):
         vsol = [dict(zip(names, r)) for r in rows]
         sol = _join(sol, vsol) if sol is not None else vsol
     for positive, eg in g.exists:
+        # §18.6: EXISTS substitutes the solution's bound variables into
+        # the pattern; for the pool's patterns that is "some inner
+        # solution is compatible"
         esol = _eval_group(triples, eg)
-        evars = set().union(*(e.keys() for e in esol)) if esol else set()
-
-        def _matches(lb, evars=evars, esol=esol):
-            shared = [k for k in evars if k in lb]
-            return any(all(lb[k] is not None and lb[k] == rb.get(k)
-                           for k in shared) for rb in esol)
-        sol = [lb for lb in sol if _matches(lb) == positive]
+        sol = [lb for lb in sol
+               if any(_compatible(lb, rb) for rb in esol) == positive]
     for mg in g.minuses:
+        # §18.5: drop a solution that some inner solution is compatible
+        # with AND shares a bound variable with
         msol = _eval_group(triples, mg)
-        mvars = set().union(*(m.keys() for m in msol)) if msol else set()
-        shared_any = any(k in lb for lb in sol for k in mvars)
-        if shared_any:
-            sol = [lb for lb in sol
-                   if not any(all(lb.get(k) is not None
-                                  and lb.get(k) == rb.get(k)
-                                  for k in mvars if k in lb)
-                              for rb in msol)]
+        sol = [lb for lb in sol
+               if not any(_compatible(lb, rb) and _bound(lb) & _bound(rb)
+                          for rb in msol)]
     for ftoks in g.filters:
         sol = [b for b in sol if _eval_filter(ftoks, b)]
     return sol
@@ -288,6 +290,13 @@ QUERY_POOL = [
     """SELECT ?s WHERE { ?s <%(p0)s> ?o . FILTER(?o = "Y\\\\") }""",
     # a numeric comparison over numeric and non-numeric strings
     """SELECT ?s ?o WHERE { ?s <%(p0)s> ?o . FILTER(?o > 5) }""",
+    # UNION branches binding different subsets of the outer pattern's
+    # variables: an unbound one is compatible with any value
+    """SELECT ?x ?z ?a WHERE { ?x <%(p2)s> ?z . { ?x <%(p0)s> ?z }
+       UNION { ?x <%(p1)s> ?a } UNION { ?a <%(p0)s> ?z } }""",
+    # VALUES with UNDEF cells
+    """SELECT ?s ?o WHERE { ?s <%(p0)s> ?o .
+       VALUES (?s ?o) { (UNDEF "X") (<http://e/a> UNDEF) } }""",
 ]
 
 
@@ -296,22 +305,23 @@ def _random_graph(rng, n):
                     rng.choice(OBJS)) for _ in range(n)})
 
 
+def _agree(spark, triples, q):
+    df = spark.createDataFrame(triples, "subj string, pred string, obj string")
+    expected = naive_select(triples, q)
+    got = sorted((tuple(r) for r in sparql_query(df, q).collect()),
+                 key=lambda r: tuple(x or "" for x in r))
+    assert got == expected, (
+        f"query={q!r}\n got={got}\n expected={expected}\n graph={triples}")
+
+
 @pytest.mark.parametrize("seed", range(8))
 def test_compiler_agrees_with_naive_evaluator(spark, seed):
     rng = random.Random(seed)
     triples = _random_graph(rng, rng.randint(4, 12))
-    df = spark.createDataFrame(
-        triples, "subj string, pred string, obj string")
     perms = list(itertools.permutations(PREDS))
+    p0, p1, p2 = perms[seed % len(perms)]
     for qt in QUERY_POOL:
-        p0, p1, p2 = perms[seed % len(perms)]
-        q = qt % {"p0": p0, "p1": p1, "p2": p2}
-        expected = naive_select(triples, q)
-        got = sorted((tuple(r) for r in sparql_query(df, q).collect()),
-                     key=lambda r: tuple(x or "" for x in r))
-        assert got == expected, (
-            f"seed={seed} query={q!r}\n got={got}\n expected={expected}\n"
-            f" graph={triples}")
+        _agree(spark, triples, qt % {"p0": p0, "p1": p1, "p2": p2})
 
 
 # A 13-edge isPartOf chain n0 <- n1 <- ... <- n13 with a cycle (n5 is
@@ -342,9 +352,33 @@ CHAIN_POOL = [
 
 @pytest.mark.parametrize("qt", CHAIN_POOL)
 def test_deep_cyclic_chain_agrees_with_naive_evaluator(spark, qt):
-    df = spark.createDataFrame(CHAIN, "subj string, pred string, obj string")
-    q = qt % {"p": ISPARTOF, "r": REFS}
-    expected = naive_select(CHAIN, q)
-    got = sorted((tuple(r) for r in sparql_query(df, q).collect()),
-                 key=lambda r: tuple(x or "" for x in r))
-    assert got == expected, f"query={q!r}\n got={got}\n expected={expected}"
+    _agree(spark, CHAIN, qt % {"p": ISPARTOF, "r": REFS})
+
+
+# Joins on a variable one side may leave unbound, each over its own
+# graph of "s p o" triples (s and p in the e: namespace).
+UNBOUND_POOL = [
+    pytest.param("SELECT ?x ?z ?v ?y WHERE { ?x e:r ?z . "
+                 "{ ?x e:p ?v } UNION { ?y e:q ?v } }",
+                 "a r z1, b r z2, a p v1, c q v2, c r z2",
+                 id="union-branch-leaves-x-unbound"),
+    pytest.param("SELECT ?x ?w ?z WHERE { ?x e:r ?z "
+                 "OPTIONAL { ?x e:p ?w } OPTIONAL { ?x e:s ?w } }",
+                 "c r z2, c s w", id="second-optional-binds-w"),
+    pytest.param("SELECT ?x ?z ?b WHERE { ?x e:r ?z "
+                 "OPTIONAL { ?a e:q ?b } }",
+                 "a r z1, b r z2", id="optional-sharing-nothing"),
+    pytest.param("SELECT ?x ?z ?w WHERE { ?x e:r ?z "
+                 "OPTIONAL { ?x e:p ?w } MINUS { ?x e:r ?w } }",
+                 "a r z1, b r z2", id="minus-with-w-unbound"),
+    pytest.param("SELECT ?x ?w WHERE { ?x e:r ?z "
+                 "OPTIONAL { ?x e:p ?w } FILTER EXISTS { ?x e:s ?w } }",
+                 "a r z1, b r z2, a s q", id="exists-with-w-unbound"),
+]
+
+
+@pytest.mark.parametrize("q, graph", UNBOUND_POOL)
+def test_unbound_variable_joins_agree_with_naive_evaluator(spark, q, graph):
+    triples = [("http://e/" + s, "http://e/" + p, o) for s, p, o in
+               (t.split() for t in graph.split(", "))]
+    _agree(spark, triples, "PREFIX e: <http://e/> " + q)
