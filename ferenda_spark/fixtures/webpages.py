@@ -20,7 +20,7 @@ Page families (FIXTURES.md §1):
   operators/svlegal.py)
 
 Skew knob: one hot publisher ("Network Working Group") on ~60% of rfc
-rows — exercises the salted broadcast join / AQE skew path (SURVEY §4).
+rows — the Zipfian label skew of the J1 lookup (SURVEY §4).
 """
 
 from __future__ import annotations

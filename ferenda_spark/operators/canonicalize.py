@@ -1,10 +1,13 @@
 """Entity canonicalization & cross-document joins (SURVEY.md §2 J1-J5).
 
-- lookup_labels: J1 label->URI entity linking (broadcast; salted variant
-  for dictionaries too big to broadcast) — reference lookup_resource
-  (/root/reference/ferenda/documentrepository.py:439-485)
-- dependency_join: J2 — which documents reference which
-  (relate_dependencies, documentrepository.py:1889-1926)
+- lookup_labels / lookup_labels_fuzzy: J1 label->URI entity linking of
+  a fact table (broadcast join; the fuzzy variant adds the reference's
+  edit-distance fallback) — reference lookup_resource
+  (documentrepository.py:439-485).  The triple lift does its own J1
+  with the dictionary compiled into its expression (triples.all_triples)
+- incremental_dependency_join: J2 — which documents reference which
+  (relate_dependencies, documentrepository.py:1889-1926), per commit;
+  dependency_join is the same join over a whole graph
 - skeleton_entities: J4 — URIs referenced but never described
   (sources/general/skeleton.py:16-142)
 - J3 (transitive isPartOf closure + inbound references,
@@ -15,10 +18,10 @@
 
 Scale notes: the dictionary side of J1 is small => broadcast hash join,
 which is immune to Zipfian label skew (no shuffle of the fact side's hot
-key).  When the dictionary outgrows the broadcast threshold, use
+key).  For a fact table joined to a dim side too big to broadcast, use
 ``salted_join``: explode the dim side SALT ways, salt the fact side with
 pmod(hash(row), SALT) — bounded skew without AQE's per-partition limits.
-J2 is a self-join of the triple table on URI keys: shuffle hash join on
+J2 joins object URIs to document urls: shuffle hash join on
 (obj = subj-prefix) with AQE skew splitting enabled (session.py).
 """
 
@@ -70,8 +73,9 @@ def lookup_labels_fuzzy(facts: DataFrame, commondata: DataFrame,
                .withColumn("match_kind", F.lit("exact")))
     un = exact.where(F.col("ent_uri").isNull()).drop("_dim_label", "ent_uri")
 
-    sim = (F.lit(1.0) - F.levenshtein(lbl, F.col("_dim_label"))
-           / F.greatest(F.length(lbl), F.length("_dim_label")))
+    # rounded, so an oracle's float arithmetic gives the same cutoff
+    sim = F.round(F.lit(1.0) - F.levenshtein(lbl, F.col("_dim_label"))
+                  / F.greatest(F.length(lbl), F.length("_dim_label")), 6)
     w = Window.partitionBy(label_col).orderBy(F.desc("sim"),
                                               F.asc("_dim_label"))
     fuzzy_map = (un.select(lbl.alias(label_col)).distinct()
@@ -114,20 +118,15 @@ def _dep_objs(triples: DataFrame, extra_cols: tuple = ()) -> DataFrame:
 
 
 def dependency_join(triples: DataFrame) -> DataFrame:
-    """J2: dependencies(from_url, to_url) — every URI object that is the
-    subject (or subject-document) of some OTHER document.  The reference
-    probes each repo's basefile_from_uri per object URI in a Python loop
-    (documentrepository.py:1889-1926); here it is one self-join.
+    """J2 over a whole graph: dependencies(from_url, to_url) — every URI
+    object that is the subject (or subject-document) of some OTHER
+    document.  The reference probes each repo's basefile_from_uri per
+    object URI in a Python loop (documentrepository.py:1889-1926); here
+    it is ``incremental_dependency_join`` with an empty prior graph.
 
     Excludes rdf:type / owl:sameAs objects like the reference does."""
-    objs = _dep_objs(triples)
-    docs = triples.select(F.col("url").alias("to_url")).distinct()
-    return (
-        objs.join(docs, objs.target_doc == docs.to_url, "inner")
-        .where(F.col("from_url") != F.col("to_url"))
-        .select("from_url", "to_url")
-        .dropDuplicates()
-    )
+    t = triples.drop("commit_ts")
+    return incremental_dependency_join(t, t.limit(0))
 
 
 def incremental_dependency_join(triples_new: DataFrame,

@@ -50,7 +50,8 @@ general, and lagen.nu), plus the common SELECT forms:
 * subqueries ``{ SELECT ... WHERE { ... } GROUP BY ... }`` -> the
   inner SELECT compiles to its own (projected) solution DataFrame and
   joins the outer group on the shared variables, its unbound ones
-  matching any value
+  matching any value; a projected variable keeps its URI-ness and
+  language tag for the outer group's isURI/isLiteral/lang
 * ``FILTER (...)`` with the full expression grammar the templates
   use: ``= != < <= > >= && || !``, parentheses, ``?x IN (iri, ...)``,
   ``regex(?v,"re")``, ``bound(?v)``, ``str(x)``, ``STRSTARTS/STRENDS/
@@ -1399,7 +1400,10 @@ def _apply_bind(sol: DataFrame, toks: list[str], var: str,
 
 def _select_result(sol: DataFrame, ast: Query) -> DataFrame:
     """Solution -> SELECT result: aggregates, HAVING, projection,
-    DISTINCT, ORDER/OFFSET/LIMIT."""
+    DISTINCT, ORDER/OFFSET/LIMIT.  A projected variable keeps the
+    shadow columns ``sol`` has for it: a subquery's result feeds the
+    outer group's isURI/isLiteral/lang (``sparql_query`` drops them
+    from the top-level solution first)."""
     if ast.aggs:
         exprs = []
         for a in ast.aggs:
@@ -1438,8 +1442,10 @@ def _select_result(sol: DataFrame, ast: Query) -> DataFrame:
             [a.alias for a in ast.aggs]
         out = out.select(*proj)
     else:
-        out = sol.select(*(ast.select_vars
-                           or sorted(_var_cols(sol.columns))))
+        out = sol.select(*[
+            c for v in ast.select_vars or sorted(_var_cols(sol.columns))
+            for c in (v, *(p + v for p in _SHADOW_PREFIXES
+                           if p + v in sol.columns))])
         if ast.distinct:
             out = out.dropDuplicates()
     if ast.order_by:
@@ -1468,7 +1474,7 @@ def _compile_group(triples: DataFrame, g: Group,
         inner = _compile_group(triples, sq.where, kinds)
         if inner is None:
             raise ValueError("sparql: empty subquery WHERE group")
-        sdf = _select_result(inner[0], sq)   # projected vars only
+        sdf = _select_result(inner[0], sq)
         nulls = inner[1] | {a.alias for a in sq.aggs if a.func != "count"}
         sol = _join(sol, (sdf, nulls & frozenset(sdf.columns)))
     for branches in g.unions:
@@ -1567,7 +1573,7 @@ def sparql_query(triples: DataFrame, query: str) -> DataFrame:
                 .agg(F.count(F.lit(1)).alias("n"))
                 .select((F.col("n") > 0).alias("answer")))
     if ast.form == "select":
-        return _select_result(sol, ast)
+        return _select_result(sol.select(*_var_cols(sol.columns)), ast)
     # CONSTRUCT: one branch per template pattern
     branches = []
     for pat in ast.template:

@@ -7,12 +7,13 @@ from the ``extracted`` table with PURE column expressions — the union of
 these branches IS the reference's "distilled" per-document graph
 (decorators.py:161-187), verified against golden fixtures.
 
-Branches (all narrow maps or broadcast joins — zero shuffles besides the
-broadcast exchange):
+Branches, all built into one array<struct> per document, so the lift
+is one scan and one explode with zero shuffles (``all_triples``):
   1. doc-level scalars   (parse_metadata_from_soup, documentrepository.py:1182-1222)
   2. RFC header values   (rfc.py:549-634) incl. creators/rightsholders
-  3. publisher/category label->URI entity linking (J1 broadcast join,
-     lookup_resource documentrepository.py:439-485)
+  3. publisher/category label->URI entity linking (J1: the dictionary
+     compiled into a literal map, lookup_resource
+     documentrepository.py:439-485)
   4. updates/obsoletes -> COIN-minted URIs (rfc.py:592-600)
   5. sections -> fragment URIs + DocumentPart triples (P9,
      w3c.py:290-303 decorate_bodyparts)
@@ -82,38 +83,6 @@ def _frag(ordinal: Column) -> Column:
         F.concat(F.lit("S"), ordinal))
 
 
-def label_link_triples(extracted: DataFrame, commondata: DataFrame) -> DataFrame:
-    """Branch 3 (J1): publisher (foaf:name) and category (bibo:identifier)
-    label->URI lookup as a BROADCAST hash join; unmatched labels fall back
-    to a plain literal (documentrepository.py:439-485 KeyError branch,
-    rfc.py:557-589).  Broadcasting the (tiny) dictionary makes the Zipfian
-    label skew a non-issue — no shuffle on the hot key at all; see
-    canonicalize.salted_join for the big-dictionary path."""
-    e = extracted.where("parse_ok")
-    out = None
-    for field, lookup_pred, pred in [
-        ("publisher", ns.FOAF_NAME, ns.DCT_PUBLISHER),
-        ("category", ns.BIBO_IDENTIFIER, ns.DCT_SUBJECT),
-    ]:
-        dim = (commondata.where(F.col("pred") == lookup_pred)
-               .select(F.col("label"), F.col("uri").alias("ent_uri")))
-        branch = (
-            e.select("url", "doc_uri",
-                     F.col("rfc_header")[field].alias("label"))
-            .where(F.col("label").isNotNull())
-            .join(F.broadcast(dim), "label", "left")
-            .select(
-                "url", F.col("doc_uri").alias("subj"), F.lit(pred).alias("pred"),
-                F.coalesce("ent_uri", "label").alias("obj"),
-                F.col("ent_uri").isNotNull().alias("obj_is_uri"),
-                F.lit(None).cast("string").alias("obj_lang"),
-                F.lit(None).cast("string").alias("obj_datatype"),
-            )
-        )
-        out = branch if out is None else out.unionByName(branch)
-    return out
-
-
 def _arr(col: Column) -> Column:
     """null array -> empty array (rfc_header is null for non-rfc docs)."""
     return F.coalesce(col, F.array())
@@ -151,18 +120,7 @@ def _static_publisher_col() -> Column:
     return _alias_case(pub) if pub else F.lit(None).cast("string")
 
 
-def fused_scalar_triples(extracted: DataFrame,
-                         extra_structs: list[Column] | None = None) -> DataFrame:
-    """Branches 1+2+4+5+6 in ONE scan + ONE explode: every per-row
-    triple source (doc scalars, header people/relations, sections,
-    citations) is concatenated into a single array<struct> before the
-    Generate.  One map stage instead of one per branch — on a cluster
-    that is 4 fewer scans of the extracted table; in local mode it also
-    cuts task-launch overhead, which dominates at fixture scale."""
-    return _explode_triples(extracted, _triple_array(extra_structs))
-
-
-def _triple_array(extra_structs: list[Column] | None) -> Column:
+def _triple_array(extra_structs: list[Column]) -> Column:
     """The fused lift's per-row array<struct> of candidate triples.  It
     depends only on module constants and ``extra_structs``, so one build
     serves every batch; building it costs a few thousand py4j calls."""
@@ -259,7 +217,7 @@ def _triple_array(extra_structs: list[Column] | None) -> Column:
     citations = F.transform(_arr(F.col("citations")), _citation_struct)
 
     return F.concat(F.array(*fixed), creators, rights, updates, obsoletes,
-                    sections, citations, *(extra_structs or []))
+                    sections, citations, *extra_structs)
 
 
 def _explode_triples(extracted: DataFrame, allt: Column) -> DataFrame:
@@ -281,9 +239,9 @@ def _explode_triples(extracted: DataFrame, allt: Column) -> DataFrame:
     )
 
 
-# dictionaries up to this size are compiled into literal map expressions
-# (constant-folded by Catalyst, zero join); larger ones broadcast-join;
-# ones too big to broadcast go through canonicalize.salted_join
+# the most dictionary rows the lift compiles into its expression; a
+# bigger dictionary raises.  Publishers and categories are config-scale
+# data (the reference's res/extra/*.ttl): dozens of rows
 _LITERAL_DICT_MAX = 10_000
 
 # fused lift expressions kept for distinct dictionaries: a deployment
@@ -297,21 +255,26 @@ DictRows = tuple[tuple[str, str, str], ...]
 def _label_link_structs(dict_rows: DictRows) -> list[Column]:
     """J1 as pure column logic: the label->URI dictionary becomes a
     literal map expression — the columnar twin of the reference's
-    in-memory graph lookup (documentrepository.py:439-485), valid
-    whenever the dictionary fits the driver (publishers/categories are
-    dozens of rows).  Returns struct-builders for the fused pass."""
+    in-memory graph lookup (documentrepository.py:439-485).  A row
+    repeated in the dictionary counts once; a label mapped to two URIs
+    under one lookup predicate raises, since the lookup has no answer
+    for it.  Returns struct-builders for the fused pass."""
     out = []
     h = F.col("rfc_header")
     for field_name, lookup_pred, pred in [
         ("publisher", ns.FOAF_NAME, ns.DCT_PUBLISHER),
         ("category", ns.BIBO_IDENTIFIER, ns.DCT_SUBJECT),
     ]:
-        entries = [(label, uri) for uri, label, p in dict_rows
-                   if p == lookup_pred]
+        entries: dict[str, str] = {}
+        for uri, name, p in dict_rows:
+            if p == lookup_pred and entries.setdefault(name, uri) != uri:
+                raise ValueError(
+                    f"all_triples: label {name!r} maps to two URIs under "
+                    f"{lookup_pred} ({entries[name]}, {uri})")
         label = h[field_name]
         if entries:
             flat = []
-            for k, v in entries:
+            for k, v in entries.items():
                 flat += [F.lit(k), F.lit(v)]
             ent_uri = F.element_at(F.create_map(*flat), label)
         else:
@@ -336,29 +299,18 @@ def _fused_lift(dict_rows: DictRows) -> Column:
 
 def all_triples(extracted: DataFrame, commondata: DataFrame) -> DataFrame:
     """The full distilled graph; set semantics (reference distilled
-    graphs are triple SETS) — shuffle-free in the fused branch (per-
-    document array_distinct), one dedup shuffle in the join branch.
+    graphs are triple SETS), shuffle-free (per-document
+    array_distinct in ``_explode_triples``).
 
-    Strategy: when the entity dictionary is small enough to collect
-    (it is config-scale data in the reference — res/extra/*.ttl), the
-    J1 label lookup compiles into the fused single-pass emission as a
-    literal map => the WHOLE lift is one map stage, its expression
-    built once per dictionary (``_fused_lift``).  Reading the dictionary
-    is one bounded collect.  Otherwise fall back to the broadcast-join
-    branch (and for dictionaries beyond broadcast size,
-    canonicalize.salted_join)."""
+    The entity dictionary is read by one bounded collect and the J1
+    label lookup compiles into the fused single-pass emission as a
+    literal map, so the WHOLE lift is one map stage, its expression
+    built once per dictionary (``_fused_lift``).  A dictionary of more
+    than ``_LITERAL_DICT_MAX`` rows raises ``ValueError``."""
     rows = commondata.limit(_LITERAL_DICT_MAX + 1).collect()
-    if len(rows) <= _LITERAL_DICT_MAX:
-        # _explode_triples enforces set semantics per document via
-        # pre-explode array_distinct — no dedup shuffle
-        key = tuple((r["uri"], r["label"], r["pred"]) for r in rows)
-        return _explode_triples(extracted, _fused_lift(key))
-    # join-branch: label_link rows come from a second scan, so the
-    # cross-source dedup still needs the shuffle (non-bench path,
-    # dictionaries too big to compile into the fused expression)
-    return (
-        fused_scalar_triples(extracted)
-        .unionByName(label_link_triples(extracted, commondata))
-        .dropDuplicates(["url", "subj", "pred", "obj", "obj_lang",
-                         "obj_datatype"])
-    )
+    if len(rows) > _LITERAL_DICT_MAX:
+        raise ValueError(
+            f"all_triples: the entity dictionary has more than "
+            f"_LITERAL_DICT_MAX={_LITERAL_DICT_MAX} rows")
+    key = tuple((r["uri"], r["label"], r["pred"]) for r in rows)
+    return _explode_triples(extracted, _fused_lift(key))

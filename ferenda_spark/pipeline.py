@@ -11,8 +11,8 @@ Spark scheduler:
      both the row count (0 => no-op resume) and the batch id
   2. extract: one narrow mapInPandas pass (operators/extract.py)
   3. triples: fused single-pass columnar lift over the persisted
-     extracted table, its expression built once per entity dictionary
-     (operators/triples.py)
+     extracted table, the entity dictionary compiled into its
+     expression, built once per dictionary (operators/triples.py)
   4. relate: INCREMENTAL dependency maintenance — the new batch's
      object URIs vs all documents, plus the prior graph's object URIs
      vs this batch's brand-new documents (broadcast); never a

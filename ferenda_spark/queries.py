@@ -1686,51 +1686,43 @@ def q_coin_uri_mint(spark, sf_dir):
                     item.alias("minted_item_uri"))
 
 
+def _source_dictionary(d: DataFrame, label: F.Column) -> DataFrame:
+    """A commondata-shaped (label, uri, pred) dictionary minting one
+    entity URI per distinct source of ``d``, under ``label``."""
+    from ferenda_spark import ns
+    return (d.select("source").distinct()
+            .select(label.alias("label"),
+                    F.concat(F.lit(BASE + "ext/"), "source").alias("uri"),
+                    F.lit(ns.FOAF_NAME).alias("pred")))
+
+
 def q_entity_link(spark, sf_dir):
-    """J1 entity linking: label->URI broadcast hash join against the
-    minted dictionary (lookup_resource, documentrepository.py:439-485)."""
+    """J1 entity linking through ``canonicalize.lookup_labels``: each
+    document's source resolved against the minted dictionary by a
+    broadcast hash join (lookup_resource,
+    documentrepository.py:439-485)."""
+    from ferenda_spark.operators.canonicalize import lookup_labels
     d = _read(spark, sf_dir, "documents")
-    dim = (d.select("source").distinct()
-           .select(F.col("source").alias("label"),
-                   F.concat(F.lit(BASE + "ext/"), "source").alias("ent_uri")))
-    return (d.join(F.broadcast(dim), d.source == dim.label)
+    dim = _source_dictionary(d, F.col("source"))
+    return (lookup_labels(d, dim, "source")
             .select("doc_id", "source", "ent_uri"))
 
 
 def q_entity_link_fuzzy(spark, sf_dir):
-    """J1 completion: entity linking WITH the reference's fuzzy fallback
-    (lookup_resource, documentrepository.py:472-485 difflib cutoff=0.8)
-    — exact broadcast join, then an edit-distance residual pass over the
-    unmatched distinct labels (canonicalize.lookup_labels_fuzzy is the
-    operator twin).  Labels are synthesized with deterministic
+    """J1 completion through ``canonicalize.lookup_labels_fuzzy``:
+    entity linking WITH the reference's fuzzy fallback (lookup_resource,
+    documentrepository.py:472-485 difflib cutoff=0.8) — exact broadcast
+    join, then an edit-distance residual pass over the unmatched
+    distinct labels.  Labels are synthesized with deterministic
     misspellings (every 5th doc drops the last char) so the oracle can
     reproduce both passes; similarity = 1 - levenshtein/max(len)."""
+    from ferenda_spark.operators.canonicalize import lookup_labels_fuzzy
     d = _read(spark, sf_dir, "documents")
     full = F.concat(F.lit("Publisher "), F.col("source"))
     label = F.when(F.col("doc_id") % 5 == 0,
                    F.left(full, F.length(full) - 1)).otherwise(full)
     facts = d.select("doc_id", label.alias("label"))
-    dim = (d.select("source").distinct()
-           .select(F.concat(F.lit("Publisher "), "source").alias("dlabel"),
-                   F.concat(F.lit(BASE + "ext/"), "source").alias("ent_uri")))
-    exact = facts.join(F.broadcast(dim),
-                       facts.label == dim.dlabel, "left")
-    matched = (exact.where(F.col("ent_uri").isNotNull()).drop("dlabel")
-               .withColumn("match_kind", F.lit("exact")))
-    un = exact.where(F.col("ent_uri").isNull()).drop("dlabel", "ent_uri")
-    sim = (F.lit(1.0) - F.levenshtein("label", "dlabel")
-           / F.greatest(F.length("label"), F.length("dlabel")))
-    w = Window.partitionBy("label").orderBy(F.desc("sim"), F.asc("dlabel"))
-    fmap = (un.select("label").distinct()
-            .join(F.broadcast(dim))
-            .withColumn("sim", F.round(sim, 6))
-            .where(F.col("sim") >= 0.8)
-            .withColumn("rn", F.row_number().over(w)).where("rn = 1")
-            .select("label", "ent_uri"))
-    fuzzy = (un.join(F.broadcast(fmap), "label", "left")
-             .withColumn("match_kind",
-                         F.when(F.col("ent_uri").isNotNull(), "fuzzy")))
-    return matched.unionByName(fuzzy.select(*matched.columns))
+    return lookup_labels_fuzzy(facts, _source_dictionary(d, full))
 
 
 def _with_doc_count(d: DataFrame) -> DataFrame:

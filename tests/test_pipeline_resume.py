@@ -404,6 +404,36 @@ def test_dependency_join(triples):
         assert frm in all_urls and to in all_urls and frm != to
 
 
+def test_stats_dataset_is_one_job(spark, triples):
+    """The ';stats' response over the fixture triples: the three
+    dimensions' observations (pinned from the per-dimension
+    implementation it replaced), counted by one Spark job."""
+    from ferenda_spark.operators.api import stats_dataset
+    from ferenda_spark.plans import audit
+
+    ext = "http://localhost:8000/ext/"
+    got = []
+    executed = audit.executed_plans(
+        spark, lambda: got.append(stats_dataset(triples)))
+    assert len(executed) == 1
+    assert got[0] == {"type": "DataSet", "slices": [
+        {"dimension": "rdf_type", "observations": [
+            {"term": "rfc:RFC", "count": 9},
+            {"term": "w3c:Recommendation", "count": 9},
+            {"term": "bibo:Standard", "count": 3},
+            {"term": "foaf:Document", "count": 9}]},
+        {"dimension": "dcterms_publisher", "observations": [
+            {"ref": ext + "internet-architecture-board", "count": 2},
+            {"ref": ext + "internet-engineering-task-force", "count": 2},
+            {"ref": ext + "network-working-group", "count": 5},
+            {"ref": ext + "w3c", "count": 9}]},
+        {"dimension": "dcterms_issued", "observations": [
+            {"year": "2010", "count": 5}, {"year": "2011", "count": 3},
+            {"year": "2012", "count": 3}, {"year": "2013", "count": 5},
+            {"year": "2014", "count": 4}, {"year": "2015", "count": 2},
+            {"year": "2016", "count": 5}]}]}
+
+
 def test_skeleton_entities(triples):
     stubs = canonicalize.skeleton_entities(triples)
     stub_uris = {r.subj for r in stubs.collect()}

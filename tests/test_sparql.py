@@ -799,6 +799,23 @@ def test_subquery_optional_var_joins_as_unbound(graph):
         ("http://e/d2", "http://e/d1#S1.1", "http://e/d1#S1")]
 
 
+def test_subquery_var_keeps_its_uri_flag(spark):
+    # ?v is bound only inside the subquery; the outer isURI reads the
+    # obj_is_uri flag the subquery's pattern carried, and the result
+    # has the selected variables only
+    g = _graph4(spark, [
+        ("http://e/a", "http://e/r", "z", False),
+        ("http://e/b", "http://e/r", "z", False),
+        ("http://e/a", "http://e/p", "http://e/v", True),
+        ("http://e/b", "http://e/p", "http://e/w", False),
+    ])
+    df = sparql_query(g, """PREFIX e: <http://e/>
+        SELECT ?x ?v WHERE { ?x e:r ?z
+          { SELECT ?x ?v WHERE { ?x e:p ?v } } FILTER(isURI(?v)) }""")
+    assert df.columns == ["x", "v"]
+    assert [tuple(r) for r in df.collect()] == [("http://e/a", "http://e/v")]
+
+
 def test_subquery_only_group(graph):
     row, = sparql_query(graph, """PREFIX dct: <http://purl.org/dc/terms/>
         SELECT ?n WHERE {

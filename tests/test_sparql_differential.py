@@ -4,8 +4,8 @@ triple list, no Spark, no shared code) must agree with the compiled
 DataFrame plan on randomized graphs and a pool of query shapes.
 
 The naive evaluator implements the same algebra the compiler's module
-docstring specifies (patterns joined on shared vars -> UNION branches
-joined in -> OPTIONALs left-joined -> VALUES joined in -> EXISTS ->
+docstring specifies (patterns joined on shared vars -> subqueries
+joined in -> UNION branches joined in -> OPTIONALs left-joined -> VALUES joined in -> EXISTS ->
 MINUS -> FILTERs), with bag semantics and SPARQL's compatibility rule
 (an unbound variable is compatible with any value) — the same twin
 strategy the repo uses for the scalar function library
@@ -163,12 +163,21 @@ def _number(v):
         return None
 
 
+def _is_iri(v):
+    """The pool's graphs hold an IRI exactly where the value starts
+    with http:// (``_agree`` flags obj_is_uri the same way)."""
+    return v.startswith("http://")
+
+
 def _eval_filter(toks, b):
     """Evaluate the tiny FILTER subset the fuzz pool uses:
     ?x = ?y | ?x != ?y | ?x = "lit" | ?x != "lit" | bound(?x) |
-    regex(?x, "re") | ?x > number."""
+    isURI(?x) | regex(?x, "re") | ?x > number."""
     if toks[0].lower() == "bound":
         return b.get(toks[2][1:]) is not None
+    if toks[0].lower() == "isuri":
+        v = b.get(toks[2][1:])
+        return v is not None and _is_iri(v)
     if toks[0].lower() == "regex":
         v = b.get(toks[2][1:])
         return v is not None and re.search(_lit_value(toks[4]), v) is not None
@@ -187,6 +196,9 @@ def _eval_filter(toks, b):
 
 def _eval_group(triples, g):
     sol = _eval_bgp(triples, g.patterns, [dict()]) if g.patterns else None
+    for sq in g.subselects:
+        ssol = _eval_select(triples, sq)
+        sol = ssol if sol is None else _join(sol, ssol)
     for branches in g.unions:
         udf = []
         branch_sols = [_eval_group(triples, b) for b in branches]
@@ -222,12 +234,19 @@ def _eval_group(triples, g):
     return sol
 
 
-def naive_select(triples, query):
-    ast = parse_sparql(query)
-    sol = _eval_group(triples, ast.where)
-    rows = [tuple(b.get(v) for v in ast.select_vars) for b in sol]
+def _eval_select(triples, ast):
+    """A SELECT's solutions projected to its variables (no aggregates
+    in the pool)."""
+    rows = [tuple(b.get(v) for v in ast.select_vars)
+            for b in _eval_group(triples, ast.where)]
     if ast.distinct:
         rows = list(set(rows))
+    return [dict(zip(ast.select_vars, r)) for r in rows]
+
+
+def naive_select(triples, query):
+    ast = parse_sparql(query)
+    rows = [tuple(b.values()) for b in _eval_select(triples, ast)]
     return sorted(rows, key=lambda r: tuple(x or "" for x in r))
 
 
@@ -297,6 +316,9 @@ QUERY_POOL = [
     # VALUES with UNDEF cells
     """SELECT ?s ?o WHERE { ?s <%(p0)s> ?o .
        VALUES (?s ?o) { (UNDEF "X") (<http://e/a> UNDEF) } }""",
+    # isURI over a variable that only a subquery binds
+    """SELECT ?x ?v WHERE { ?x <%(p2)s> ?z
+       { SELECT ?x ?v WHERE { ?x <%(p0)s> ?v } } FILTER(isURI(?v)) }""",
 ]
 
 
@@ -306,7 +328,9 @@ def _random_graph(rng, n):
 
 
 def _agree(spark, triples, q):
-    df = spark.createDataFrame(triples, "subj string, pred string, obj string")
+    df = spark.createDataFrame(
+        [(s, p, o, _is_iri(o)) for s, p, o in triples],
+        "subj string, pred string, obj string, obj_is_uri boolean")
     expected = naive_select(triples, q)
     got = sorted((tuple(r) for r in sparql_query(df, q).collect()),
                  key=lambda r: tuple(x or "" for x in r))

@@ -91,8 +91,7 @@ def test_lift_memo_is_keyed_by_the_dictionary(spark, extracted):
 
     def unmemoized(commondata):
         rows = tuple((r.uri, r.label, r.pred) for r in commondata.collect())
-        return T.fused_scalar_triples(
-            extracted, extra_structs=T._label_link_structs(rows))
+        return T._explode_triples(extracted, T._fused_lift.__wrapped__(rows))
 
     T._fused_lift.cache_clear()
     a = links(all_triples(extracted, first))
@@ -108,16 +107,38 @@ def test_lift_memo_is_keyed_by_the_dictionary(spark, extracted):
     assert T._fused_lift.cache_info().hits == hits + 1
 
 
-def test_join_branch_matches_fused_branch(spark, extracted, monkeypatch):
-    """A dictionary too big to compile into the fused lift takes the
-    join branch, which gives the same triple set."""
-    from ferenda_spark.operators import triples as T
+def test_dictionary_row_repeated_counts_once(spark, extracted):
+    """A row that appears twice in the dictionary links like one."""
+    first = commondata_df(spark)
+    twice = first.unionByName(first)
 
-    def triple_set():
-        t = all_triples(extracted, commondata_df(spark)).select(*KEY)
+    def triple_set(commondata):
+        t = all_triples(extracted, commondata).select(*KEY)
         return {tuple(r) for r in t.collect()}
 
-    fused = triple_set()
-    monkeypatch.setattr(T, "_LITERAL_DICT_MAX", 0)
-    joined = triple_set()
-    assert fused and joined == fused
+    assert triple_set(first) and triple_set(twice) == triple_set(first)
+
+
+def test_label_mapped_to_two_uris_raises(spark, extracted):
+    """A label with two URIs under one lookup predicate has no answer:
+    the lift raises before any job runs, naming the label and the
+    predicate."""
+    from ferenda_spark import ns
+
+    second = spark.createDataFrame(
+        [("http://localhost:8000/ext/nwg", "Network Working Group",
+          ns.FOAF_NAME)], "uri string, label string, pred string")
+    with pytest.raises(ValueError, match=(
+            f"'Network Working Group' maps to two URIs under "
+            f"{ns.FOAF_NAME}")):
+        all_triples(extracted, commondata_df(spark).unionByName(second))
+
+
+def test_dictionary_over_the_bound_raises(spark, extracted, monkeypatch):
+    """A dictionary bigger than the lift compiles into its expression
+    raises and names the bound; nothing falls back."""
+    from ferenda_spark.operators import triples as T
+
+    monkeypatch.setattr(T, "_LITERAL_DICT_MAX", 4)
+    with pytest.raises(ValueError, match="_LITERAL_DICT_MAX=4"):
+        all_triples(extracted, commondata_df(spark))

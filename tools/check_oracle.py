@@ -13,8 +13,7 @@ import sys
 
 sys.path.insert(0, ".")
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+TABLES = ["events", "documents", "embeddings"]
 
 
 def value_hash(df) -> str:
