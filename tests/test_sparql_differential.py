@@ -5,11 +5,11 @@ DataFrame plan on randomized graphs and a pool of query shapes.
 
 The naive evaluator implements the same algebra the compiler's module
 docstring specifies (patterns joined on shared vars -> subqueries
-joined in -> UNION branches joined in -> OPTIONALs left-joined -> VALUES joined in -> EXISTS ->
-MINUS -> FILTERs), with bag semantics and SPARQL's compatibility rule
-(an unbound variable is compatible with any value) — the same twin
-strategy the repo uses for the scalar function library
-(tests/test_scalars.py)."""
+joined in -> UNION branches joined in -> OPTIONALs left-joined ->
+VALUES joined in -> EXISTS -> MINUS -> FILTERs), with bag semantics
+and SPARQL's compatibility rule (an unbound variable is compatible
+with any value) — the same twin strategy the repo uses for the scalar
+function library (tests/test_scalars.py)."""
 
 import itertools
 import random
