@@ -7,10 +7,13 @@ Prints ONE JSON line:
 
 Extras (informational, per BASELINE.md protocol):
 - kg_docs_per_sec: throughput of the full KG pipeline (north-star metric)
-- scaling: the SAME KG job + input at local[8] and local[$CPUS], each in
-  its own fresh JVM subprocess (fair cold-start treatment), warmed up
-  in-session and timed as best-of-3.  efficiency = (T_low/T_high)/(N/8)
-  — the sandbox proxy for N vs 4N executor clusters (north_rule).
+- scaling: the SAME KG job + input at local[N] and local[4N], N =
+  max(1, $CPUS // 4) (1 -> 4 on a 4-vCPU box), each in its own fresh
+  JVM subprocess (fair cold-start treatment), warmed up in-session and
+  timed as best-of-3.  efficiency = (T_low/T_high)/4 — the sandbox
+  proxy for N vs 4N executor clusters (north_rule) — reported raw and
+  against the machine's own pure-CPU multiprocessing ceiling between
+  the same two levels.  Needs $CPUS >= 4.
 
 SPARK_GRAFT_CPUS defaults to the machine's CPU count, as in
 session.get_spark.
@@ -38,6 +41,9 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
 # scaling corpus: big enough that compute dominates local-mode task
 # overhead (~260 core-seconds; see BASELINE.md §4)
 KG_PAGES = int(os.environ.get("SPARK_GRAFT_KG_PAGES", "600000"))
+# the one N -> 4N scaling pair (see the module docstring)
+SCALE_LO = max(1, CPUS // 4)
+SCALE_HI = 4 * SCALE_LO
 
 # columns the triples stage needs — persisting the full extract output
 # (text + blocks) doubles cache size and GC pressure for nothing
@@ -222,7 +228,7 @@ def docs_bench_subprocess(cores: int, n_docs: int) -> dict:
     return _bench_subprocess("--docs-only", cores, n_docs)
 
 
-def cpu_ceiling(lo: int = 8, hi: int = 32) -> dict:
+def cpu_ceiling(lo: int, hi: int) -> dict:
     """The MACHINE's achievable scaling for pure-CPU multiprocessing
     work between the two parallelism levels (frequency scaling and
     hypervisor sharing cap it well below cores_hi/cores_lo on cloud
@@ -275,23 +281,18 @@ def main():
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     scaling_on = (os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
-                  and CPUS > 8)
+                  and SCALE_HI <= CPUS)
 
-    # KG pipeline at each parallelism level, fresh JVM each.  TWO
-    # N-vs-4N pairs: 8->32 is the full-box headline (32 threads = SMT
-    # over ~16 physical cores, so its raw efficiency is capped by the
-    # machine), 4->16 stays within physical cores and shows the
-    # engine's scaling without the SMT distortion.  Each pair is also
-    # reported against the machine's own pure-CPU multiprocessing
-    # ceiling between the same two levels.
+    # KG pipeline at full parallelism and at each end of the scaling
+    # pair, fresh JVM each
     if scaling_on:
         res_hi = kg_bench_subprocess(CPUS, KG_PAGES)
-        res_lo = kg_bench_subprocess(8, KG_PAGES)
-        res_16 = kg_bench_subprocess(max(CPUS // 2, 16), KG_PAGES)
-        res_4 = kg_bench_subprocess(4, KG_PAGES)
+        res_4n = (res_hi if SCALE_HI == CPUS
+                  else kg_bench_subprocess(SCALE_HI, KG_PAGES))
+        res_n = kg_bench_subprocess(SCALE_LO, KG_PAGES)
     else:
         res_hi = kg_bench(CPUS, KG_PAGES)
-        res_lo = res_16 = res_4 = None
+        res_n = res_4n = None
 
     # operator query suite at full parallelism
     spark = get_spark("bench_queries", cores=CPUS,
@@ -359,37 +360,32 @@ def main():
     # one-off numbers live in BASELINE.md so the per-round driver
     # bench stays bounded)
     if os.environ.get("SPARK_GRAFT_DOCS_SCALING", "0") != "0" and n_docs:
-        dr_hi = docs_bench_subprocess(CPUS, n_docs)
-        dr_lo = docs_bench_subprocess(8, n_docs)
+        dr_hi = docs_bench_subprocess(SCALE_HI, n_docs)
+        dr_lo = docs_bench_subprocess(SCALE_LO, n_docs)
         speedup = dr_lo["sec"] / dr_hi["sec"]
         extras["docs_scaling"] = {
             "job": "web_corpus_scrub_chain", "n_docs": n_docs,
-            "cores_low": 8, "cores_high": CPUS,
+            "cores_low": SCALE_LO, "cores_high": SCALE_HI,
             "sec_low": dr_lo["sec"], "sec_high": dr_hi["sec"],
             "docs_per_sec_low": dr_lo["docs_per_sec"],
             "docs_per_sec_high": dr_hi["docs_per_sec"],
             "speedup": round(speedup, 3),
-            "efficiency": round(speedup / (CPUS / 8), 3),
+            "efficiency": round(speedup / (SCALE_HI / SCALE_LO), 3),
         }
-    if res_lo:
-        def pair(lo, hi, r_lo, r_hi):
-            speedup = r_lo["sec"] / r_hi["sec"]
-            ceil = cpu_ceiling(lo, hi)
-            return {
-                "cores_low": lo, "cores_high": hi,
-                "kg_sec_low": r_lo["sec"], "kg_sec_high": r_hi["sec"],
-                "docs_per_sec_low": r_lo["docs_per_sec"],
-                "docs_per_sec_high": r_hi["docs_per_sec"],
-                "speedup": round(speedup, 3),
-                "efficiency": round(speedup / (hi / lo), 3),
-                "machine_cpu_ceiling_speedup": ceil["speedup"],
-                "efficiency_vs_machine_ceiling": round(
-                    speedup / ceil["speedup"], 3),
-            }
-
-        extras["scaling"] = pair(8, CPUS, res_lo, res_hi)
-        extras["scaling_physical"] = pair(4, max(CPUS // 2, 16),
-                                          res_4, res_16)
+    if res_n:
+        speedup = res_n["sec"] / res_4n["sec"]
+        ceil = cpu_ceiling(SCALE_LO, SCALE_HI)
+        extras["scaling"] = {
+            "cores_low": SCALE_LO, "cores_high": SCALE_HI,
+            "kg_sec_low": res_n["sec"], "kg_sec_high": res_4n["sec"],
+            "docs_per_sec_low": res_n["docs_per_sec"],
+            "docs_per_sec_high": res_4n["docs_per_sec"],
+            "speedup": round(speedup, 3),
+            "efficiency": round(speedup / (SCALE_HI / SCALE_LO), 3),
+            "machine_cpu_ceiling_speedup": ceil["speedup"],
+            "efficiency_vs_machine_ceiling": round(
+                speedup / ceil["speedup"], 3),
+        }
 
     print(json.dumps({
         "metric": "kg-construct suite wall-clock (extract+triples pipeline "

@@ -1398,6 +1398,14 @@ def _apply_bind(sol: DataFrame, toks: list[str], var: str,
     return sol
 
 
+def _with_shadows(names, df: DataFrame) -> list[str]:
+    """Each variable of ``names`` followed by the shadow columns ``df``
+    has for it."""
+    return [c for v in names
+            for c in (v, *(p + v for p in _SHADOW_PREFIXES
+                           if p + v in df.columns))]
+
+
 def _select_result(sol: DataFrame, ast: Query) -> DataFrame:
     """Solution -> SELECT result: aggregates, HAVING, projection,
     DISTINCT, ORDER/OFFSET/LIMIT.  A projected variable keeps the
@@ -1433,19 +1441,16 @@ def _select_result(sol: DataFrame, ast: Query) -> DataFrame:
                         "GROUP_CONCAT")
                 e = getattr(F, a.func)(F.col(a.var))
             exprs.append(e.alias(a.alias))
-        grouped = sol.groupBy(*ast.group_by) if ast.group_by \
-            else sol.groupBy()
-        out = grouped.agg(*exprs)
+        # a GROUP BY variable groups with its shadow columns, so a URI
+        # and an equal-string literal stay apart, as in SPARQL
+        out = sol.groupBy(*_with_shadows(ast.group_by, sol)).agg(*exprs)
         for htoks in ast.having:
             out = out.where(_compile_expr(htoks, out))
-        proj = ast.select_vars + \
-            [a.alias for a in ast.aggs]
-        out = out.select(*proj)
+        out = out.select(*_with_shadows(ast.select_vars, out),
+                         *[a.alias for a in ast.aggs])
     else:
-        out = sol.select(*[
-            c for v in ast.select_vars or sorted(_var_cols(sol.columns))
-            for c in (v, *(p + v for p in _SHADOW_PREFIXES
-                           if p + v in sol.columns))])
+        out = sol.select(*_with_shadows(
+            ast.select_vars or sorted(_var_cols(sol.columns)), sol))
         if ast.distinct:
             out = out.dropDuplicates()
     if ast.order_by:

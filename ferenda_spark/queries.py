@@ -22,6 +22,7 @@ Conventions that make the oracle comparison exact:
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,28 +95,10 @@ def _shingles_df(spark, sf_dir) -> DataFrame:
 
 # the triple lift used by the kg_* oracle queries (SQL-expressible subset
 # of operators/triples.py, over the documents table)
-def _lift(spark, sf_dir) -> DataFrame:
-    d = _read(spark, sf_dir, "documents")
-    subj = F.concat(F.lit(BASE + "res/"), "source", F.lit("/"),
-                    F.col("doc_id").cast("string"))
-    ent = F.concat(F.lit(BASE + "ext/"), "source")
-    branches = [
-        (F.lit(RDF_TYPE), F.lit(FOAF_DOC)),
-        (F.lit(DCT + "identifier"), F.col("doc_id").cast("string")),
-        (F.lit(DCT + "language"), F.col("lang")),
-        (F.lit(DCT + "publisher"), ent),
-        (F.lit(DCT + "extent"), F.col("n_chars").cast("string")),
-    ]
-    out = None
-    for pred, obj in branches:
-        b = d.select(subj.alias("subj"), pred.alias("pred"), obj.alias("obj"))
-        out = b if out is None else out.unionByName(b)
-    return out.where(F.col("obj").isNotNull())
-
-
-def _lift_typed(spark, sf_dir) -> DataFrame:
-    """The _lift graph with the schema's obj_is_uri flag (triples.py
-    TRIPLES_COLS) — what isURI/isLiteral FILTERs read, exactly."""
+def _lift(spark, sf_dir, typed: bool = False) -> DataFrame:
+    """(subj, pred, obj) triples; ``typed`` keeps the schema's
+    obj_is_uri flag (triples.py TRIPLES_COLS) — what isURI/isLiteral
+    FILTERs read, exactly."""
     d = _read(spark, sf_dir, "documents")
     subj = F.concat(F.lit(BASE + "res/"), "source", F.lit("/"),
                     F.col("doc_id").cast("string"))
@@ -132,7 +115,8 @@ def _lift_typed(spark, sf_dir) -> DataFrame:
         b = d.select(subj.alias("subj"), pred.alias("pred"),
                      obj.alias("obj"), F.lit(is_uri).alias("obj_is_uri"))
         out = b if out is None else out.unionByName(b)
-    return out.where(F.col("obj").isNotNull())
+    out = out.where(F.col("obj").isNotNull())
+    return out if typed else out.drop("obj_is_uri")
 
 
 _LIFT_CTE = f"""
@@ -312,14 +296,31 @@ def _cap_hot_buckets(bb: DataFrame, cap: int) -> DataFrame:
     return bb.join(ok, ["band", "bkey"], "left_semi")
 
 
+# The PRODUCTION LSH configuration: 16 permutations, 4 bands x 4 rows,
+# verification threshold 0.5, hot-bucket cap 256.  The demo banding
+# (r=2) has per-band collision probability s^2 — documents sharing ONE
+# boilerplate sentence (s ~= 0.02) collide often enough that a 100k-doc
+# corpus with a 35% boilerplate rate generates ~10^6 candidate pairs
+# (measured 76 s on the scaled fixtures corpus; BASELINE.md).  r=4
+# drops that to s^4: the same corpus yields only genuine near-dup
+# candidates (s >= ~0.7 at 50% band recall; s* = (1/b)^(1/r) = 0.71).
+# The bucket cap bounds the worst case — a bucket of k docs is
+# inherently k^2 in pair output, so giant buckets (hash-collision
+# pathologies, template storms) are dropped and their mass delegated
+# to the cluster/KEEP path, same rationale as _NGRAM_BLOCK_CAP.  The
+# same dict configures the Spark query and its DuckDB oracle.
+LSH_PROD = {"n_perms": 16, "bands": 4, "rows_per_band": 4,
+            "min_jaccard": 0.5, "bucket_cap": 256}
+
+
 def q_dedup_lsh_pairs(spark, sf_dir, n_perms: int = _N_MINHASH,
                       bands: int = 4, rows_per_band: int = 2,
                       min_jaccard: float = 0.05,
                       bucket_cap: int | None = None):
     """LSH banding (default 4 bands x 2 rows) over the minhash
     signatures -> candidate pairs -> exact bigram-jaccard verification.
-    Parameterized; the oracle gates BOTH this demo default and the
-    production configuration (q_dedup_lsh_pairs_prod).  The shingle and
+    Parameterized; the oracle gates BOTH this demo default and
+    LSH_PROD (registry name dedup_lsh_pairs_prod).  The shingle and
     signature tables feed multiple downstream joins, so persist them
     (at cluster scale these are materialized intermediate tables);
     shingles travel as 8-byte hashes, never strings."""
@@ -338,26 +339,6 @@ def q_dedup_lsh_pairs(spark, sf_dir, n_perms: int = _N_MINHASH,
                 F.col("b.doc_id").alias("doc_b"))
         .distinct())
     return _lsh_verify(cand, sh, min_jaccard)
-
-
-def q_dedup_lsh_pairs_prod(spark, sf_dir):
-    """The PRODUCTION LSH configuration: 16 permutations, 4 bands x 4
-    rows, verification threshold 0.5, hot-bucket cap 256.
-
-    Why this exists as a separate gated query: the demo banding (r=2)
-    has per-band collision probability s^2 — documents sharing ONE
-    boilerplate sentence (s ~= 0.02) collide often enough that a 100k-
-    doc corpus with a 35% boilerplate rate generates ~10^6 candidate
-    pairs (measured 76 s on the scaled fixtures corpus; BASELINE.md).
-    r=4 drops that to s^4: the same corpus yields only genuine near-dup
-    candidates (s >= ~0.7 at 50% band recall; s* = (1/b)^(1/r) = 0.71).
-    The bucket cap bounds the worst case — a bucket of k docs is
-    inherently k^2 in pair output, so giant buckets (hash-collision
-    pathologies, template storms) are dropped and their mass delegated
-    to the cluster/KEEP path, same rationale as _NGRAM_BLOCK_CAP."""
-    return q_dedup_lsh_pairs(spark, sf_dir, n_perms=16, bands=4,
-                             rows_per_band=4, min_jaccard=0.5,
-                             bucket_cap=256)
 
 
 def _lsh_band_table(sig: DataFrame, bands: int,
@@ -510,6 +491,19 @@ def q_dedup_simhash(spark, sf_dir):
     return _simhash_bands(spark, sf_dir)
 
 
+# The PRODUCTION SimHash near-dup configuration: hot-bucket cap 256
+# before the band self-join, output restricted to Hamming <= 3 (Manku
+# et al., WWW'07 — the standard near-dup radius for 64-bit
+# fingerprints).  Fingerprints over a real (zipf-headed) corpus are NOT
+# uniform — topically-similar docs cluster in band space.  On the
+# 100k-doc fixtures corpus the uncapped demo banding emits 51.4M
+# candidate pairs, and the 135 buckets larger than 256 docs carry
+# 42.3M of them (a k-doc bucket is k^2 in pair output).  The cap bounds
+# the worst case and delegates pathological buckets to the
+# cluster/KEEP path — same discipline as LSH_PROD.
+SIMHASH_PROD = {"bucket_cap": 256, "max_hamming": 3}
+
+
 def q_dedup_simhash_band_pairs(spark, sf_dir,
                                bucket_cap: int | None = None,
                                max_hamming: int | None = None):
@@ -520,8 +514,8 @@ def q_dedup_simhash_band_pairs(spark, sf_dir,
     distance computed per candidate from the band xors.
 
     Parameterized like the LSH family; the oracle gates BOTH this demo
-    default and the production configuration
-    (q_dedup_simhash_band_pairs_prod)."""
+    default and SIMHASH_PROD (registry name
+    dedup_simhash_band_pairs_prod)."""
     sim = _simhash_bands(spark, sf_dir).persist()
     # one scan of the simhash table for all band keys (explode), not a
     # 4-way union of scans
@@ -556,24 +550,7 @@ def q_dedup_simhash_band_pairs(spark, sf_dir,
     return out
 
 
-def q_dedup_simhash_band_pairs_prod(spark, sf_dir):
-    """The PRODUCTION SimHash near-dup configuration: hot-bucket cap
-    256 before the band self-join, output restricted to Hamming <= 3
-    (Manku et al., WWW'07 — the standard near-dup radius for 64-bit
-    fingerprints).
-
-    Why this exists: fingerprints over a real (zipf-headed) corpus are
-    NOT uniform — topically-similar docs cluster in band space.  On the
-    100k-doc fixtures corpus the uncapped demo banding emits 51.4M
-    candidate pairs, and the 135 buckets larger than 256 docs carry
-    42.3M of them (a k-doc bucket is k^2 in pair output).  The cap
-    bounds the worst case and delegates pathological buckets to the
-    cluster/KEEP path — same discipline as q_dedup_lsh_pairs_prod."""
-    return q_dedup_simhash_band_pairs(spark, sf_dir, bucket_cap=256,
-                                      max_hamming=3)
-
-
-def q_dedup_clusters(spark, sf_dir, pairs_fn=None):
+def q_dedup_clusters(spark, sf_dir, **lsh):
     """Near-duplicate CLUSTERS: connected components over the LSH
     candidate-pair graph (HashMin label propagation — each step every
     node takes the min label in its closed neighborhood; two hops per
@@ -581,9 +558,9 @@ def q_dedup_clusters(spark, sf_dir, pairs_fn=None):
     a per-round change count).  The edge set is the banded LSH
     candidates, never all-pairs —
     at 10^9 docs this is the dedup-group materialization step after
-    candidate generation.  `pairs_fn` selects the edge generator
-    (default: the demo LSH banding; the shards chain passes the
-    production config).
+    candidate generation.  ``lsh`` is the q_dedup_lsh_pairs config of
+    the edge set (default: the demo banding; the shards chain passes
+    LSH_PROD).
 
     Output: (doc_id, cluster_id) with cluster_id = min doc_id of the
     component; singletons keep their own id."""
@@ -591,7 +568,7 @@ def q_dedup_clusters(spark, sf_dir, pairs_fn=None):
     # (localCheckpoint): without it the logical plan doubles per round
     # and planning time dwarfs execution — the standard Spark iterative-
     # algorithm discipline (same as operators/kmeans.py)
-    pairs = ((pairs_fn or q_dedup_lsh_pairs)(spark, sf_dir)
+    pairs = (q_dedup_lsh_pairs(spark, sf_dir, **lsh)
              .select("doc_a", "doc_b").localCheckpoint())
     nodes = _read(spark, sf_dir, "documents").select("doc_id")
     return _hashmin_labels(nodes, pairs)
@@ -698,7 +675,8 @@ def q_dedup_clusters_incremental(spark, sf_dir):
     state + incremental pairs carry exactly the same information)."""
     d = _read(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 5 == 0
-    all_pairs = q_dedup_lsh_pairs_prod(spark, sf_dir).localCheckpoint()
+    all_pairs = q_dedup_lsh_pairs(spark, sf_dir,
+                                  **LSH_PROD).localCheckpoint()
     touches_new = (F.col("doc_a") % 5 == 0) | (F.col("doc_b") % 5 == 0)
     old_pairs = all_pairs.where(~touches_new)
     new_pairs = all_pairs.where(touches_new)
@@ -1245,8 +1223,7 @@ def q_corpus_to_shards_chain(spark, sf_dir):
     Clustering runs over the PRODUCTION LSH pair config (r=4 banding +
     hot-bucket cap) — the demo r=2 banding's junk candidates would both
     blow up the pair join at corpus scale and over-merge clusters."""
-    labels = q_dedup_clusters(spark, sf_dir,
-                              pairs_fn=q_dedup_lsh_pairs_prod)
+    labels = q_dedup_clusters(spark, sf_dir, **LSH_PROD)
     canon = (labels.where(F.col("doc_id") == F.col("cluster_id"))
              .select("doc_id"))
     clean = (q_decontaminate_ngrams(spark, sf_dir)
@@ -1580,8 +1557,7 @@ def q_split_leakage_safe(spark, sf_dir):
     Scale shape: clusters is the iterative stage (see
     q_dedup_clusters); the split itself is a pure column expression on
     its output."""
-    labels = q_dedup_clusters(spark, sf_dir,
-                              pairs_fn=q_dedup_lsh_pairs_prod)
+    labels = q_dedup_clusters(spark, sf_dir, **LSH_PROD)
     b = _h(F.concat(F.lit("split:"),
                     F.col("cluster_id").cast("string"))) % 100
     split = F.when(b < 90, "train").when(b < 95, "valid") \
@@ -1621,8 +1597,7 @@ def q_split_from_labels(spark, sf_dir):
     refreshes), the split itself is split_from_labels' join +
     expression.  The oracle pins it against the same recursive-CTE
     clustering twin."""
-    labels = q_dedup_clusters(spark, sf_dir,
-                              pairs_fn=q_dedup_lsh_pairs_prod).persist()
+    labels = q_dedup_clusters(spark, sf_dir, **LSH_PROD).persist()
     return split_from_labels(_read_wide(spark, sf_dir, "documents"),
                              labels)
 
@@ -1985,87 +1960,27 @@ def _cos(a, b):
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
-def _ivf_assigned(e: DataFrame) -> DataFrame:
-    """(vec_id, v, cluster): nearest of the 4 fixed centroids (vec_id
-    0..3) by cosine, ties to the lower centroid id.  Centroids
-    broadcast; shared by the IVF probe and semantic dedup."""
-    cent = e.where("vec_id < 4").select(F.col("vec_id").alias("cent_id"),
-                                        F.col("v").alias("cv"))
-    return (e.join(F.broadcast(cent))
-            .withColumn("cos_c", _cos(F.col("v"), F.col("cv")))
-            .withColumn("rn", F.row_number().over(
-                Window.partitionBy("vec_id")
-                .orderBy(F.desc("cos_c"), F.asc("cent_id"))))
-            .where("rn = 1")
-            .select("vec_id", "v", F.col("cent_id").alias("cluster")))
+# The production quantizer for IVF ANN and SemDeDup: K=256 coarse
+# cells.  SemDeDup's recipe grows K with the corpus so each cell stays
+# pairwise-tractable (a cell of c vectors is c^2 in comparisons); IVF
+# probes nprobe=8 cells per query, ~K/nprobe = 32x less work than brute
+# force; tau=0.97 keeps only near-duplicate pairs.
+_PROD_CELLS = 256
+SEMDEDUP_PROD = {"k": _PROD_CELLS, "tau": 0.97}
+IVF_PROD = {"k": _PROD_CELLS, "nprobe": 8}
 
 
-_SEMDEDUP_TAU = 0.25
-
-
-def q_dedup_semantic(spark, sf_dir):
-    """SemDeDup-style semantic deduplication (embedding-space dedup a
-    pretraining pipeline runs where MinHash misses paraphrases):
-    vectors are k-means-assigned to a coarse cluster, pairwise cosine
-    is computed ONLY within each cluster, and a vector is a semantic
-    dup if a LOWER-id cluster-mate sits within cosine >= tau — the
-    kept set is the per-group minimum id, exactly like the lexical
-    KEEP step (q_dedup_keep_canonical).
-
-    Scale shape: centroids broadcast (assignment is narrow); vector
-    norms are computed ONCE per vector, not per pair (the cosine is
-    dot/(na*nb) with the exact oracle arithmetic, just hoisted); the
-    pairwise join BROADCASTS the cluster-mate side — K is tiny here
-    (4, for oracle bit-reproducibility), so a shuffle join on the
-    cluster key would collapse parallelism to K tasks (measured 10 s
-    -> 1.5 s at sf0.1).  In production the SemDeDup recipe bounds
-    cluster SIZE and grows K with the corpus: the mate side of any
-    one cluster stays broadcast-sized, or the join shuffles on a
-    then-high-cardinality key — either way no K-task bottleneck.  The
-    kmeans refresh that re-centers clusters is operators/kmeans.py."""
-    # assignment feeds three consumers (both pair sides + the output
-    # spine): persist, same discipline as the LSH signature tables
-    assigned = (_ivf_assigned(_vec(spark, sf_dir))
-                .withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v"))))
-                .persist())
-    a = assigned.select(F.col("vec_id").alias("id_a"),
-                        F.col("v").alias("va"), F.col("nv").alias("na"),
-                        "cluster")
-    b = assigned.select(F.col("vec_id").alias("id_b"),
-                        F.col("v").alias("vb"), F.col("nv").alias("nb"),
-                        "cluster")
-    dup = (a.join(F.broadcast(b), "cluster")
-           .where(F.col("id_a") < F.col("id_b"))
-           .withColumn("cos", F.round(
-               _dot(F.col("va"), F.col("vb"))
-               / (F.col("na") * F.col("nb")), 3))
-           .where(F.col("cos") >= _SEMDEDUP_TAU)
-           .groupBy(F.col("id_b").alias("vec_id"))
-           .agg(F.max("cos").alias("max_cos_to_lower")))
-    return (assigned.select("vec_id", "cluster")
-            .join(dup, "vec_id", "left")
-            .select("vec_id", F.col("cluster").cast("long").alias("cluster"),
-                    "max_cos_to_lower",
-                    F.col("max_cos_to_lower").isNotNull()
-                    .alias("is_semdup")))
-
-
-_SEMDEDUP_K = 256
-_SEMDEDUP_TAU_PROD = 0.97
-
-
-def _cell_assigned(spark, e: DataFrame) -> DataFrame:
-    """(vec_id, v, cell): nearest of the K=256 deterministic centroid
-    stand-ins (vec_id < K) by cosine, computed as one vectorized
-    (batch x K) matmul per Arrow batch.  Only the K centroid rows reach
+def _cell_assigned(spark, e: DataFrame, k: int) -> DataFrame:
+    """(vec_id, v, cluster): nearest of the k deterministic centroid
+    stand-ins (vec_id < k) by cosine, computed as one vectorized
+    (batch x k) matmul per Arrow batch.  Only the k centroid rows reach
     the driver (operators/kmeans.py contract); ties break to the lower
     centroid id (numpy argmax = first max), matching the oracle's
-    row_number order.  Shared by the production SemDeDup and IVF ANN
-    paths."""
+    row_number order.  Shared by SemDeDup and the IVF probe."""
     import numpy as np
 
-    cent = (e.where(f"vec_id < {_SEMDEDUP_K}").orderBy("vec_id")
-            .collect())  # bounded: K rows, never the vector table
+    cent = (e.where(F.col("vec_id") < k).orderBy("vec_id")
+            .collect())  # bounded: k rows, never the vector table
     cm = np.array([r.v for r in cent], dtype=np.float64)
     cids = np.array([r.vec_id for r in cent], dtype=np.int64)
     cn = np.sqrt((cm * cm).sum(axis=1))
@@ -2078,38 +1993,44 @@ def _cell_assigned(spark, e: DataFrame) -> DataFrame:
             xn = np.sqrt((x * x).sum(axis=1))
             cos = (x @ cm.T) / np.outer(xn, cn)
             out = pdf[["vec_id", "v"]].copy()
-            out["cell"] = cids[cos.argmax(axis=1)]
+            out["cluster"] = cids[cos.argmax(axis=1)]
             yield out
 
-    return e.mapInPandas(assign, "vec_id long, v array<double>, cell long")
+    return e.mapInPandas(assign, "vec_id long, v array<double>, cluster long")
 
 
-def q_dedup_semantic_prod(spark, sf_dir):
-    """The PRODUCTION SemDeDup configuration: K=256 coarse cells and
-    Arrow-batched numpy kernels for the dense math.  SemDeDup's recipe
-    grows K with the corpus so each cell stays pairwise-tractable
-    (cells of c docs are c^2 in comparisons); at K=256 the demo's
-    broadcast-everything join and the JVM higher-order-function cosine
-    both stop making sense — assignment is 256 dot products per vector
-    and the within-cell pairwise is a dense c x c Gram matrix, exactly
-    the workloads vectorized Arrow batches exist for (the ONE place
-    this engine drops to Python in a hot path: dense linear algebra,
-    where numpy's BLAS beats interpreted JVM lambdas by orders of
-    magnitude).
+def q_dedup_semantic(spark, sf_dir, k: int = 4, tau: float = 0.25):
+    """SemDeDup-style semantic deduplication (embedding-space dedup a
+    pretraining pipeline runs where MinHash misses paraphrases):
+    vectors are assigned to the nearest of k coarse cells
+    (_cell_assigned), pairwise cosine is computed ONLY within each
+    cell, and every within-cell pair with cosine >= tau is output as
+    (cluster, vec_a, vec_b, cos), vec_a < vec_b — vec_b is a semantic
+    dup of a lower-id cell-mate, and the kept set is the per-group
+    minimum id, exactly like the lexical KEEP step
+    (q_dedup_keep_canonical).  Configs: the oracle-gated default
+    (k=4, tau=0.25) and SEMDEDUP_PROD (registry name
+    dedup_semantic_prod).
 
-    Scale shape: only the K centroid rows ever reach the driver (same
+    The dense math runs in Arrow-batched numpy kernels: assignment is k
+    dot products per vector and the within-cell pairwise is a dense
+    c x c Gram matrix, exactly the workloads vectorized Arrow batches
+    exist for (the ONE place this engine drops to Python in a hot
+    path: dense linear algebra, where numpy's BLAS beats interpreted
+    JVM lambdas by orders of magnitude).
+
+    Scale shape: only the k centroid rows ever reach the driver (same
     contract as operators/kmeans.py); assignment is a narrow
-    mapInPandas with the (K x dim) matrix broadcast; the only shuffle
-    is the applyInPandas groupBy(cell), cell-count-bounded parallelism;
-    pairs above tau=0.97 are filtered INSIDE the kernel so only
+    mapInPandas with the (k x dim) matrix broadcast; the only shuffle
+    is the applyInPandas groupBy(cluster), cell-count-bounded
+    parallelism; pairs below tau are dropped INSIDE the kernel so only
     near-dup pairs ever leave a task.  Centroids are the deterministic
-    vec_id < K stand-ins so the DuckDB oracle reproduces the
+    vec_id < k stand-ins so the DuckDB oracle reproduces the
     assignment (the centroid refresh job is operators/kmeans.py)."""
     import numpy as np
     import pandas as pd
 
-    e = _vec(spark, sf_dir)
-    assigned = _cell_assigned(spark, e)
+    assigned = _cell_assigned(spark, _vec(spark, sf_dir), k)
 
     def pair_kernel(pdf):
         ids = pdf["vec_id"].to_numpy()
@@ -2121,75 +2042,60 @@ def q_dedup_semantic_prod(spark, sf_dir):
         ia, ib = np.triu_indices(len(ids), k=1)
         # half-UP rounding to match F.round/DuckDB round (np.round is
         # banker's half-to-even — the file's oracle-exactness
-        # convention); only cos >= tau survive, so values are positive
+        # convention); only cos >= tau > 0 survive, so values are
+        # positive
         cos = np.floor(g[ia, ib] * 1000 + 0.5) / 1000
-        keep = cos >= _SEMDEDUP_TAU_PROD
+        keep = cos >= tau
         return pd.DataFrame({
-            "cell": np.full(int(keep.sum()), pdf["cell"].iloc[0],
-                            dtype=np.int64),
+            "cluster": np.full(int(keep.sum()), pdf["cluster"].iloc[0],
+                               dtype=np.int64),
             "vec_a": ids[ia[keep]], "vec_b": ids[ib[keep]],
             "cos": cos[keep]})
 
-    return assigned.groupBy("cell").applyInPandas(
-        pair_kernel, "cell long, vec_a long, vec_b long, cos double")
+    return assigned.groupBy("cluster").applyInPandas(
+        pair_kernel, "cluster long, vec_a long, vec_b long, cos double")
 
 
-_IVF_NPROBE = 8
-
-
-def q_ann_ivf_topk_prod(spark, sf_dir):
-    """The PRODUCTION IVF ANN configuration: K=256 cells (the
-    _cell_assigned quantizer shared with SemDeDup) and nprobe=8 — each
-    query scores only the vectors in its 8 nearest cells, ~K/nprobe
-    = 32x less work than brute force, with multi-cell probing buying
-    back the recall a single cell loses at boundaries (the standard
-    IVF recall/latency dial).
+def q_ann_ivf_topk(spark, sf_dir, k: int = 4, nprobe: int = 1):
+    """IVF ANN (scale path): corpus vectors are assigned to the nearest
+    of k cells (the _cell_assigned quantizer shared with SemDeDup), and
+    each of the 5 query vectors scores only the vectors in its nprobe
+    nearest cells — ~k/nprobe less work than brute force, with
+    multi-cell probing buying back the recall a single cell loses at
+    boundaries (the standard IVF recall/latency dial).  Output: the
+    top 3 per query as (qid, cluster, cid, cos, rn), cluster being the
+    probed cell that holds cid.  Configs: the oracle-gated default
+    (k=4, nprobe=1) and IVF_PROD (registry name ann_ivf_topk_prod).
+    Centroids are the deterministic vec_id < k stand-ins so the DuckDB
+    oracle reproduces the assignment bit-for-bit; the actual refresh
+    job is operators/kmeans.py (distributed Lloyd iterations, one
+    shuffle each, unit-gated on monotone inertia).
 
     Scale shape: the corpus side is the mapInPandas cell assignment
     (one narrow pass); the probe list is (queries x nprobe) rows from a
     queries-x-centroids broadcast join (both sides bounded); candidate
     scoring shuffles only the probed cells' vectors — the per-query
-    candidate set is corpus/K * nprobe, independent of corpus size."""
+    candidate set is corpus/k * nprobe, independent of corpus size."""
     e = _vec(spark, sf_dir)
-    assigned = _cell_assigned(spark, e)
+    assigned = _cell_assigned(spark, e, k)
     q = (e.where("vec_id < 5")
          .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv")))
-    cent = (e.where(f"vec_id < {_SEMDEDUP_K}")
-            .select(F.col("vec_id").alias("cell"), F.col("v").alias("cv")))
-    wq = Window.partitionBy("qid").orderBy(F.desc("cos_c"), F.asc("cell"))
+    cent = (e.where(F.col("vec_id") < k)
+            .select(F.col("vec_id").alias("cluster"),
+                    F.col("v").alias("cv")))
+    wq = Window.partitionBy("qid").orderBy(F.desc("cos_c"), F.asc("cluster"))
     probe = (q.join(F.broadcast(cent))
              .withColumn("cos_c", _cos(F.col("qv"), F.col("cv")))
              .withColumn("pr", F.row_number().over(wq))
-             .where(F.col("pr") <= _IVF_NPROBE)
-             .select("qid", "qv", "cell"))
-    cand = (F.broadcast(probe).join(assigned, "cell")
+             .where(F.col("pr") <= nprobe)
+             .select("qid", "qv", "cluster"))
+    cand = (F.broadcast(probe).join(assigned, "cluster")
             .where(F.col("qid") != F.col("vec_id"))
             .withColumn("cos", F.round(_cos(F.col("qv"), F.col("v")), 3)))
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (cand.select("qid", F.col("vec_id").alias("cid"), "cos",
+    return (cand.select("qid", "cluster", F.col("vec_id").alias("cid"),
+                        "cos",
                         F.row_number().over(w).cast("long").alias("rn"))
-            .where(F.col("rn") <= 3))
-
-
-def q_ann_ivf_topk(spark, sf_dir):
-    """IVF-style ANN (scale path): vectors are assigned to the nearest of
-    4 fixed centroids (coarse quantizer), and each query searches only
-    its own cluster — probing 1/K of the corpus instead of all of it.
-    Centroids here are vec_id 0..3 — deterministic stand-ins so the
-    DuckDB oracle can reproduce the assignment bit-for-bit; the actual
-    refresh job is operators/kmeans.py (distributed Lloyd iterations,
-    one shuffle each, unit-gated on monotone inertia)."""
-    assigned = _ivf_assigned(_vec(spark, sf_dir)).persist()
-    q = (assigned.where("vec_id < 5")
-         .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"),
-                 "cluster"))
-    c = assigned.select(F.col("vec_id").alias("cid"),
-                        F.col("v").alias("cv2"), "cluster")
-    pairs = (q.join(c, "cluster").where(F.col("qid") != F.col("cid"))
-             .withColumn("cos", F.round(_cos(F.col("qv"), F.col("cv2")), 3)))
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
-    return (pairs.select("qid", "cluster", "cid", "cos",
-                         F.row_number().over(w).cast("long").alias("rn"))
             .where(F.col("rn") <= 3))
 
 
@@ -2918,7 +2824,7 @@ def q_sparql_filter_select(spark, sf_dir):
     Catalyst predicate over the pattern scans (pushdown-eligible, no
     UDF); the 2-constant rdf:type pattern joins broadcast-hinted."""
     from ferenda_spark.operators.sparql import sparql_query
-    g = _lift_typed(spark, sf_dir)
+    g = _lift(spark, sf_dir, typed=True)
     rq = f"""
     PREFIX dct: <{DCT}>
     SELECT ?doc ?p ?o ?os WHERE {{
@@ -3205,10 +3111,12 @@ def _cap_cte_sql(src: str, cap: int | None) -> tuple[str, str]:
             f"USING (band, bkey)),\n", f"{src}ok")
 
 
-def _lsh_pairs_ctes(n_perms: int, bands: int, rows_per_band: int,
-                    min_j: float, bucket_cap: int | None = None) -> str:
+def _lsh_pairs_ctes(n_perms: int = _N_MINHASH, bands: int = 4,
+                    rows_per_band: int = 2, min_jaccard: float = 0.05,
+                    bucket_cap: int | None = None) -> str:
     """The full DuckDB CTE chain for LSH pairs at ANY banding config —
-    mirrors q_dedup_lsh_pairs parameter-for-parameter."""
+    mirrors q_dedup_lsh_pairs parameter-for-parameter, so one config
+    dict (LSH_PROD) feeds both."""
     mh_cols = ", ".join(
         f"min(({_MH_A[j]} * hp + {_MH_B[j]}) % {_MH_P}) AS mh{j}"
         for j in range(n_perms))
@@ -3239,13 +3147,14 @@ lsh_pairs AS (
   FROM inter i
   JOIN sizes sa ON sa.doc_id = i.doc_a
   JOIN sizes sb ON sb.doc_id = i.doc_b
-  WHERE round(i.inter * 1.0 / (sa.n + sb.n - i.inter), 4) >= {min_j})"""
+  WHERE round(i.inter * 1.0 / (sa.n + sb.n - i.inter), 4) >= {min_jaccard})"""
 
 
-_LSH_PAIRS_CTES = _lsh_pairs_ctes(_N_MINHASH, 4, 2, 0.05)
+_LSH_PAIRS_CTES = _lsh_pairs_ctes()
+_LSH_PROD_CTES = _lsh_pairs_ctes(**LSH_PROD)
 
 ORACLE["dedup_lsh_pairs_prod"] = f"""
-WITH {_lsh_pairs_ctes(16, 4, 4, 0.5, bucket_cap=256)}
+WITH {_LSH_PROD_CTES}
 SELECT doc_a, doc_b, jaccard FROM lsh_pairs
 """
 
@@ -3293,7 +3202,7 @@ FROM documents d JOIN clusters c ON d.doc_id = c.cluster_id
 """
 
 ORACLE["corpus_to_shards_chain"] = f"""
-WITH RECURSIVE {_lsh_pairs_ctes(16, 4, 4, 0.5, bucket_cap=256)},
+WITH RECURSIVE {_LSH_PROD_CTES},
 {_CC_CTES},
 canon AS (SELECT doc_id FROM labels WHERE doc_id = cluster_id),
 g AS (SELECT DISTINCT doc_id,
@@ -3402,8 +3311,7 @@ SELECT doc_a, doc_b, hamming FROM pairs {ham_where}
 
 
 ORACLE["dedup_simhash_band_pairs"] = _simhash_pairs_sql()
-ORACLE["dedup_simhash_band_pairs_prod"] = _simhash_pairs_sql(
-    bucket_cap=256, max_hamming=3)
+ORACLE["dedup_simhash_band_pairs_prod"] = _simhash_pairs_sql(**SIMHASH_PROD)
 
 ORACLE["ann_cosine_topk"] = """
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -3487,7 +3395,7 @@ FROM r
 """
 
 ORACLE["split_leakage_safe"] = f"""
-WITH RECURSIVE {_lsh_pairs_ctes(16, 4, 4, 0.5, bucket_cap=256)},
+WITH RECURSIVE {_LSH_PROD_CTES},
 {_CC_CTES}
 SELECT doc_id, cluster_id,
        CASE WHEN {_H_SQL.format(x="'split:' || cluster_id::VARCHAR")}
@@ -3499,13 +3407,13 @@ FROM labels
 """
 
 ORACLE["dedup_clusters_incremental"] = f"""
-WITH RECURSIVE {_lsh_pairs_ctes(16, 4, 4, 0.5, bucket_cap=256)},
+WITH RECURSIVE {_LSH_PROD_CTES},
 {_CC_CTES}
 SELECT doc_id, cluster_id FROM labels
 """
 
 ORACLE["split_from_labels"] = f"""
-WITH RECURSIVE {_lsh_pairs_ctes(16, 4, 4, 0.5, bucket_cap=256)},
+WITH RECURSIVE {_LSH_PROD_CTES},
 {_CC_CTES},
 j AS (
   SELECT d.doc_id, d.source,
@@ -4414,8 +4322,13 @@ allhops AS (
 SELECT src, dst, min(depth)::BIGINT AS depth FROM allhops GROUP BY src, dst
 """
 
-_IVF_ASG_CTES = """e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < 4),
+def _asg_ctes(k: int) -> str:
+    """DuckDB twin of _cell_assigned: (vec_id, v, cluster), the nearest
+    of the k centroid stand-ins by cosine, ties to the lower id.  One
+    copy for the SemDeDup and IVF oracles, so the tie-break can never
+    desynchronize between them."""
+    return f"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+cent AS (SELECT vec_id AS cent_id, v AS cv FROM e WHERE vec_id < {k}),
 asg AS (
   SELECT vec_id, v, cent_id AS cluster FROM (
     SELECT e.vec_id, e.v, c.cent_id,
@@ -4427,95 +4340,55 @@ asg AS (
                       c.cent_id ASC) AS rn
     FROM e CROSS JOIN cent c) WHERE rn = 1)"""
 
-# the K=256 quantizer assignment — the DuckDB twin of _cell_assigned,
-# shared by the production SemDeDup and IVF oracles (one copy so the
-# tie-break can never desynchronize between them)
-_CELL_ASG_CTES = f"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-cent AS (SELECT vec_id AS cent_id, v AS cv FROM e
-         WHERE vec_id < {_SEMDEDUP_K}),
-asg AS (
-  SELECT vec_id, v, cent_id AS cell FROM (
-    SELECT e.vec_id, e.v, c.cent_id,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_dot_product(e.v, c.cv)
-                      / (sqrt(list_dot_product(e.v, e.v))
-                         * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-                      c.cent_id ASC) AS rn
-    FROM e CROSS JOIN cent c) WHERE rn = 1)"""
 
-ORACLE["dedup_semantic_prod"] = f"""
-WITH {_CELL_ASG_CTES}
-SELECT a.cell::BIGINT AS cell, a.vec_id AS vec_a, b.vec_id AS vec_b,
+def _semdedup_sql(k: int = 4, tau: float = 0.25) -> str:
+    """DuckDB twin of q_dedup_semantic at ANY config."""
+    return f"""
+WITH {_asg_ctes(k)}
+SELECT a.cluster::BIGINT AS cluster, a.vec_id AS vec_a, b.vec_id AS vec_b,
        round(list_dot_product(a.v, b.v)
              / (sqrt(list_dot_product(a.v, a.v))
                 * sqrt(list_dot_product(b.v, b.v))), 3) AS cos
-FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id
+FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
 WHERE round(list_dot_product(a.v, b.v)
             / (sqrt(list_dot_product(a.v, a.v))
-               * sqrt(list_dot_product(b.v, b.v))), 3)
-      >= {_SEMDEDUP_TAU_PROD}
+               * sqrt(list_dot_product(b.v, b.v))), 3) >= {tau}
 """
 
-ORACLE["ann_ivf_topk_prod"] = f"""
-WITH {_CELL_ASG_CTES},
+
+def _ivf_sql(k: int = 4, nprobe: int = 1) -> str:
+    """DuckDB twin of q_ann_ivf_topk at ANY config."""
+    return f"""
+WITH {_asg_ctes(k)},
 q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 5),
 probe AS (
-  SELECT qid, qv, cell FROM (
-    SELECT q.qid, q.qv, c.cent_id AS cell,
+  SELECT qid, qv, cluster FROM (
+    SELECT q.qid, q.qv, c.cent_id AS cluster,
            row_number() OVER (
              PARTITION BY q.qid
              ORDER BY list_dot_product(q.qv, c.cv)
                       / (sqrt(list_dot_product(q.qv, q.qv))
                          * sqrt(list_dot_product(c.cv, c.cv))) DESC,
                       c.cent_id ASC) AS pr
-    FROM q CROSS JOIN cent c) WHERE pr <= {_IVF_NPROBE}),
+    FROM q CROSS JOIN cent c) WHERE pr <= {nprobe}),
 cand AS (
-  SELECT p.qid, a.vec_id AS cid,
+  SELECT p.qid, p.cluster, a.vec_id AS cid,
          round(list_dot_product(p.qv, a.v)
                / (sqrt(list_dot_product(p.qv, p.qv))
                   * sqrt(list_dot_product(a.v, a.v))), 3) AS cos
-  FROM probe p JOIN asg a ON a.cell = p.cell AND a.vec_id <> p.qid)
-SELECT qid, cid, cos, rn FROM (
-  SELECT qid, cid, cos,
+  FROM probe p JOIN asg a ON a.cluster = p.cluster AND a.vec_id <> p.qid)
+SELECT qid, cluster, cid, cos, rn FROM (
+  SELECT qid, cluster, cid, cos,
          row_number() OVER (PARTITION BY qid
                             ORDER BY cos DESC, cid ASC)::BIGINT AS rn
   FROM cand) WHERE rn <= 3
 """
 
-ORACLE["dedup_semantic"] = f"""
-WITH {_IVF_ASG_CTES},
-dup AS (
-  SELECT b.vec_id, max(round(list_dot_product(a.v, b.v)
-               / (sqrt(list_dot_product(a.v, a.v))
-                  * sqrt(list_dot_product(b.v, b.v))), 3))
-           AS max_cos_to_lower
-  FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-  WHERE round(list_dot_product(a.v, b.v)
-              / (sqrt(list_dot_product(a.v, a.v))
-                 * sqrt(list_dot_product(b.v, b.v))), 3) >= {_SEMDEDUP_TAU}
-  GROUP BY b.vec_id)
-SELECT asg.vec_id, asg.cluster::BIGINT AS cluster,
-       dup.max_cos_to_lower,
-       dup.max_cos_to_lower IS NOT NULL AS is_semdup
-FROM asg LEFT JOIN dup USING (vec_id)
-"""
 
-ORACLE["ann_ivf_topk"] = f"""
-WITH {_IVF_ASG_CTES},
-p AS (
-  SELECT q.vec_id AS qid, q.cluster, c.vec_id AS cid,
-         round(list_dot_product(q.v, c.v)
-               / (sqrt(list_dot_product(q.v, q.v))
-                  * sqrt(list_dot_product(c.v, c.v))), 3) AS cos
-  FROM asg q JOIN asg c ON q.cluster = c.cluster AND q.vec_id <> c.vec_id
-  WHERE q.vec_id < 5)
-SELECT * FROM (
-  SELECT qid, cluster, cid, cos,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos DESC, cid ASC)::BIGINT AS rn
-  FROM p) WHERE rn <= 3
-"""
+ORACLE["dedup_semantic"] = _semdedup_sql()
+ORACLE["dedup_semantic_prod"] = _semdedup_sql(**SEMDEDUP_PROD)
+ORACLE["ann_ivf_topk"] = _ivf_sql()
+ORACLE["ann_ivf_topk_prod"] = _ivf_sql(**IVF_PROD)
 
 ORACLE["dedup_embedding_cosine"] = """
 WITH e AS (
@@ -4877,9 +4750,11 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """EXACTLY 50 entries — the driver's correctness harness checks the
     first 50, so the registry is capped at 50 so that NO registered
     query is silently unchecked (VERDICT r02 #2; pinned by
-    tests/test_registry.py).  Redundant twins of window rows live in
-    registry_extra(): still oracle-gated, but
-    locally (pytest + tools/check_oracle.py) instead of by the driver."""
+    tests/test_registry.py).  The rest live in registry_extra(): still
+    oracle-gated, but locally (pytest + tools/check_oracle.py) instead
+    of by the driver.  A name ending in _prod is the production config
+    of its operator's one function (LSH_PROD, SIMHASH_PROD,
+    SEMDEDUP_PROD, IVF_PROD); the bare name is its default config."""
     return {
         "kg_pipeline": kg_pipeline_query,
         "kg_triples_lift": q_kg_triples_lift,
@@ -4890,8 +4765,9 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "news_feeds_topn": q_news_feeds_topn,
         "status_report": q_status_report,
         "dedup_exact": q_dedup_exact,
-        "dedup_lsh_pairs_prod": q_dedup_lsh_pairs_prod,
-        "dedup_simhash_band_pairs_prod": q_dedup_simhash_band_pairs_prod,
+        "dedup_lsh_pairs_prod": partial(q_dedup_lsh_pairs, **LSH_PROD),
+        "dedup_simhash_band_pairs_prod": partial(q_dedup_simhash_band_pairs,
+                                                 **SIMHASH_PROD),
         "ann_cosine_topk": q_ann_cosine_topk,
         # round-5 rotation (3rd cycle, ADVICE r02 protocol): the new
         # r5 operators (pdf_metrics, keyword_hub, the collated
@@ -4951,13 +4827,13 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def registry_extra() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Oracle-gated queries OUTSIDE the driver's 50-entry window —
-    redundant twins of window rows.  tests/test_registry.py runs
-    each against its DuckDB oracle at sf0.001 so they stay verified:
+    """Oracle-gated queries OUTSIDE the driver's 50-entry window.
+    tests/test_registry.py runs each against its DuckDB oracle at
+    sf0.001 so they stay verified:
 
-    - dedup_clusters: near-dup connected components over the
-      driver-checked dedup_lsh_pairs edge set (iterative; its oracle is
-      a recursive CTE)
+    - dedup_clusters: near-dup connected components over the default
+      dedup_lsh_pairs edge set (iterative; its oracle is a recursive
+      CTE)
     - site_toc_pages / site_feed_pages: S12 static-site TOC html +
       Atom feed pages (operators/render.py), group-concat oracles
     - facet_year_selector: A3 twin (facet_toc_pagesets is the
@@ -4980,7 +4856,7 @@ def registry_extra() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "composite_first_success": q_composite_first_success,
         "header_kv_parse": q_header_kv_parse,
         # round-3 rotation (ADVICE r02): the production configs and the
-        # shards chain moved INTO the driver window; their demo twins
+        # shards chain moved INTO the driver window; the default configs
         # keep local verification here
         "dedup_lsh_pairs": q_dedup_lsh_pairs,
         "dedup_simhash_band_pairs": q_dedup_simhash_band_pairs,
@@ -5014,8 +4890,8 @@ def registry_extra() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # BPE tokenizer training + inference (rows-only; parity-gated)
         "bpe_merges": q_bpe_merges,
         "bpe_encode": q_bpe_encode,
-        "dedup_semantic_prod": q_dedup_semantic_prod,
-        "ann_ivf_topk_prod": q_ann_ivf_topk_prod,
+        "dedup_semantic_prod": partial(q_dedup_semantic, **SEMDEDUP_PROD),
+        "ann_ivf_topk_prod": partial(q_ann_ivf_topk, **IVF_PROD),
         "multimodal_features": q_multimodal_features,
         "multimodal_frame_sample": q_multimodal_frame_sample,
         "multimodal_resize": q_multimodal_resize,

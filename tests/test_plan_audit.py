@@ -280,13 +280,18 @@ def test_scrub_chain_plan_shape(spark):
     assert plans.shuffle_exchange_count(df) <= 5
 
 
-def test_semantic_dedup_broadcasts_cluster_mates(spark):
-    """The within-cluster pairwise join must broadcast the mate side:
-    a shuffle join on the K-valued cluster key collapses parallelism
-    to K tasks (measured 10s -> 1.4s at sf0.1)."""
+def test_semantic_dedup_is_one_per_cell_group(spark):
+    """The within-cell pairwise runs as one grouped kernel per cell:
+    the plan's only shuffle feeds the groupBy(cluster), and no pair
+    enumeration happens as a join (a nested-loop or cartesian join
+    would enumerate every pair in the JVM)."""
     df = Q.q_dedup_semantic(spark, SF)
-    assert plans.has_broadcast_hash_join(df)
-    assert "hashpartitioning(cluster" not in plans.explain_str(df)
+    plan = plans.explain_str(df, mode="simple")
+    assert plans.shuffle_exchange_count(df) == 1
+    assert "hashpartitioning(cluster" in plan
+    assert "FlatMapGroupsInPandas [cluster" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_domain_cap_pushes_window_group_limit(spark):
@@ -349,7 +354,7 @@ def test_lsh_prod_caps_hot_buckets(spark):
     semi-join the shingle table down to candidate docs before the
     verification join, so the verify shuffle is collision-set-sized,
     not corpus-sized."""
-    df = Q.q_dedup_lsh_pairs_prod(spark, SF)
+    df = Q.q_dedup_lsh_pairs(spark, SF, **Q.LSH_PROD)
     plan = plans.explain_str(df, mode="simple")
     assert plan.count("LeftSemi") >= 2
 
@@ -383,7 +388,7 @@ def test_simhash_prod_caps_hot_buckets(spark):
     fixtures corpus the uncapped join emits 51M candidate pairs, 42M of
     them from the 135 buckets larger than the cap), and the hamming
     radius must be applied as a plan filter, not client-side."""
-    df = Q.q_dedup_simhash_band_pairs_prod(spark, SF)
+    df = Q.q_dedup_simhash_band_pairs(spark, SF, **Q.SIMHASH_PROD)
     plan = plans.explain_str(df, mode="simple")
     assert plan.count("LeftSemi") >= 1
     assert "hamming" in plan and "<= 3" in plan.replace("(", " (")

@@ -60,16 +60,12 @@ def _value_hash(pdf) -> str:
     return hashlib.md5("\n".join(rows).encode()).hexdigest()
 
 
-@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="no testdata")
-@pytest.mark.parametrize("name", sorted(set(Q.registry_extra())
-                                        - NO_ORACLE_EXTRA))
-def test_extra_query_matches_oracle(spark, name):
-    """The sacrificed-from-the-driver-window queries keep an external
-    check: Spark result == DuckDB oracle at sf0.001 (row count, column
-    set, order-insensitive value hash — the driver's own comparison)."""
+def _assert_matches_oracle(spark, fn, name):
+    """Spark result == DuckDB oracle at sf0.001: row count, column set
+    and order-insensitive value hash (the driver's own comparison)."""
     import duckdb
 
-    spdf = Q.registry_extra()[name](spark, SF_DIR).toPandas()
+    spdf = fn(spark, SF_DIR).toPandas()
     con = duckdb.connect()
     for t in ("events", "documents", "embeddings"):
         con.execute(
@@ -78,6 +74,23 @@ def test_extra_query_matches_oracle(spark, name):
     assert len(spdf) == len(opdf)
     assert sorted(spdf.columns) == sorted(opdf.columns)
     assert _value_hash(spdf) == _value_hash(opdf)
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="no testdata")
+@pytest.mark.parametrize("name", sorted(set(Q.registry()) - NO_ORACLE))
+def test_driver_query_matches_oracle(spark, name):
+    """The driver window's rows, checked here too, so a change to one
+    fails tier-1 before it reaches the driver."""
+    _assert_matches_oracle(spark, Q.registry()[name], name)
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="no testdata")
+@pytest.mark.parametrize("name", sorted(set(Q.registry_extra())
+                                        - NO_ORACLE_EXTRA))
+def test_extra_query_matches_oracle(spark, name):
+    """The sacrificed-from-the-driver-window queries keep an external
+    check here."""
+    _assert_matches_oracle(spark, Q.registry_extra()[name], name)
 
 
 def test_shards_chain_is_nondegenerate_at_driver_scale(spark):
@@ -96,7 +109,7 @@ def test_leakage_safe_split_never_straddles_clusters(spark):
     cluster id directly."""
     splits = {r.doc_id: r.split
               for r in Q.q_split_leakage_safe(spark, SF_DIR).collect()}
-    pairs = Q.q_dedup_lsh_pairs_prod(spark, SF_DIR).collect()
+    pairs = Q.q_dedup_lsh_pairs(spark, SF_DIR, **Q.LSH_PROD).collect()
     assert pairs, "fixture corpus must contain near-dup pairs"
     for p in pairs:
         assert splits[p.doc_a] == splits[p.doc_b], (p.doc_a, p.doc_b)
@@ -188,9 +201,7 @@ def test_incremental_cluster_update_equals_full(spark):
     inc = {(r.doc_id, r.cluster_id) for r in
            Q.q_dedup_clusters_incremental(spark, SF_DIR).collect()}
     full = {(r.doc_id, r.cluster_id) for r in
-            Q.q_dedup_clusters(
-                spark, SF_DIR,
-                pairs_fn=Q.q_dedup_lsh_pairs_prod).collect()}
+            Q.q_dedup_clusters(spark, SF_DIR, **Q.LSH_PROD).collect()}
     assert inc == full
     # unit: an untouched far component survives, a bridged pair merges
     labels = spark.createDataFrame(

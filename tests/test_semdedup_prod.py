@@ -1,6 +1,6 @@
-"""Production SemDeDup (q_dedup_semantic_prod) against the synthetic
-embeddings fixture: the fixture plants near-duplicates (same base
-vector + sigma 0.01 noise, cosine ~0.9999) inside a 256-centroid
+"""Production SemDeDup (q_dedup_semantic at SEMDEDUP_PROD) against the
+synthetic embeddings fixture: the fixture plants near-duplicates (same
+base vector + sigma 0.01 noise, cosine ~0.9999) inside a 256-centroid
 cluster structure whose ordinary cluster-mates sit far below the 0.97
 threshold — the op must recover (nearly) every planted pair and
 nothing else."""
@@ -35,7 +35,8 @@ def _planted(n):
 
 def test_recovers_planted_near_dups(spark, emb_dir):
     got = {(r.vec_a, r.vec_b)
-           for r in Q.q_dedup_semantic_prod(spark, emb_dir).collect()}
+           for r in Q.q_dedup_semantic(spark, emb_dir,
+                                       **Q.SEMDEDUP_PROD).collect()}
     planted = _planted(6000)
     assert planted, "fixture must plant pairs at this scale"
     recall = len(got & planted) / len(planted)
@@ -51,7 +52,8 @@ def test_ivf_prod_recall_vs_brute_force(spark, emb_dir):
     brute-force top-3 on the clustered fixture — multi-cell probing is
     what buys back boundary losses."""
     ivf = {(r.qid, r.cid)
-           for r in Q.q_ann_ivf_topk_prod(spark, emb_dir).collect()}
+           for r in Q.q_ann_ivf_topk(spark, emb_dir,
+                                     **Q.IVF_PROD).collect()}
     brute = {(r.qid, r.cid)
              for r in Q.q_ann_cosine_topk(spark, emb_dir).collect()}
     assert brute, "brute-force baseline must produce rows"

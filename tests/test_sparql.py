@@ -816,6 +816,25 @@ def test_subquery_var_keeps_its_uri_flag(spark):
     assert [tuple(r) for r in df.collect()] == [("http://e/a", "http://e/v")]
 
 
+def test_aggregate_subquery_group_var_keeps_its_uri_flag(spark):
+    # ?v is a GROUP BY variable of an aggregated subquery: it groups
+    # with its obj_is_uri flag, so the outer isURI can read it, and a
+    # URI and a literal with the same string are two groups
+    g = _graph4(spark, [
+        ("http://e/a", "http://e/r", "z", False),
+        ("http://e/a", "http://e/p", "http://e/v", True),
+        ("http://e/b", "http://e/p", "http://e/v", True),
+        ("http://e/c", "http://e/p", "http://e/v", False),
+        ("http://e/c", "http://e/p", "w", False),
+    ])
+    df = sparql_query(g, """PREFIX e: <http://e/>
+        SELECT ?v ?n WHERE { ?x e:r ?z
+          { SELECT ?v (COUNT(*) AS ?n) WHERE { ?y e:p ?v } GROUP BY ?v }
+          FILTER(isURI(?v)) }""")
+    assert df.columns == ["v", "n"]
+    assert [tuple(r) for r in df.collect()] == [("http://e/v", 2)]
+
+
 def test_subquery_only_group(graph):
     row, = sparql_query(graph, """PREFIX dct: <http://purl.org/dc/terms/>
         SELECT ?n WHERE {

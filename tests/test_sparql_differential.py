@@ -235,13 +235,23 @@ def _eval_group(triples, g):
 
 
 def _eval_select(triples, ast):
-    """A SELECT's solutions projected to its variables (no aggregates
-    in the pool)."""
-    rows = [tuple(b.get(v) for v in ast.select_vars)
-            for b in _eval_group(triples, ast.where)]
+    """A SELECT's solutions projected to its variables; the pool's one
+    aggregate is COUNT(*) per GROUP BY key."""
+    sols = _eval_group(triples, ast.where)
+    if ast.aggs:
+        assert all(a.func == "count" and a.var is None for a in ast.aggs)
+        counts = {}
+        for b in sols:
+            key = tuple(b.get(v) for v in ast.group_by)
+            counts[key] = counts.get(key, 0) + 1
+        sols = [{**dict(zip(ast.group_by, key)),
+                 **{a.alias: n for a in ast.aggs}}
+                for key, n in counts.items()]
+    names = ast.select_vars + [a.alias for a in ast.aggs]
+    rows = [tuple(b.get(v) for v in names) for b in sols]
     if ast.distinct:
         rows = list(set(rows))
-    return [dict(zip(ast.select_vars, r)) for r in rows]
+    return [dict(zip(names, r)) for r in rows]
 
 
 def naive_select(triples, query):
@@ -319,6 +329,10 @@ QUERY_POOL = [
     # isURI over a variable that only a subquery binds
     """SELECT ?x ?v WHERE { ?x <%(p2)s> ?z
        { SELECT ?x ?v WHERE { ?x <%(p0)s> ?v } } FILTER(isURI(?v)) }""",
+    # isURI over the GROUP BY variable of an aggregated subquery
+    """SELECT ?x ?v ?n WHERE { ?x <%(p2)s> ?z
+       { SELECT ?v (COUNT(*) AS ?n) WHERE { ?y <%(p0)s> ?v } GROUP BY ?v }
+       FILTER(isURI(?v)) }""",
 ]
 
 
