@@ -62,7 +62,8 @@ def _value_hash(pdf) -> str:
 
 def _assert_matches_oracle(spark, fn, name):
     """Spark result == DuckDB oracle at sf0.001: row count, column set
-    and order-insensitive value hash (the driver's own comparison)."""
+    and order-insensitive value hash (tools/check_oracle.py's
+    comparison)."""
     import duckdb
 
     spdf = fn(spark, SF_DIR).toPandas()
@@ -78,9 +79,9 @@ def _assert_matches_oracle(spark, fn, name):
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="no testdata")
 @pytest.mark.parametrize("name", sorted(set(Q.registry()) - NO_ORACLE))
-def test_driver_query_matches_oracle(spark, name):
-    """The driver window's rows, checked here too, so a change to one
-    fails tier-1 before it reaches the driver."""
+def test_registry_query_matches_oracle(spark, name):
+    """Every registry() row that has an oracle, checked in the test
+    suite as well as by tools/check_oracle.py."""
     _assert_matches_oracle(spark, Q.registry()[name], name)
 
 
